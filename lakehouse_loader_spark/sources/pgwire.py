@@ -19,10 +19,11 @@ Everything here derives from the public PostgreSQL documentation:
 Scale design: the driver connects ONCE to discover the result schema
 (Parse/Describe — zero data rows); data flows on EXECUTORS, each
 partition opening its own connection and streaming
-``COPY (…) TO STDOUT (FORMAT binary)`` in bounded-size pandas batches
-through mapInPandas — the same partition-predicate shape as Spark's JDBC
-source, so a 1000-executor cluster fans N server cursors out in
-parallel and no row ever transits the driver.
+``COPY (…) TO STDOUT (FORMAT binary)`` in bounded-size Arrow record
+batches through mapInArrow — the same partition-predicate shape as Spark's
+JDBC source, so a 1000-executor cluster fans N server cursors out in
+parallel and no row ever transits the driver.  Rows decode column-wise
+(numpy gathers over each batch's raw bytes), never field by field.
 """
 
 from __future__ import annotations
@@ -50,9 +51,6 @@ class ConnParams:
     password: str | None
     database: str
     sslmode: str = "prefer"
-
-    def as_tuple(self):
-        return (self.host, self.port, self.user, self.password, self.database)
 
 
 def parse_libpq_url(
@@ -190,7 +188,9 @@ def _maybe_tls(sock: socket.socket, params: ConnParams) -> socket.socket:
 def connect(params: ConnParams, timeout: float = 30.0) -> socket.socket:
     """Open + authenticate a session (trust, cleartext, md5, or
     SCRAM-SHA-256; TLS per sslmode), then drain parameter status through
-    ReadyForQuery."""
+    ReadyForQuery.  ``timeout`` bounds connect and auth only: the returned
+    socket blocks without one, since a pushed-down sort or aggregate may
+    take longer than that to send its first row."""
     sock = socket.create_connection((params.host, params.port), timeout=timeout)
     sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
     sock = _maybe_tls(sock, params)
@@ -232,6 +232,7 @@ def connect(params: ConnParams, timeout: float = 30.0) -> socket.socket:
             else:
                 raise PgError(f"unsupported authentication request {code}")
         elif typ == b"Z":  # ReadyForQuery
+            sock.settimeout(None)
             return sock
         # S (ParameterStatus), K (BackendKeyData), N (Notice) — ignore
 
@@ -278,38 +279,6 @@ def describe_query(params: ConnParams, query: str) -> list[tuple[str, int, int]]
         return fields
     finally:
         sock.close()
-
-
-def copy_binary_chunks(sock: socket.socket, query: str):
-    """Send ``COPY (query) TO STDOUT (FORMAT binary)`` and yield raw
-    CopyData payloads until CopyDone; raises on server error.
-
-    The server sends ONE CopyData message per row, so the message pump
-    reads through a buffered file wrapper — raw ``recv`` per 5-byte
-    header would mean two syscalls per row (measured 2.2s of a 13s
-    400k-row profile before buffering)."""
-    sql = f"COPY ({query}) TO STDOUT (FORMAT binary)"
-    sock.sendall(_msg(b"Q", sql.encode() + b"\x00"))
-    err = None
-    with sock.makefile("rb", buffering=1 << 16) as f:
-        while True:
-            head = f.read(5)
-            if len(head) < 5:
-                raise PgError("server closed connection mid-message")
-            typ = head[:1]
-            (ln,) = struct.unpack(">i", head[1:])
-            payload = f.read(ln - 4)
-            if len(payload) < ln - 4:
-                raise PgError("server closed connection mid-message")
-            if typ == b"d":
-                yield payload
-            elif typ == b"E":
-                err = _error_text(payload)
-            elif typ == b"Z":
-                break
-            # H (CopyOutResponse), c (CopyDone), C (CommandComplete), N
-    if err:
-        raise PgError(err)
 
 
 # -- binary COPY decoding ----------------------------------------------------
@@ -394,13 +363,13 @@ def _array_decoder(elem_oid: int):
 
 
 def _field_decoder(oid: int):
-    """Binary-format decoder for one type OID → python value (pandas-ready)."""
+    """Per-value binary decoder for one type OID → python value: numeric,
+    uuid, jsonb, arrays and the array element types (every other column
+    decodes column-wise in ``_column``)."""
     if oid in _ARRAY_ELEM_OID:
         return _array_decoder(_ARRAY_ELEM_OID[oid])
     if oid == 16:  # bool
         return lambda b: b[0] == 1
-    if oid == 18:  # "char" — signed byte per the reference's mapping
-        return lambda b: b[0] - 256 if b[0] > 127 else b[0]
     if oid == 21:
         return lambda b: struct.unpack(">h", b)[0]
     if oid == 23:
@@ -411,35 +380,15 @@ def _field_decoder(oid: int):
         return lambda b: struct.unpack(">f", b)[0]
     if oid == 701:
         return lambda b: struct.unpack(">d", b)[0]
-    if oid in (1114, 1184):  # timestamp / timestamptz: µs since 2000-01-01
-
-        def ts(b):
-            (us,) = struct.unpack(">q", b)
-            if us in (0x7FFFFFFFFFFFFFFF, -0x8000000000000000):
-                raise PgError("infinity timestamp has no Spark representation")
-            return us + _PG_EPOCH_US  # unix µs; vectorized below
-
-        return ts
-    if oid == 1082:  # date: days since 2000-01-01
-
-        def date(b):
-            (d,) = struct.unpack(">i", b)
-            if d in (0x7FFFFFFF, -0x80000000):
-                raise PgError("infinity date has no Spark representation")
-            return d + _PG_EPOCH_DAYS
-
-        return date
     if oid == 1700:
         return _decode_numeric
-    if oid == 17:  # bytea
-        return bytes
     if oid == 2950:  # uuid → canonical text
         import uuid as _uuid
 
         return lambda b: str(_uuid.UUID(bytes=bytes(b)))
     if oid == 3802:  # jsonb: version byte + utf8
         return lambda b: b[1:].decode()
-    # text, varchar, bpchar, name, json, xml, unknown-as-text
+    # text, varchar (array elements)
     return lambda b: b.decode()
 
 
@@ -486,93 +435,177 @@ def schema_of(fields: list[tuple[str, int, int]]):
     )
 
 
-def _np_fixed(oid: int):
-    """(numpy big-endian dtype string, byte width) for fixed-width OIDs
-    decodable by one vectorized gather; None for var-width types."""
-    return {
-        16: ("u1", 1),
-        18: ("i1", 1),
-        21: (">i2", 2),
-        23: (">i4", 4),
-        20: (">i8", 8),
-        700: (">f4", 4),
-        701: (">f8", 8),
-        1114: (">i8", 8),
-        1184: (">i8", 8),
-        1082: (">i4", 4),
-    }.get(oid)
+def _copy_out_rows(sock: socket.socket, query: str, batch_size: int):
+    """Send ``COPY (query) TO STDOUT (FORMAT binary)`` and yield
+    ``(mem, starts, ends)`` per run of at most ``batch_size`` rows: one
+    bytes block and the payload bounds of its row messages.
+
+    The backend sends exactly one row per CopyData message (protocol docs,
+    "COPY Operations"); the file header rides in front of the first row
+    and the trailer comes last.  So the socket is read in large blocks and
+    this loop records only where each message starts and ends — the field
+    walk happens column-wise in ``_decode_rows``."""
+    sql = f"COPY ({query}) TO STDOUT (FORMAT binary)"
+    sock.sendall(_msg(b"Q", sql.encode() + b"\x00"))
+    head = struct.Struct(">Bi").unpack_from
+    buf = bytearray()
+    pos = 0
+    starts: list[int] = []
+    ends: list[int] = []
+    header = trailer = done = False
+    while not done:
+        chunk = sock.recv(1 << 20)
+        if not chunk:
+            raise PgError("server closed connection mid-message")
+        buf += chunk
+        avail = len(buf)
+        while avail - pos >= 5:
+            typ, ln = head(buf, pos)
+            end = pos + 1 + ln
+            if end > avail:
+                break
+            if typ == 0x64 and ln != 6 and header and not trailer:  # one row
+                starts.append(pos + 5)
+                ends.append(end)
+            elif typ == 0x64:  # header and/or trailer, or a 2-byte row
+                start = pos + 5
+                if trailer:
+                    raise PgError("CopyData after the binary COPY trailer")
+                first = not header
+                if first:
+                    if bytes(buf[start : start + 11]) != b"PGCOPY\n\xff\r\n\x00":
+                        raise PgError("bad binary COPY signature")
+                    (ext,) = struct.unpack_from(">i", buf, start + 15)
+                    start += 19 + ext  # signature, flags, header extension
+                    header = True
+                    if start > end:
+                        raise PgError("truncated binary COPY header")
+                if buf[start:end] == b"\xff\xff":
+                    trailer = True
+                elif start < end or not first:  # skip a header-only message
+                    starts.append(start)
+                    ends.append(end)
+            elif typ == 0x45:  # ErrorResponse
+                raise PgError(_error_text(bytes(buf[pos + 5 : end])))
+            elif typ == 0x5A:  # ReadyForQuery
+                done = True
+                break
+            # H (CopyOutResponse), c (CopyDone), C (CommandComplete), N
+            pos = end
+            if len(starts) >= batch_size:
+                yield bytes(memoryview(buf)[:pos]), starts, ends
+                del buf[:pos]
+                avail -= pos
+                pos, starts, ends = 0, [], []
+    if not trailer:
+        raise PgError("binary COPY stream ended without its trailer")
+    if starts:
+        yield bytes(memoryview(buf)[:pos]), starts, ends
 
 
-def _assemble_batch(mem: bytes, fields, offs, lens):
-    """One parsed batch → pandas DataFrame, decoding COLUMN-WISE: every
-    fixed-width column (ints, floats, bool, "char", timestamps, dates) is
-    one numpy fancy-gather + dtype view over the raw buffer; only
-    var-width types (numeric, text, bytea, uuid, jsonb) decode per value.
-    Nullable columns land in pandas masked extension arrays so NULL never
-    conflates with NaN and int64 precision survives (a float64 round-trip
-    would corrupt bigints above 2**53)."""
-    import pandas as pd
+# fixed-width OIDs → numpy big-endian dtype, decoded by one gather each
+_FIXED_DTYPE = {
+    16: "u1", 18: "i1", 21: ">i2", 23: ">i4", 20: ">i8", 700: ">f4",
+    701: ">f8", 1114: ">i8", 1184: ">i8", 1082: ">i4",
+}
+# var-width OIDs decoded per value (plus the array OIDs); every other
+# OID is text-like (or bytea) and decodes as one offsets + data gather
+_PER_VALUE_OIDS = {1700, 2950, 3802, *_ARRAY_ELEM_OID}
+
+
+def _gather(b: np.ndarray, pos: np.ndarray, dtype: str) -> np.ndarray:
+    """The ``dtype`` value at each byte position of ``b``, native order."""
+    dt = np.dtype(dtype)
+    raw = np.empty((len(pos), dt.itemsize), np.uint8)
+    for k in range(dt.itemsize):  # byte-at-a-time beats one 2-D index
+        raw[:, k] = b[pos + k]
+    return raw.view(dt).ravel().astype(dt.newbyteorder("="))
+
+
+def _column(b: np.ndarray, mem: bytes, oid: int, typ, off: np.ndarray, ln: np.ndarray):
+    """One column of a batch → Arrow array, from its field offsets and
+    lengths (-1 = NULL)."""
+    import pyarrow as pa
+
+    n = len(off)
+    valid = ln >= 0
+    mask = None if valid.all() else ~valid
+    if oid in _FIXED_DTYPE:
+        dtype = _FIXED_DTYPE[oid]
+        if (ln[valid] != np.dtype(dtype).itemsize).any():
+            raise PgError(f"type {oid} field of the wrong width")
+        vals = np.zeros(n, np.dtype(dtype).newbyteorder("="))
+        vals[valid] = _gather(b, off[valid], dtype)
+        if oid in (1114, 1184, 1082):
+            lim = np.iinfo(vals.dtype)
+            kind, epoch = ("date", _PG_EPOCH_DAYS) if oid == 1082 else ("timestamp", _PG_EPOCH_US)
+            if np.isin(vals, (lim.min, lim.max)).any():
+                raise PgError(f"infinity {kind} has no Spark representation")
+            if (vals > lim.max - epoch).any():  # the shift to unix epoch would wrap
+                raise PgError(f"{kind} out of range")
+            vals += epoch
+        elif oid == 16:
+            vals = vals == 1
+        return pa.array(vals, type=typ, mask=mask)
+    if oid in _PER_VALUE_OIDS:
+        dec = _field_decoder(oid)
+        out = [None] * n
+        offs, lens = off.tolist(), ln.tolist()
+        try:
+            for j in np.flatnonzero(valid).tolist():
+                out[j] = dec(mem[offs[j] : offs[j] + lens[j]])
+        except (UnicodeDecodeError, struct.error) as exc:
+            raise PgError(f"malformed type {oid} field: {exc}") from exc
+        return pa.array(out, type=typ)
+    lens = np.where(valid, ln, 0)
+    bounds = np.zeros(n + 1, np.int64)
+    np.cumsum(lens, out=bounds[1:])
+    if bounds[-1] > np.iinfo(np.int32).max:
+        raise PgError("var-width column over 2 GiB in one batch; lower batch_size")
+    data = b[np.repeat(off - bounds[:-1], lens) + np.arange(bounds[-1])]
+    validity = None if mask is None else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    arr = pa.Array.from_buffers(
+        typ, n, [validity, pa.py_buffer(bounds.astype(np.int32)), pa.py_buffer(data)],
+        null_count=int(n - valid.sum()),
+    )
+    try:
+        arr.validate(full=True)  # full UTF-8 check for string columns
+    except pa.ArrowInvalid as exc:
+        raise PgError(f"malformed type {oid} field: {exc}") from exc
+    return arr
+
+
+def _decode_rows(mem: bytes, starts: list, ends: list, fields, schema):
+    """Row messages → one RecordBatch, walking fields COLUMN-wise: since
+    every message is one row, field ``i`` of all rows is located by one
+    vectorized step over the row cursors.  Each row must carry exactly
+    ``len(fields)`` fields and end exactly at its message end."""
+    import pyarrow as pa
 
     b = np.frombuffer(mem, dtype=np.uint8)
-    data = {}
-    for (name, oid, _tm), off_l, len_l in zip(fields, offs, lens):
-        o = np.asarray(off_l, dtype=np.int64)
-        ln = np.asarray(len_l, dtype=np.int64)
-        valid = ln >= 0
-        n = len(o)
-        all_valid = bool(valid.all())
-        fixed = _np_fixed(oid)
-        if fixed is not None:
-            dt, w = fixed
-            raw = b[o[valid][:, None] + np.arange(w)]
-            vals = np.frombuffer(raw.tobytes(), dtype=dt)
-            if oid in (1114, 1184):
-                if np.isin(vals, (0x7FFFFFFFFFFFFFFF, -0x8000000000000000)).any():
-                    raise PgError("infinity timestamp has no Spark representation")
-                full = np.zeros(n, dtype=np.int64)
-                full[valid] = vals + _PG_EPOCH_US
-                ia = pd.arrays.IntegerArray(full, ~valid)
-                ts = pd.to_datetime(ia, unit="us", utc=(oid == 1184))
-                data[name] = ts
-            elif oid == 1082:
-                if np.isin(vals, (0x7FFFFFFF, -0x80000000)).any():
-                    raise PgError("infinity date has no Spark representation")
-                full = np.zeros(n, dtype=np.int64)
-                full[valid] = vals.astype(np.int64) + _PG_EPOCH_DAYS
-                data[name] = pd.to_datetime(
-                    pd.arrays.IntegerArray(full, ~valid), unit="D"
-                ).date
-            elif oid == 16:
-                full = np.zeros(n, dtype=bool)
-                full[valid] = vals == 1
-                data[name] = (
-                    full if all_valid else pd.arrays.BooleanArray(full, ~valid)
-                )
-            elif oid in (18, 21, 23, 20):
-                native = vals.astype(vals.dtype.newbyteorder("="))
-                if all_valid:
-                    data[name] = native
-                else:
-                    full = np.zeros(n, dtype=native.dtype)
-                    full[valid] = native
-                    data[name] = pd.arrays.IntegerArray(full, ~valid)
-            else:  # 700 / 701
-                native = vals.astype(vals.dtype.newbyteorder("="))
-                if all_valid:
-                    data[name] = native
-                else:
-                    full = np.zeros(n, dtype=native.dtype)
-                    full[valid] = native
-                    data[name] = pd.arrays.FloatingArray(full, ~valid)
-        else:
-            dec = _field_decoder(oid)
-            col = np.empty(n, dtype=object)
-            for j in np.flatnonzero(valid):
-                jj = int(j)
-                col[jj] = dec(mem[o[jj] : o[jj] + ln[jj]])
-            data[name] = col
-    names = [f[0] for f in fields]
-    return pd.DataFrame(data, columns=names)
+    p = np.array(starts, dtype=np.int64)
+    end = np.array(ends, dtype=np.int64)
+    if (end - p < 2).any():
+        raise PgError("COPY message shorter than a row header")
+    nf = _gather(b, p, ">i2")
+    if (nf != len(fields)).any():
+        got = int(nf[nf != len(fields)][0])
+        raise PgError(f"COPY row has {got} fields, expected {len(fields)}")
+    p += 2
+    cols = []
+    for (_name, oid, _tm), typ in zip(fields, schema.types):
+        if (p + 4 > end).any():
+            raise PgError("COPY message ends inside a row")
+        ln = _gather(b, p, ">i4").astype(np.int64)
+        p += 4
+        nxt = p + np.maximum(ln, 0)
+        if (ln < -1).any() or (nxt > end).any():
+            raise PgError("COPY message ends inside a row")
+        cols.append(_column(b, mem, oid, typ, p, ln))
+        p = nxt
+    if (p != end).any():
+        raise PgError("COPY message holds more than one row")
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 def iter_copy_batches(
@@ -581,83 +614,46 @@ def iter_copy_batches(
     fields: list[tuple[str, int, int]],
     batch_size: int,
 ):
-    """Stream ``query`` via binary COPY, yielding pandas DataFrames of at
-    most ``batch_size`` rows — the executor-side row pump.  Memory is
-    bounded by one batch regardless of result size.
+    """Stream ``query`` via binary COPY, yielding ``pyarrow.RecordBatch``es
+    of at most ``batch_size`` rows — the executor-side row pump.  Memory is
+    bounded by one batch regardless of result size.  Column types are
+    ``to_arrow_type(schema_of(fields))``, so batches feed mapInArrow as-is.
 
-    The parse loop only records per-column (offset, length) pairs; all
-    value decoding happens batch-wise in ``_assemble_batch`` (vectorized
-    numpy gathers for fixed-width types).  Measured 1.5x single-stream
-    over the original per-row struct decode, 86k rows/s on a 5-column
-    mixed table; remaining cost is the offsets walk plus per-value
-    var-width decode (numeric/text) — see PERF_NOTES r8."""
-    ncols = len(fields)
+    Decoding is column-wise with no per-row Python past message framing:
+    fixed-width and text-like columns are numpy gathers, only numeric,
+    uuid, jsonb and arrays decode per value (PERF_NOTES: "column-wise
+    binary COPY decode into Arrow")."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    schema = pa.schema(list(to_arrow_type(schema_of(fields))))
     sock = connect(params)
     try:
-        buf = bytearray()
-        started = False
-        pos = 0
-        offs: list[list[int]] = [[] for _ in range(ncols)]
-        lens: list[list[int]] = [[] for _ in range(ncols)]
-        n_rows = 0
-
-        def flush():
-            nonlocal buf, pos, offs, lens, n_rows
-            out = _assemble_batch(bytes(buf[:pos]), fields, offs, lens)
-            del buf[:pos]
-            pos = 0
-            offs = [[] for _ in range(ncols)]
-            lens = [[] for _ in range(ncols)]
-            n_rows = 0
-            return out
-
-        unpack_i32 = struct.Struct(">i").unpack_from
-        done = False
-        chunks = copy_binary_chunks(sock, query)
-        while not done:
-            try:
-                buf += next(chunks)
-            except StopIteration:
-                done = True
-            if not started and len(buf) >= 19:
-                if bytes(buf[:11]) != b"PGCOPY\n\xff\r\n\x00":
-                    raise PgError("bad binary COPY signature")
-                pos = 19  # signature + flags + header-extension length
-                started = True
-            while started:
-                if len(buf) - pos < 2:
-                    break
-                nf = (buf[pos] << 8) | buf[pos + 1]
-                if nf == 0xFFFF:  # trailer (-1)
-                    pos += 2
-                    break
-                p = pos + 2
-                ok = True
-                row: list[tuple[int, int]] = []
-                for _ in range(nf):
-                    if len(buf) < p + 4:
-                        ok = False
-                        break
-                    (ln,) = unpack_i32(buf, p)
-                    p += 4
-                    row.append((p, ln))
-                    if ln > 0:
-                        p += ln
-                if not ok or len(buf) < p:
-                    break  # incomplete row — wait for more chunks
-                if nf != ncols:
-                    raise PgError(f"COPY row has {nf} fields, expected {ncols}")
-                for i, (o, ln) in enumerate(row):
-                    offs[i].append(o)
-                    lens[i].append(ln)
-                pos = p
-                n_rows += 1
-                if n_rows >= batch_size:
-                    yield flush()
-        if n_rows:
-            yield flush()
+        for mem, starts, ends in _copy_out_rows(sock, query, batch_size):
+            yield _decode_rows(mem, starts, ends, fields, schema)
     finally:
         sock.close()
+
+
+def query_row(params: ConnParams, sql: str, fields) -> dict | None:
+    """First row of ``sql`` as {column: python value}, None when empty —
+    for one-row metadata probes (counts, bounds, ledger checks)."""
+    for batch in iter_copy_batches(params, sql, fields, 1):
+        return batch.to_pylist()[0]
+    return None
+
+
+def _txn_published(params: ConnParams, app_id: str, version: int, table: str) -> bool:
+    """Whether the exactly-once ledger already holds (app_id, version)."""
+    row = query_row(
+        params,
+        f"SELECT count(*)::int8 AS n FROM __lhl_txn WHERE app_id = '{app_id}' "
+        f"AND version = {version} AND tbl = '{table}'",
+        [("n", 20, -1)],
+    )
+    return row["n"] > 0
+
+
 # -- the Spark reader --------------------------------------------------------
 
 
@@ -677,15 +673,14 @@ def partition_predicates(
     if lower_bound is not None and upper_bound is not None:
         lo, hi = int(lower_bound), int(upper_bound)
     else:
-        fields = [("lo", 20, -1), ("hi", 20, -1)]
         agg = (
             f"SELECT min({partition_column})::int8, max({partition_column})::int8 "
             f"FROM ({query}) __lhl_b"
         )
-        batch = next(iter_copy_batches(params, agg, fields, 2), None)
-        if batch is None or batch["lo"].isna().all():
+        row = query_row(params, agg, [("lo", 20, -1), ("hi", 20, -1)])
+        if row is None or row["lo"] is None:
             return ["TRUE"]  # empty result — one partition scans nothing
-        lo, hi = int(batch["lo"][0]), int(batch["hi"][0])
+        lo, hi = row["lo"], row["hi"]
     n = max(1, min(num_partitions, hi - lo + 1))
     stride = (hi - lo + 1 + n - 1) // n
     preds = []
@@ -723,8 +718,9 @@ def read_postgres_wire(
 
     Driver work is metadata-only (Parse/Describe for the schema, plus one
     min/max round-trip when partitioned); every data row is fetched
-    executor-side through mapInPandas in ``batch_size``-bounded pandas
-    batches.  With ``partition_column``/``num_partitions`` the read fans
+    executor-side through mapInArrow in ``batch_size``-bounded Arrow
+    record batches (``iter_copy_batches``), with the session's full
+    ``ConnParams`` — sslmode included — on every executor connection.  With ``partition_column``/``num_partitions`` the read fans
     out as N concurrent server cursors with range predicates — the same
     contract as Spark's JDBC partitioning options."""
     params = parse_libpq_url(conn_url, user=user, password=password)
@@ -743,19 +739,17 @@ def read_postgres_wire(
         )
     else:
         preds = ["TRUE"]
-    host, port, u, pw, db = params.as_tuple()
     seed = spark.createDataFrame([(p,) for p in preds], "pred string").repartition(
         len(preds)
     )
 
     def fetch(batches):
-        cp = ConnParams(host, port, u, pw, db)
-        for pdf in batches:
-            for pred in pdf["pred"]:
+        for batch in batches:
+            for pred in batch.column("pred").to_pylist():
                 sub = f"SELECT * FROM ({query}) __lhl_q WHERE {pred}"
-                yield from iter_copy_batches(cp, sub, fields, batch_size)
+                yield from iter_copy_batches(params, sub, fields, batch_size)
 
-    return seed.mapInPandas(fetch, schema)
+    return seed.mapInArrow(fetch, schema)
 
 
 # -- the Postgres SINK (COPY FROM STDIN, binary) -----------------------------
@@ -1024,21 +1018,8 @@ def write_postgres_wire(
             "(app_id text, version bigint, tbl text, committed_at timestamptz "
             "DEFAULT now(), PRIMARY KEY (app_id, version, tbl))",
         )
-        try:
-            batch = next(
-                iter_copy_batches(
-                    params,
-                    f"SELECT count(*)::int8 AS n FROM __lhl_txn WHERE "
-                    f"app_id = '{app_id}' AND version = {txn_version} "
-                    f"AND tbl = '{table}'",
-                    [("n", 20, -1)],
-                    2,
-                )
-            )
-            if int(batch["n"][0]) > 0:
-                return 0  # this (app_id, version) already published
-        except PgError:
-            raise
+        if _txn_published(params, app_id, txn_version, table):
+            return 0  # this (app_id, version) already published
     # stage INSIDE the target's schema: ALTER TABLE .. RENAME keeps a table
     # in its own schema, so an unqualified staging table would publish
     # 'analytics.foo' into public — and the error-mode rename collision
@@ -1049,13 +1030,11 @@ def write_postgres_wire(
         f"__lhl_stage_{os.urandom(4).hex()}"
     )
     simple_command(params, f"CREATE TABLE {staging} ({col_ddl})")
-    host, port, u, pw, db = params.as_tuple()
     dtypes = [f.dataType for f in schema.fields]
 
     def sink(batches):
         import pandas as pd
 
-        cp = ConnParams(host, port, u, pw, db)
         encs = [_field_encoder(dt) for dt in dtypes]
         n = 0
         sock = None
@@ -1063,7 +1042,7 @@ def write_postgres_wire(
             for pdf in batches:
                 if len(pdf):
                     if sock is None:  # one connection per partition
-                        sock = connect(cp)
+                        sock = connect(params)
                     n += copy_into(sock, staging, pdf, encs)
         finally:
             if sock is not None:
@@ -1137,7 +1116,7 @@ def table_columns_postgres_wire(
         [("c", 25, -1)],
         256,
     ):
-        cols.extend(str(c) for c in batch["c"])
+        cols.extend(batch.column("c").to_pylist())
     return cols
 
 
@@ -1235,17 +1214,7 @@ def merge_postgres_wire(
             "(app_id text, version bigint, tbl text, committed_at timestamptz "
             "DEFAULT now(), PRIMARY KEY (app_id, version, tbl))",
         )
-        batch = next(
-            iter_copy_batches(
-                params,
-                f"SELECT count(*)::int8 AS n FROM __lhl_txn WHERE "
-                f"app_id = '{app_id}' AND version = {txn_version} "
-                f"AND tbl = '{table}'",
-                [("n", 20, -1)],
-                2,
-            )
-        )
-        if int(batch["n"][0]) > 0:
+        if _txn_published(params, app_id, txn_version, table):
             return (0, 0)  # this (app_id, version) already published
     if delete_col is not None:
         # a NULL flag must mean "not a tombstone": raw NULLs would join
@@ -1279,41 +1248,35 @@ def merge_postgres_wire(
     )
     try:
         any_null = " OR ".join(f"{k} IS NULL" for k in key_cols)
-        dup = next(
-            iter_copy_batches(
-                params,
-                f"SELECT (count(*) - count(DISTINCT ({key_tuple})))::int8 AS d, "
-                f"sum(({any_null})::int)::int8 AS nk "
-                f"FROM {staging}",
-                [("d", 20, -1), ("nk", 20, -1)],
-                2,
-            )
+        dup = query_row(
+            params,
+            f"SELECT (count(*) - count(DISTINCT ({key_tuple})))::int8 AS d, "
+            f"sum(({any_null})::int)::int8 AS nk "
+            f"FROM {staging}",
+            [("d", 20, -1), ("nk", 20, -1)],
         )
-        if int(dup["nk"][0] or 0) > 0:
+        if (dup["nk"] or 0) > 0:
             # DELETE USING t.k = s.k never matches a NULL key, so a NULL-keyed
             # row would pass count(DISTINCT) yet re-insert on every merge —
             # duplicating instead of replacing. Same contract as tail.py.
             raise ValueError(
                 f"keyed feed cannot address NULL keys ({key_tuple}): "
-                f"{int(dup['nk'][0])} staged row(s) carry a NULL key column"
+                f"{dup['nk']} staged row(s) carry a NULL key column"
             )
-        if int(dup["d"][0]) > 0:
+        if dup["d"] > 0:
             raise ValueError(
                 f"merge batch not unique per key ({key_tuple}): reduce the "
                 "window per key first (last-writer-wins inside one batch "
                 "would be arrival-order-dependent)"
             )
-        counts = next(
-            iter_copy_batches(
-                params,
-                f"SELECT sum((NOT {del_name})::int)::int8 AS u, "
-                f"sum(({del_name})::int)::int8 AS d FROM {staging}",
-                [("u", 20, -1), ("d", 20, -1)],
-                2,
-            )
+        counts = query_row(
+            params,
+            f"SELECT sum((NOT {del_name})::int)::int8 AS u, "
+            f"sum(({del_name})::int)::int8 AS d FROM {staging}",
+            [("u", 20, -1), ("d", 20, -1)],
         )
-        n_upsert = int(counts["u"][0] or 0)
-        n_delete = int(counts["d"][0] or 0)
+        n_upsert = counts["u"] or 0
+        n_delete = counts["d"] or 0
         # unquoted identifiers fold to lowercase server-side, so the
         # catalog stores the folded name — compare folded on both sides
         schema_pred = (
@@ -1321,16 +1284,13 @@ def merge_postgres_wire(
             if "." in table
             else "schemaname = current_schema()"
         )
-        exists = next(
-            iter_copy_batches(
-                params,
-                f"SELECT count(*)::int8 AS n FROM pg_tables WHERE "
-                f"{schema_pred} AND tablename = '{table.split('.')[-1].lower()}'",
-                [("n", 20, -1)],
-                2,
-            )
+        exists = query_row(
+            params,
+            f"SELECT count(*)::int8 AS n FROM pg_tables WHERE "
+            f"{schema_pred} AND tablename = '{table.split('.')[-1].lower()}'",
+            [("n", 20, -1)],
         )
-        if int(exists["n"][0]) == 0:
+        if exists["n"] == 0:
             simple_command(
                 params,
                 f"BEGIN; CREATE TABLE {table} AS SELECT {cols} FROM {staging} "

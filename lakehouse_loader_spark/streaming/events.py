@@ -713,8 +713,8 @@ def _pg_app_has_committed(conn_url: str, table: str, app_id: str) -> bool:
     means nothing has ever committed."""
     from lakehouse_loader_spark.sources.pgwire import (
         PgError,
-        iter_copy_batches,
         parse_libpq_url,
+        query_row,
     )
 
     if not all(part.isidentifier() for part in table.split(".")):
@@ -723,16 +723,13 @@ def _pg_app_has_committed(conn_url: str, table: str, app_id: str) -> bool:
         raise ValueError(f"unsafe app id {app_id!r}")
     params = parse_libpq_url(conn_url)
     try:
-        batch = next(
-            iter_copy_batches(
-                params,
-                f"SELECT count(*)::int8 AS n FROM __lhl_txn WHERE "
-                f"app_id = '{app_id}' AND tbl = '{table}'",
-                [("n", 20, -1)],
-                2,
-            )
+        row = query_row(
+            params,
+            f"SELECT count(*)::int8 AS n FROM __lhl_txn WHERE "
+            f"app_id = '{app_id}' AND tbl = '{table}'",
+            [("n", 20, -1)],
         )
-        return int(batch["n"][0]) > 0
+        return row["n"] > 0
     except PgError as exc:
         # ONLY a missing ledger table means "nothing committed".  Any
         # other PgError (connection reset mid-message, auth failure,

@@ -354,12 +354,12 @@ def test_sink_modes_and_atomic_staging(spark, pg_url):
     n = W.iter_copy_batches(
         params, "select count(*)::int8 as n from t_modes", [("n", 20, -1)], 2
     )
-    assert int(next(n)["n"][0]) == 200
+    assert next(n)["n"][0].as_py() == 200
     W.write_postgres_wire(df, pg_url, "t_modes", mode="overwrite")
     n = W.iter_copy_batches(
         params, "select count(*)::int8 as n from t_modes", [("n", 20, -1)], 2
     )
-    assert int(next(n)["n"][0]) == 100
+    assert next(n)["n"][0].as_py() == 100
     # a failed publish leaves no staging litter and the target untouched
     leftovers = W.iter_copy_batches(
         params,
@@ -368,7 +368,7 @@ def test_sink_modes_and_atomic_staging(spark, pg_url):
         [("n", 20, -1)],
         2,
     )
-    assert int(next(leftovers)["n"][0]) == 0
+    assert next(leftovers)["n"][0].as_py() == 0
 
 
 def test_sink_rejects_unsafe_table_names(spark, pg_url):
@@ -434,6 +434,67 @@ def test_sslmode_semantics(spark, pg_url):
         W.parse_libpq_url(pg_url + "?sslmode=bogus")
 
 
+def test_executors_keep_sslmode_on_read(spark, pg_url):
+    """The executor-side COPY session honours the URL's sslmode: with
+    ``disable`` it never encrypts, even when the server offers TLS."""
+    df = W.read_postgres_wire(
+        spark,
+        pg_url + "?sslmode=disable",
+        "select ssl from pg_stat_ssl where pid = pg_backend_pid()",
+    )
+    assert [r.ssl for r in df.collect()] == [False]
+
+
+def test_executors_keep_sslmode_on_staged_write(spark, pg_url):
+    """The sink's executor-side COPY into the staging table honours the
+    URL's sslmode too.  A statement trigger, attached to the staging table
+    as it is created, records pg_stat_ssl for the session running COPY."""
+    params = W.parse_libpq_url(pg_url)
+    W.simple_command(
+        params,
+        """
+        CREATE TABLE ssl_seen (ssl boolean);
+        CREATE FUNCTION note_ssl() RETURNS trigger LANGUAGE plpgsql AS $$
+        BEGIN
+          INSERT INTO ssl_seen
+            SELECT ssl FROM pg_stat_ssl WHERE pid = pg_backend_pid();
+          RETURN NULL;
+        END $$;
+        CREATE FUNCTION hook_staging() RETURNS event_trigger
+        LANGUAGE plpgsql AS $$
+        DECLARE r record;
+        BEGIN
+          FOR r IN SELECT objid::regclass AS t
+                   FROM pg_event_trigger_ddl_commands()
+                   WHERE object_identity LIKE '%t_sslw__lhl_stage_%'
+          LOOP
+            EXECUTE format('CREATE TRIGGER note_ssl BEFORE INSERT ON %s '
+                           'FOR EACH STATEMENT EXECUTE FUNCTION note_ssl()',
+                           r.t);
+          END LOOP;
+        END $$;
+        CREATE EVENT TRIGGER hook_staging ON ddl_command_end
+          WHEN TAG IN ('CREATE TABLE') EXECUTE FUNCTION hook_staging();
+        """,
+    )
+    try:
+        df = spark.range(0, 10).repartition(2)
+        n = W.write_postgres_wire(
+            df, pg_url + "?sslmode=disable", "t_sslw", mode="overwrite"
+        )
+        assert n == 10
+        seen = W.read_postgres_wire(spark, pg_url, "select ssl from ssl_seen")
+        got = [r.ssl for r in seen.collect()]
+        assert got and not any(got)  # one row per COPY, none encrypted
+    finally:
+        W.simple_command(
+            params,
+            "DROP EVENT TRIGGER hook_staging; DROP FUNCTION hook_staging(); "
+            "DROP TABLE IF EXISTS t_sslw; DROP FUNCTION note_ssl() CASCADE; "
+            "DROP TABLE ssl_seen",
+        )
+
+
 # -- codec properties (no server needed; run under the same live module) -----
 
 
@@ -471,35 +532,33 @@ def test_numeric_binary_edges():
 @given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=50))
 def test_copy_row_framing_roundtrip_property(vals):
     """A COPY-binary tuple stream built by the sink's framing parses back
-    through the source's offset walk — for every row shape incl. NULLs."""
+    through the source's column-wise decode — for every row shape incl.
+    NULLs.  Framed as a backend sends it: one CopyData message per row,
+    the header in front of the first, the trailer alone."""
     import struct as _struct
+    from unittest import mock
 
-    import pandas as pd
-
-    payload = bytearray(b"PGCOPY\n\xff\r\n\x00" + b"\x00" * 8)
+    header = b"PGCOPY\n\xff\r\n\x00" + b"\x00" * 8
     rows = [(v if i % 3 else None) for i, v in enumerate(vals)]
+    msgs = []
     for v in rows:
-        payload += _struct.pack(">h", 1)
+        payload = _struct.pack(">h", 1)
         if v is None:
             payload += _struct.pack(">i", -1)
         else:
             payload += _struct.pack(">i", 8) + _struct.pack(">q", v)
-    payload += _struct.pack(">h", -1)
+        msgs.append(payload)
+    msgs = [header + (msgs[0] if msgs else b"")] + msgs[1:] + [_struct.pack(">h", -1)]
+    stream = b"".join(W._msg(b"d", m) for m in msgs) + W._msg(b"Z", b"I")
+    client, server = socket.socketpair()
+    server.sendall(stream)
+    server.shutdown(socket.SHUT_WR)
     fields = [("x", 20, -1)]
-    # feed through the batch assembler by faking one parsed batch
-    mem = bytes(payload)
-    offs, lens, pos = [[]], [[]], 19
-    while True:
-        nf = (mem[pos] << 8) | mem[pos + 1]
-        if nf == 0xFFFF:
-            break
-        (ln,) = _struct.unpack_from(">i", mem, pos + 2)
-        offs[0].append(pos + 6)
-        lens[0].append(ln)
-        pos = pos + 6 + max(ln, 0)
-    out = W._assemble_batch(mem, fields, offs, lens)
-    assert len(out) == len(rows)
-    got = [None if pd.isna(x) else int(x) for x in out["x"]]
+    with mock.patch.object(W, "connect", lambda params: client):
+        out = list(W.iter_copy_batches(None, "q", fields, 1000))
+    server.close()
+    got = [x for batch in out for x in batch.column("x").to_pylist()]
+    assert len(got) == len(rows)
     assert got == rows
 
 
@@ -529,7 +588,7 @@ def test_sink_txn_makes_publish_exactly_once(spark, pg_url):
             params, "select count(*)::int8 as n from t_txn", [("n", 20, -1)], 2
         )
     )
-    assert int(n["n"][0]) == 150
+    assert n["n"][0].as_py() == 150
     with pytest.raises(ValueError, match="unsafe txn"):
         W.write_postgres_wire(df, pg_url, "t_txn", txn=("x'; DROP", 1))
 
@@ -660,7 +719,7 @@ def test_sink_schema_qualified_target(spark, pg_url):
         [("n", 20, -1)],
         2,
     )
-    assert int(next(n)["n"][0]) == 1
+    assert next(n)["n"][0].as_py() == 1
     got = W.read_postgres_wire(spark, pg_url, "select * from analytics.foo")
     assert got.count() == 50
     # error-mode collision is detected in the TARGET schema
