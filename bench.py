@@ -34,10 +34,11 @@ def main() -> None:
         load_start = round(os.getloadavg()[0], 1)
     except OSError:  # not available on every platform
         load_start = None
-    n_cpus = os.cpu_count()
 
     _ensure_loaded()
     spark = get_spark("lakehouse-bench")
+    # the cores the engine actually runs on (SPARK_GRAFT_CPUS), not the host's
+    n_cpus = spark.sparkContext.defaultParallelism
 
     # SPARK_GRAFT_ONLY=comma,separated,names — iterate on one family
     # without paying the full registry sweep (official runs leave it
@@ -371,9 +372,9 @@ def main() -> None:
             "mor_read_rps": loader.get("iceberg_mor_read_rows_per_sec"),
         }}
         if errors:
-            # full tracebacks live in BENCH_DETAIL.json; the JSON line only
-            # needs which queries errored (and must stay <1800 chars even in
-            # a mass-failure round — cap the name list)
+            # full tracebacks live in the detail file (detail_name); the
+            # JSON line only needs which queries errored (and must stay
+            # <1800 chars even in a mass-failure round — cap the name list)
             names = sorted(errors)
             compact_payload["errors"] = names[:12]
             if len(names) > 12:

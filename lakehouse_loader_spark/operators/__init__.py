@@ -48,19 +48,21 @@ def _staged_write(df: DataFrame, n_out: int, path: str) -> None:
     final stage into n tasks, so at 100 TB the whole signature/shingle
     build would run n_out-wide.  ``repartition(n)`` keeps the build
     full-width and pays one round-robin exchange of the already-reduced
-    artifact rows (A/B at sf0.1: no local cost, tools/probe_staging_width).
+    artifact rows (A/B at sf0.1: no local cost).
     The r15 lesson still holds: never probe ``df.rdd.getNumPartitions()``
     first — under AQE the probe materializes every intermediate stage and
-    the write re-executes them from scratch.
+    the write re-executes them from scratch."""
+    df.repartition(n_out).write.mode("overwrite").parquet(path)
 
-    ``SPARK_GRAFT_STAGING_WRITE=coalesce`` restores the r15 shape (A/B
-    probes; a cluster whose artifact rows are huge relative to build
-    compute could also prefer it)."""
-    if os.environ.get("SPARK_GRAFT_STAGING_WRITE", "repartition") == "coalesce":
-        df = df.coalesce(n_out)
-    else:
-        df = df.repartition(n_out)
-    df.write.mode("overwrite").parquet(path)
+
+def _scratch_path(spark, name: str) -> str:
+    """A fresh, not-yet-existing ``<root>/<name>-<uuid>`` path.  The root is
+    ``spark.lakehouse.scratch.dir`` when set (cluster-visible HDFS/S3
+    scratch on a real cluster — executors must be able to write it), else
+    the driver-local OS temp dir."""
+    root = spark.conf.get("spark.lakehouse.scratch.dir", None) or tempfile.gettempdir()
+    sep = "/" if "://" in root else os.sep
+    return f"{root.rstrip(sep)}{sep}{name}-{uuid.uuid4().hex}"
 
 
 def _rm_scratch(path: str, spark=None) -> None:
@@ -124,9 +126,7 @@ def materialize_shared(
     scratch IS the pinned copy.
     """
     spark = df.sparkSession
-    root = spark.conf.get("spark.lakehouse.scratch.dir", None) or tempfile.gettempdir()
-    sep = "/" if "://" in root else os.sep
-    path = f"{root.rstrip(sep)}{sep}lhl-scratch-{label}-{uuid.uuid4().hex}"
+    path = _scratch_path(spark, f"lhl-scratch-{label}")
     # bound the file count: tiny-file task overhead dominates the scratch
     # round-trip locally (A/B at sf0.1: 3.75→2.74s on dedup_ngram,
     # PERF_NOTES r7) — parallelism/4 keeps writes wide on a real cluster,

@@ -2107,33 +2107,25 @@ def streaming_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination(300)
-    # the memory sink holds the materialized result; the staged directory
-    # stays for the session-level cache (tmp, OS-reclaimed)
+    # the memory sink holds the materialized result
     return child.table(sink)
 
 
 def _staged_event_files(spark: SparkSession, sf_dir: str, key: str, prep) -> str:
-    """Session-cached staging of the events table as a multi-file parquet
-    directory for file-source streaming queries; ``prep`` shapes the frame
-    (partitioning decides micro-batch arrival order).  All seven parities
-    share the ``events4`` key (identical repartition(4) prep), so a
-    session stages the table ONCE instead of once per query family —
-    distinct keys exist for any future query needing a different arrival
-    shape."""
-    import os
-    import tempfile
+    """The events table staged (queries/staging.py:stage) as a multi-file
+    parquet directory for file-source streaming queries; ``prep`` shapes
+    the frame (partitioning decides micro-batch arrival order, so the
+    write keeps ``prep``'s partitioning instead of ``_staged_write``'s).
+    All seven parities share the ``events4`` key (identical
+    repartition(4) prep), so a session stages the table ONCE instead of
+    once per query family — distinct keys exist for any future query
+    needing a different arrival shape."""
+    from lakehouse_loader_spark.queries.staging import stage
 
-    cache = getattr(spark, "_lhl_stream_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_stream_staging = cache
-    staged = cache.get((key, sf_dir))
-    if staged is None or not os.path.isdir(staged):
-        ev = load_table(spark, sf_dir, "events")
-        staged = tempfile.mkdtemp(prefix=f"qstream_{key}_")
-        prep(ev).write.mode("overwrite").parquet(staged)
-        cache[(key, sf_dir)] = staged
-    return staged
+    def build(path: str) -> None:
+        prep(load_table(spark, sf_dir, "events")).write.parquet(path)
+
+    return stage(spark, (f"stream_{key}", sf_dir), build)
 
 
 _PARITY_SESSIONS: dict[int, "SparkSession"] = {}
@@ -3538,22 +3530,18 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-staged per sf_dir like the dedup signature tables — the
     # fact-table join + distinct + degree normalization run once per
     # corpus, the supersteps per call (measured sf0.1: 6.0→~3.2s warm)
-    from lakehouse_loader_spark.queries.staging import staged_pagerank_norm
+    from lakehouse_loader_spark.queries.staging import memo, staged_pagerank_norm
 
     norm_path = staged_pagerank_norm(spark, sf_dir, "cust_supp_bipartite", lambda: edges)
     # the staged norm is immutable per session, so its node count (the
     # broadcast-regime gate inside pagerank) is a per-artifact constant —
     # count it once per (norm_path) per session instead of one gate scan
     # per call (r16; at 100 TB that scan is a full pass over the artifact)
-    nn_cache = getattr(spark, "_lhl_pr_nnodes", None)
-    if nn_cache is None:
-        nn_cache = {}
-        spark._lhl_pr_nnodes = nn_cache
-    n_nodes = nn_cache.get(norm_path)
-    if n_nodes is None:
-        norm = spark.read.parquet(norm_path)
-        n_nodes = norm.where(F.col("w") == 0.0).count()
-        nn_cache[norm_path] = n_nodes
+    n_nodes = memo(
+        spark,
+        ("pr_n_nodes", norm_path),
+        lambda: spark.read.parquet(norm_path).where(F.col("w") == 0.0).count(),
+    )
     ranks = pagerank(
         edges,
         iterations=8,

@@ -18,6 +18,7 @@ from lakehouse_loader_spark.catalog import load_table
 from lakehouse_loader_spark.operators import sampling as SA
 from lakehouse_loader_spark.operators import text as T
 from lakehouse_loader_spark.queries import query
+from lakehouse_loader_spark.queries.staging import stage
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
 
@@ -1245,25 +1246,17 @@ def delta_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_delta_changes), so its inserts must equal the appended slice and
     its deletes exactly the DELETE's matched rows — which the oracle
     recomputes straight from the source table."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import delta as DL
 
-    cache = getattr(spark, "_lhl_cdf_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_cdf_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
-        table = os.path.join(tempfile.mkdtemp(prefix="qcdf_"), "orders_delta")
         DL.write_delta(orders.filter(F.col("o_orderkey") % 10 < 6), table)
         DL.write_delta(
             orders.filter((F.col("o_orderkey") % 10).isin(6, 7)), table, append=True
         )
         DL.delete_from_delta(spark, table, "o_totalprice < 50000.0")
-        cache[sf_dir] = table
+
+    table = stage(spark, ("delta_change_feed", sf_dir), build)
     return DL.read_delta_changes(spark, table, since_version=1).select(
         "o_orderkey", "o_custkey", "_change_type", "_commit_version"
     )
@@ -1289,25 +1282,17 @@ def iceberg_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     creating snapshot (sinks/iceberg.py:read_iceberg_changes).  Inserts
     must equal the appended slice and deletes exactly the DELETE's matched
     rows — recomputed directly from the source table by the oracle."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_icdf_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_icdf_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
-        table = os.path.join(tempfile.mkdtemp(prefix="qicdf_"), "orders_ice")
         IC.write_iceberg(orders.filter(F.col("o_orderkey") % 10 < 6), table)
         IC.write_iceberg(
             orders.filter((F.col("o_orderkey") % 10).isin(6, 7)), table, append=True
         )
         IC.delete_from_iceberg(spark, table, "o_totalprice < 50000.0")
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_change_feed", sf_dir), build)
     first = IC.snapshot_ids(table)[0]
     return IC.read_iceberg_changes(spark, table, since_snapshot_id=first).select(
         "o_orderkey", "o_custkey", "_change_type", "_snapshot_ordinal"
@@ -1329,23 +1314,16 @@ def iceberg_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     the matching day's files — the transform-partitioning payoff the
     oracle checks by filtering the raw table directly."""
     import datetime as _dt
-    import os
-    import tempfile
 
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_icepart_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_icepart_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "user_id", "value", "ts"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qicepart_"), "events_ice")
         IC.write_iceberg(ev, table, partition_by=["day(ts)"])
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_partition_pruned_scan", sf_dir), build)
     return IC.read_iceberg_pruned(
         spark, table, "ts_day", _dt.date(2024, 1, 15)
     ).select("event_id", "event_type", "user_id", "value")
@@ -1367,21 +1345,12 @@ def iceberg_mor_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files committed, zero data files rewritten), then read the table back
     — the scan-side broadcast anti-join on (file path, row position) must
     reproduce exactly the oracle's surviving rows."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_mor_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_mor_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qmor_"), "orders_mor")
         IC.write_iceberg(orders.filter(F.col("o_orderkey") % 10 < 5), table)
         IC.write_iceberg(
             orders.filter((F.col("o_orderkey") % 10).isin(5, 6, 7)),
@@ -1394,7 +1363,8 @@ def iceberg_mor_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice < 50000.0 AND o_orderstatus = 'F'",
             strategy="merge-on-read",
         )
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_mor_delete_scan", sf_dir), build)
     return IC.read_iceberg(spark, table)
 
 
@@ -1416,21 +1386,12 @@ def iceberg_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table back: the DV blobs resolve their targets from metadata
     alone, expand executor-side and anti-join the scan — surviving rows
     must equal the oracle's double-predicate filter exactly."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_dv_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_dv_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qdvice_"), "orders_dv")
         IC.write_iceberg(
             orders.filter(F.col("o_orderkey") % 10 < 8).repartition(2), table
         )
@@ -1443,7 +1404,8 @@ def iceberg_dv_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         IC.delete_from_iceberg(
             spark, table, "o_totalprice < 20000.0", strategy="merge-on-read-dv"
         )
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_dv_delete_scan", sf_dir), build)
     return IC.read_iceberg(spark, table)
 
 
@@ -1483,17 +1445,9 @@ def delta_row_tracking_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize the stable ids into the replacement files.  At scale the
     id map is one row per FILE (broadcast) and the DV anti-join is
     map-side — the same plan shape the dv/MOR queries pin."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import delta as DL
 
-    cache = getattr(spark, "_lhl_rowtrack_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_rowtrack_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1505,7 +1459,6 @@ def delta_row_tracking_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .sortWithinPartitions("o_orderkey")
             )
 
-        table = os.path.join(tempfile.mkdtemp(prefix="qrowtrack_"), "orders_rt")
         DL.write_delta(part(0), table)
         DL.enable_row_tracking(table)
         DL.write_delta(part(4), table, append=True)
@@ -1529,7 +1482,8 @@ def delta_row_tracking_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 16 == 12
         ).withColumn("o_totalprice", F.col("o_totalprice") * 2.0)
         DL.merge_delta(spark, table, src, "o_orderkey")
-        cache[sf_dir] = table
+
+    table = stage(spark, ("delta_row_tracking_scan", sf_dir), build)
     return DL.read_delta_with_row_ids(spark, table).select(
         "o_orderkey", "o_totalprice", "_row_id"
     )
@@ -1572,17 +1526,9 @@ def iceberg_row_lineage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     their original data sequence numbers (status-EXISTING entries).  At
     scale the id map is one broadcast row per FILE and the manifest-bounds
     probe prunes non-intersecting files before any data is read."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_rowlineage_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_rowlineage_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1594,7 +1540,6 @@ def iceberg_row_lineage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .sortWithinPartitions("o_orderkey")
             )
 
-        table = os.path.join(tempfile.mkdtemp(prefix="qrowlin_"), "orders_rl")
         IC.write_iceberg(part(1), table)
         IC.enable_row_lineage_iceberg(table)
         IC.write_iceberg(part(2), table, append=True)
@@ -1619,7 +1564,8 @@ def iceberg_row_lineage_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey") % 8 == 6
         ).withColumn("o_totalprice", F.col("o_totalprice") * 2.0)
         IC.merge_iceberg(spark, table, src, "o_orderkey")
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_row_lineage_scan", sf_dir), build)
     return IC.read_iceberg_with_row_ids(spark, table).select(
         "o_orderkey", "o_totalprice", "_row_id"
     )
@@ -1777,23 +1723,15 @@ def iceberg_stats_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the key), then a range read plans from the manifests' recorded
     lower/upper_bounds — files whose key range cannot intersect are never
     opened — with the exact row filter applied on top."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_stats_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_stats_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qstats_"), "orders_stats")
         IC.write_iceberg(orders.repartitionByRange(6, "o_orderkey"), table)
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_stats_pruned_scan", sf_dir), build)
     return IC.read_iceberg_stats_pruned(spark, table, "o_orderkey", 2000, 2500).filter(
         F.col("o_orderkey").between(2000, 2500)
     )
@@ -1820,27 +1758,19 @@ def iceberg_compound_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     three re-apply exactly row-level.  At 100 TB this is the planner
     every ad-hoc query rides: transform-aware partition pruning + file
     skipping from ONE metadata read, no data touched to plan."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_compound_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_compound_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_shipdate"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qcompound_"), "li_compound")
         IC.write_iceberg(
             li.repartitionByRange(4, "l_orderkey").sortWithinPartitions("l_orderkey"),
             table,
             partition_by=["month(l_shipdate)"],
         )
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_compound_pruned_scan", sf_dir), build)
     return IC.read_iceberg_scan(
         spark,
         table,
@@ -1869,21 +1799,12 @@ def iceberg_maintenance_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (materializing the deletes it touches), rewrite_manifests to collapse
     the commit-per-append metadata, and read the final table — which must
     equal the plain SQL the maintenance must never change."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_maint_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_maint_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qmaint_"), "orders_maint")
         base = o.filter(F.col("o_orderkey") % 10 < 5)
         IC.write_iceberg(
             base.filter(F.col("o_orderkey") % 10 == 0).coalesce(2),
@@ -1905,7 +1826,8 @@ def iceberg_maintenance_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         res = IC.rewrite_manifests(table)
         assert res["manifests_after"] < res["manifests_before"]
         IC.optimize_iceberg(spark, table, where=[("o_orderstatus", "=", "F")])
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_maintenance_scan", sf_dir), build)
     return IC.read_iceberg(spark, table).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1929,27 +1851,19 @@ def delta_compound_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     range prunes surviving files via Add-action stats, the price predicate
     stays residual-only, and all three re-apply exactly row-level.  One
     log replay plans the whole scan."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import delta as DL
 
-    cache = getattr(spark, "_lhl_dcompound_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_dcompound_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qdcompound_"), "orders_compound")
         DL.write_delta(
             o.repartitionByRange(4, "o_orderkey").sortWithinPartitions("o_orderkey"),
             table,
             partition_by=["o_orderstatus"],
         )
-        cache[sf_dir] = table
+
+    table = stage(spark, ("delta_compound_pruned_scan", sf_dir), build)
     return DL.read_delta_scan(
         spark,
         table,
@@ -1980,22 +1894,13 @@ def iceberg_equality_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys with o_totalprice = -1.  The sequence-aware anti-join must drop
     only the pre-delete rows: the oracle is the original rows minus the
     keys plus the re-inserts — the streaming-upsert read semantic."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_eqdel_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_eqdel_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         staged = orders.filter(F.col("o_orderkey") % 10 < 8)
-        table = os.path.join(tempfile.mkdtemp(prefix="qeqdel_"), "orders_eq")
         IC.write_iceberg(staged.repartition(4), table)
         keys = staged.filter(F.col("o_orderkey") % 1000 == 0).select("o_orderkey")
         IC.equality_delete_iceberg(spark, table, keys)
@@ -2003,7 +1908,8 @@ def iceberg_equality_delete_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", "o_custkey", F.lit(-1.0).alias("o_totalprice")
         )
         IC.write_iceberg(reinserts, table, append=True)
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_equality_delete_scan", sf_dir), build)
     return IC.read_iceberg(spark, table)
 
 
@@ -2063,24 +1969,16 @@ def iceberg_analyze_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinalities) — same bounded-oracle contract as the sketch
     aggregates.  ANALYZE itself is one distributed pass; the driver holds
     KB of sketch state."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import iceberg as IC
 
-    cache = getattr(spark, "_lhl_analyze_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_analyze_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qanalyze_"), "orders_ndv")
         IC.write_iceberg(orders.repartition(4), table)
         IC.analyze_iceberg(spark, table, columns=["o_custkey", "o_orderstatus"])
-        cache[sf_dir] = table
+
+    table = stage(spark, ("iceberg_analyze_ndv", sf_dir), build)
     # read the REGISTERED statistics back (metadata -> blob properties)
     stats = IC.table_statistics(table)[-1]
     field_names = {
@@ -2139,28 +2037,20 @@ def delta_cdf_update_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sinks/delta.py:_write_cdc), the feed yields PAIRED update pre/post
     images — the thing the log-diff derivation cannot reconstruct — and
     the oracle recomputes both images straight from the source rows."""
-    import os
-    import tempfile
-
     from lakehouse_loader_spark.sinks import delta as DL
 
-    cache = getattr(spark, "_lhl_cdc_staging", None)
-    if cache is None:
-        cache = {}
-        spark._lhl_cdc_staging = cache
-    table = cache.get(sf_dir)
-    if table is None or not os.path.isdir(table):
+    def build(table: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
         )
-        table = os.path.join(tempfile.mkdtemp(prefix="qcdc_"), "orders_cdf")
         DL.write_delta(orders, table)
         DL.enable_change_data_feed(table)
         DL.update_delta(
             spark, table, "o_orderkey % 100 = 0",
             {"o_totalprice": "o_totalprice * 1.1"},
         )
-        cache[sf_dir] = table
+
+    table = stage(spark, ("delta_cdf_update_images", sf_dir), build)
     since = DL._read_log(table)[0] - 1
     return (
         DL.read_delta_changes(spark, table, since_version=since)

@@ -21,8 +21,8 @@ the CLI layer restores the reference's observable message).
 No delta-spark JAR is needed: the Delta transaction log is plain JSON over
 parquet parts (the protocol pin at minReader/minWriter=1 keeps every reader
 compatible).  On a cluster the log commit must use an atomic
-create-if-absent (S3 conditional PUT / DynamoDB lock); locally O_EXCL file
-creation provides the same exclusivity, and commit conflicts retry
+create-if-absent (S3 conditional PUT / DynamoDB lock); locally a hard
+link of the fully written file provides the same exclusivity, and commit conflicts retry
 optimistically like the reference (≤3, src/lib.rs:82).
 """
 
@@ -38,7 +38,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from lakehouse_loader_spark.sinks.staging import accepts_file_uris
+from lakehouse_loader_spark.sinks.staging import accepts_file_uris, create_exclusive
 from lakehouse_loader_spark.sinks.alignment import check_schema_aligned, merge_schemas
 from lakehouse_loader_spark.sinks.modes import (
     TargetExistsError,
@@ -644,17 +644,16 @@ def _with_ict(path: str, version: int, actions: list[dict]) -> list[dict]:
 
 
 def _commit(path: str, version: int, actions: list[dict]) -> None:
-    """Atomic exclusive commit of one log version (O_EXCL ≈ conditional PUT,
+    """Atomic exclusive commit of one log version (≈ conditional PUT,
     src/delta_destination.rs:398-402).  A version-checksum sidecar
     (``<version>.crc``, the protocol's VERSION_CHECKSUM file) follows
     best-effort: it is a read-side integrity aid over an already-durable
     commit, so its failure must never fail the write."""
     actions = _with_ict(path, version, actions)
     os.makedirs(_log_dir(path), exist_ok=True)
-    fd = os.open(_version_file(path, version), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        for action in actions:
-            fh.write(json.dumps(action) + "\n")
+    create_exclusive(
+        _version_file(path, version), "".join(json.dumps(a) + "\n" for a in actions)
+    )
     try:
         _write_version_checksum(path, version)
     except Exception:  # noqa: BLE001 — deliberately broad, see docstring
@@ -1126,7 +1125,7 @@ def _assign_row_ids(path: str, adds: list[dict], commit_version: int) -> list[di
     domain's high-water mark) and ``defaultRowCommitVersion``; returns the
     domainMetadata action advancing the mark.  Called INSIDE the commit
     retry loop: a lost optimistic race re-reads the mark, so two appends
-    can never mint overlapping ranges (the O_EXCL version file is the
+    can never mint overlapping ranges (the exclusive version file is the
     arbiter)."""
     hw = _row_id_high_water_mark(path)
     for a in adds:

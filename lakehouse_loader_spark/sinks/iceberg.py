@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 
 from lakehouse_loader_spark.sinks import avro_ocf
 from lakehouse_loader_spark.sinks import transforms as TR
-from lakehouse_loader_spark.sinks.staging import accepts_file_uris
+from lakehouse_loader_spark.sinks.staging import accepts_file_uris, create_exclusive
 from lakehouse_loader_spark.sinks.alignment import check_schema_aligned, merge_schemas
 from lakehouse_loader_spark.sinks.modes import (
     TargetExistsError,
@@ -1613,12 +1613,10 @@ def write_iceberg(
     for attempt in range(COMMIT_RETRIES):
         new_version = version + 1
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{new_version}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             break
         except FileExistsError:
             if attempt == COMMIT_RETRIES - 1:
@@ -2216,12 +2214,10 @@ def _commit_metadata_update(path: str, mutate) -> None:
         new_meta = mutate(dict(meta))
         new_meta["last-updated-ms"] = int(time.time() * 1000)
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             _write_hint(path, version + 1)
             return
         except FileExistsError:
@@ -2732,12 +2728,10 @@ def expire_snapshots(
     for attempt in range(COMMIT_RETRIES):
         new_version = version + 1
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{new_version}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             break
         except FileExistsError:
             if attempt == COMMIT_RETRIES - 1:
@@ -3162,12 +3156,10 @@ def convert_delta_to_iceberg(delta_path: str, iceberg_path: str) -> dict:
     meta["last-updated-ms"] = snapshot["timestamp-ms"]
     meta["snapshots"] = [snapshot]
     meta["current-snapshot-id"] = snapshot_id
-    fd = os.open(
+    create_exclusive(
         os.path.join(_meta_dir(iceberg_path), "v0.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+        json.dumps(meta, indent=2),
     )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(meta, fh, indent=2)
     _write_hint(iceberg_path, 0)
     return {
         "files": len(entries),
@@ -3295,9 +3287,9 @@ def _cow_iceberg(spark: SparkSession, path: str, predicate: str, op: str, rewrit
     if rl:
         new_meta["next-row-id"] = manifest["__next_row_id"]
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         # losing the race must not litter the table: drop the rewritten
@@ -3309,8 +3301,6 @@ def _cow_iceberg(spark: SparkSession, path: str, predicate: str, op: str, rewrit
             f"concurrent commit won v{version + 1} at {path}; the {op}'s "
             "snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return int(n_matched), len(affected), len(entries_live)
 
@@ -3447,9 +3437,9 @@ def _mor_delete_iceberg(spark: SparkSession, path: str, predicate: str) -> dict:
     new_meta["snapshots"] = _append_snapshot(meta, snapshot)
     new_meta["current-snapshot-id"] = snapshot_id
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         _cleanup_lost_commit(path, new_delete_entries, manifest, manifest_list)
@@ -3457,8 +3447,6 @@ def _mor_delete_iceberg(spark: SparkSession, path: str, predicate: str) -> dict:
             f"concurrent commit won v{version + 1} at {path}; the DELETE's "
             "snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return {
         "deleted_rows": int(n_deleted),
@@ -3681,9 +3669,9 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
     new_meta["snapshots"] = _append_snapshot(meta, snapshot)
     new_meta["current-snapshot-id"] = snapshot_id
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         _cleanup_lost_commit(path, new_delete_entries, manifest, manifest_list)
@@ -3695,8 +3683,6 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
             f"concurrent commit won v{version + 1} at {path}; the DELETE's "
             "snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return {
         "deleted_rows": int(n_deleted),
@@ -3785,9 +3771,9 @@ def equality_delete_iceberg(
     new_meta["snapshots"] = _append_snapshot(meta, snapshot)
     new_meta["current-snapshot-id"] = snapshot_id
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         _cleanup_lost_commit(path, entries, manifest, manifest_list)
@@ -3795,8 +3781,6 @@ def equality_delete_iceberg(
             f"concurrent commit won v{version + 1} at {path}; the equality "
             "DELETE's snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return {"delete_files": len(entries), "key_rows": int(n_keys)}
 
@@ -4040,9 +4024,9 @@ def _mor_update_iceberg(
     if rl:
         new_meta["next-row-id"] = data_manifest["__next_row_id"]
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         _cleanup_lost_commit(path, new_delete_entries, delete_manifest, None)
@@ -4051,8 +4035,6 @@ def _mor_update_iceberg(
             f"concurrent commit won v{version + 1} at {path}; the UPDATE's "
             "snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return {
         "updated_rows": int(n_updated),
@@ -4194,12 +4176,10 @@ def rewrite_manifests(path: str, min_count: int = 2) -> dict:
         new_meta["snapshots"] = _append_snapshot(meta, snapshot)
         new_meta["current-snapshot-id"] = snapshot_id
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             break
         except FileExistsError:
             for m in new_manifests:
@@ -4607,12 +4587,10 @@ def enable_row_lineage_iceberg(path: str) -> None:
         new_meta["current-snapshot-id"] = snapshot_id
         new_meta["next-row-id"] = next_row_id
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             break
         except FileExistsError:
             for fp in (data_manifest["manifest_path"], manifest_list):
@@ -4935,17 +4913,15 @@ def optimize_iceberg(
         # ids the rewrite carried into the files); advance the cursor
         new_meta["next-row-id"] = manifest["__next_row_id"]
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         raise ConcurrentModificationError(
             f"concurrent commit won v{version + 1} at {path}; the compaction "
             "snapshot is stale — re-run OPTIMIZE against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     return {
         "rewritten_files": n_before,
@@ -5262,17 +5238,15 @@ def merge_iceberg(
     if rl:
         new_meta["next-row-id"] = manifest["__next_row_id"]
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         raise ConcurrentModificationError(
             f"concurrent commit won v{version + 1} at {path}; the MERGE's "
             "snapshot is stale — re-run against the new snapshot"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
     out = {
         "rewritten_files": len(affected),
@@ -5349,16 +5323,14 @@ def rollback_iceberg(path: str, snapshot_id: int) -> None:
     new_meta["snapshots"] = _append_snapshot(meta, snapshot)
     new_meta["current-snapshot-id"] = new_id
     try:
-        fd = os.open(
+        create_exclusive(
             os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-            os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+            json.dumps(new_meta, indent=2),
         )
     except FileExistsError:
         raise ConcurrentModificationError(
             f"concurrent commit won v{version + 1} at {path}; re-run the rollback"
         )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
     _write_hint(path, version + 1)
 
 
@@ -5478,12 +5450,10 @@ def append_to_branch(df: DataFrame, path: str, branch: str) -> int:
         # current-snapshot-id deliberately unchanged: the main line moves
         # only at publish_branch
         try:
-            fd = os.open(
+            create_exclusive(
                 os.path.join(_meta_dir(path), f"v{version + 1}.metadata.json"),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                json.dumps(new_meta, indent=2),
             )
-            with os.fdopen(fd, "w") as fh:
-                json.dump(new_meta, fh, indent=2)
             break
         except FileExistsError:
             if attempt == COMMIT_RETRIES - 1:

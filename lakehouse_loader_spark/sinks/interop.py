@@ -41,6 +41,8 @@ import uuid
 
 from pyspark.sql import types as T
 
+from lakehouse_loader_spark.sinks.staging import create_exclusive
+
 
 class InteropNotPossibleError(RuntimeError):
     """The source table uses a feature the mirror format's projection
@@ -136,14 +138,11 @@ def sync_iceberg_from_delta(delta_path: str) -> dict:
     # exclusive create = the commit point, like every other metadata
     # writer; a concurrent mirror-side commit surfaces loudly instead of
     # silently overwriting it
-    fd = os.open(
+    create_exclusive(
         os.path.join(IC._meta_dir(path), f"v{new_version}.metadata.json"),
-        os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+        json.dumps(new_meta, indent=2),
     )
-    with os.fdopen(fd, "w") as fh:
-        json.dump(new_meta, fh, indent=2)
-    with open(IC._hint_file(path), "w") as fh:
-        fh.write(str(new_version))
+    IC._write_hint(path, new_version)
     return {
         "delta_version": version,
         "iceberg_version": new_version,

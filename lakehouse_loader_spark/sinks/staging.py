@@ -1,16 +1,21 @@
-"""Shared staging-directory promotion for the Delta and Iceberg sinks.
+"""Shared staging-directory promotion and commit-file publishing for the
+Delta and Iceberg sinks.
 
 Both sinks write parquet parts via Spark into a staging directory, then
 promote them into the table layout while collecting per-file metadata
 (relative path, identity-partition values, size).  One implementation keeps
 the hive-directory parsing — including percent-unescaping and the
 ``__HIVE_DEFAULT_PARTITION__`` null sentinel — identical on both paths.
+Both also commit by exclusively creating the next log/metadata version
+file, which :func:`create_exclusive` publishes whole.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
+import tempfile
 from urllib.parse import unquote
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -34,6 +39,28 @@ def local_path(path: str) -> str:
     if parsed.netloc not in ("", "localhost"):
         raise ValueError(f"file URI with non-local authority: {path!r}")
     return unquote(parsed.path) or "/"
+
+
+def create_exclusive(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` whole, or raise ``FileExistsError`` if
+    ``path`` exists — the local twin of an object store's conditional PUT.
+
+    The text goes to a hidden temp file in the same dir and ``os.link``
+    (which fails on an existing target) is the commit point.  Creating the
+    target first and writing into it would expose an empty or partial
+    version file: a racing writer that loses the create re-reads the
+    newest version and finds it torn, and a crash mid-write leaves a torn
+    version that bricks every later commit."""
+    fd, tmp = tempfile.mkstemp(
+        prefix=f".{os.path.basename(path)}.", suffix=".tmp", dir=os.path.dirname(path)
+    )
+    try:
+        with os.fdopen(fd, "w") as fh:
+            fh.write(text)
+        os.link(tmp, path)
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
 
 
 def accepts_file_uris(fn, param: str = "path"):

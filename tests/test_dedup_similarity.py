@@ -513,14 +513,14 @@ def test_staged_dedup_artifacts_cache_per_session(spark):
     import os
     import shutil
 
-    from lakehouse_loader_spark.queries.staging import staged_doc_shingles
+    from lakehouse_loader_spark.queries.staging import _registry, staged_doc_shingles
     from tests.conftest import SF_SMOKE
 
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
     a = staged_doc_shingles(spark, SF_SMOKE)
-    path1 = spark._lhl_dedup_staging[("shingles3", SF_SMOKE)]
+    path1 = _registry(spark)[("shingles3", SF_SMOKE)]
     b = staged_doc_shingles(spark, SF_SMOKE)
-    assert spark._lhl_dedup_staging[("shingles3", SF_SMOKE)] == path1
+    assert _registry(spark)[("shingles3", SF_SMOKE)] == path1
     n = b.count()
     assert a.count() == n > 0
     assert set(a.columns) == {"doc_id", "source", "sh_h"}
@@ -528,14 +528,14 @@ def test_staged_dedup_artifacts_cache_per_session(spark):
     # the old dir fails loudly — same contract as materialize_shared)
     shutil.rmtree(path1)
     c = staged_doc_shingles(spark, SF_SMOKE)
-    path2 = spark._lhl_dedup_staging[("shingles3", SF_SMOKE)]
+    path2 = _registry(spark)[("shingles3", SF_SMOKE)]
     assert path2 != path1 and os.path.isdir(path2)
     assert c.count() == n
-    # a clone session stages independently (its own cache attribute)
+    # a clone session stages independently (its own registry)
     iso = spark.newSession()
     staged_doc_shingles(iso, SF_SMOKE)
-    assert iso._lhl_dedup_staging[("shingles3", SF_SMOKE)] != path2
-    spark._lhl_dedup_staging = {}
+    assert _registry(iso)[("shingles3", SF_SMOKE)] != path2
+    _registry(spark).clear()
 
 
 def test_staged_artifacts_match_inline_derivations(spark):
@@ -552,13 +552,14 @@ def test_staged_artifacts_match_inline_derivations(spark):
         with_simhash,
     )
     from lakehouse_loader_spark.queries.staging import (
+        _registry,
         staged_doc_shingles,
         staged_minhash_sigs,
         staged_simhash,
     )
     from tests.conftest import SF_SMOKE
 
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
     docs = load_table(spark, SF_SMOKE, "documents")
 
     staged = staged_doc_shingles(spark, SF_SMOKE).orderBy("doc_id").collect()
@@ -596,7 +597,7 @@ def test_staged_artifacts_match_inline_derivations(spark):
         .collect()
     )
     assert s_fp == i_fp
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
 
 
 def test_staged_ann_indexes_match_inline_paths(spark, emb):
@@ -605,12 +606,13 @@ def test_staged_ann_indexes_match_inline_paths(spark, emb):
     guarantee that serving queries against the prebuilt index cannot
     change any oracle-checked recall report."""
     from lakehouse_loader_spark.queries.staging import (
+        _registry,
         staged_ivf_index,
         staged_lsh_index,
     )
     from tests.conftest import SF_ORACLE
 
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
     q = emb.filter(F.col("vec_id") < 20)
 
     inline_lsh = sorted(
@@ -639,27 +641,27 @@ def test_staged_ann_indexes_match_inline_paths(spark, emb):
     # indexed and centroids must travel together
     with pytest.raises(ValueError, match="together"):
         S.ivf_ann_topk(emb, q, k=10, indexed=inv)
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
 
 
 def test_staged_artifacts_honor_scratch_dir_conf(spark, tmp_path):
     """spark.lakehouse.scratch.dir (the cluster-visible scratch root on a
     real deployment) must govern where staged artifacts land — a
     driver-local tempdir would be unreadable to executors there."""
-    from lakehouse_loader_spark.queries.staging import staged_doc_shingles
+    from lakehouse_loader_spark.queries.staging import _registry, staged_doc_shingles
     from tests.conftest import SF_SMOKE
 
-    spark._lhl_dedup_staging = {}
+    _registry(spark).clear()
     root = str(tmp_path / "scratch")
     spark.conf.set("spark.lakehouse.scratch.dir", root)
     try:
         df = staged_doc_shingles(spark, SF_SMOKE)
-        path = spark._lhl_dedup_staging[("shingles3", SF_SMOKE)]
+        path = _registry(spark)[("shingles3", SF_SMOKE)]
         assert path.startswith(root), path
         assert df.count() > 0
     finally:
         spark.conf.unset("spark.lakehouse.scratch.dir")
-        spark._lhl_dedup_staging = {}
+        _registry(spark).clear()
 
 
 def test_stack_batch_names_offending_row():
