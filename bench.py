@@ -1,7 +1,7 @@
 """Benchmark harness: run the declared queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"cold_total_sec": ..., "queries": {name: sec}, "sf": ...}.
 
 Each query is timed end-to-end including the action (count-style
 materialization of every result row) but excluding session startup.
@@ -330,6 +330,9 @@ def main() -> None:
         "metric": "declared_queries_total_time",
         "value": round(sum(timings.values()), 4),
         "unit": "sec",
+        # first timed run of each query: pays the per-SF codegen and the
+        # session-staged artifact builds that the warm min-of-2 hides
+        "cold_total_sec": round(sum(v[0] for v in all_runs.values()), 4),
         "queries": timings,
         "loader": loader,
         "sf": sf_val,

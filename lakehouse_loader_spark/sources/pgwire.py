@@ -720,9 +720,14 @@ def read_postgres_wire(
     min/max round-trip when partitioned); every data row is fetched
     executor-side through mapInArrow in ``batch_size``-bounded Arrow
     record batches (``iter_copy_batches``), with the session's full
-    ``ConnParams`` — sslmode included — on every executor connection.  With ``partition_column``/``num_partitions`` the read fans
-    out as N concurrent server cursors with range predicates — the same
-    contract as Spark's JDBC partitioning options."""
+    ``ConnParams`` — sslmode included — on every executor connection.
+
+    With ``partition_column``/``num_partitions`` the read fans out as N
+    concurrent server cursors with range predicates — the same contract
+    as Spark's JDBC partitioning options.  The fan-out is seeded by
+    ``spark.range(0, N, 1, N)``: exactly one predicate index per Spark
+    partition, so each task runs exactly one cursor and no shuffle runs
+    before the first row."""
     params = parse_libpq_url(conn_url, user=user, password=password)
     fields = describe_query(params, query)
     if not fields:
@@ -739,17 +744,14 @@ def read_postgres_wire(
         )
     else:
         preds = ["TRUE"]
-    seed = spark.createDataFrame([(p,) for p in preds], "pred string").repartition(
-        len(preds)
-    )
 
     def fetch(batches):
         for batch in batches:
-            for pred in batch.column("pred").to_pylist():
-                sub = f"SELECT * FROM ({query}) __lhl_q WHERE {pred}"
+            for i in batch.column("id").to_pylist():
+                sub = f"SELECT * FROM ({query}) __lhl_q WHERE {preds[i]}"
                 yield from iter_copy_batches(params, sub, fields, batch_size)
 
-    return seed.mapInArrow(fetch, schema)
+    return spark.range(0, len(preds), 1, len(preds)).mapInArrow(fetch, schema)
 
 
 # -- the Postgres SINK (COPY FROM STDIN, binary) -----------------------------

@@ -320,7 +320,8 @@ def read_avro_source(spark: SparkSession, path: str) -> DataFrame:
             return v
 
         for pdf in batches:
-            for file_path in pdf["path"]:
+            for i in pdf["id"]:
+                file_path = files[i]
                 file_schema, _, records = read_ocf(file_path)
                 if file_schema.get("fields") != avro_schema.get("fields"):
                     raise ValueError(
@@ -331,10 +332,9 @@ def read_avro_source(spark: SparkSession, path: str) -> DataFrame:
                     {n: [conv(n, r.get(n)) for r in records] for n in names}
                 )
 
-    paths_df = spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(len(files))
-    return paths_df.mapInPandas(decode, schema=schema)
+    # one file index per partition: repartition(n) over a local relation
+    # would place several files in one task and leave others empty
+    return spark.range(0, len(files), 1, len(files)).mapInPandas(decode, schema=schema)
 
 
 def postgres_jdbc_partitioned_options(

@@ -233,6 +233,27 @@ def test_partitioned_read_fans_out_and_loses_nothing(spark, pg_url):
     assert df2.count() == 25_001
 
 
+@pytest.mark.parametrize("n", [3, 4, 8])
+def test_partitioned_read_runs_one_cursor_per_task(spark, pg_url, n):
+    """Every Spark partition runs exactly one range cursor: none is left
+    empty, none holds two strides (per-partition id ranges are disjoint),
+    and together they still hold every row."""
+    df = W.read_postgres_wire(
+        spark, pg_url, "select id from t1", partition_column="id", num_partitions=n
+    )
+    parts = (
+        df.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.min("id").alias("lo"), F.max("id").alias("hi"), F.count("*").alias("rows"))
+        .orderBy("lo")
+        .collect()
+    )
+    assert sorted(r.p for r in parts) == list(range(n))
+    for left, right in zip(parts, parts[1:]):
+        assert left.hi < right.lo, (left, right)
+    assert sum(r.rows for r in parts) == 25_001
+    assert df.select("id").distinct().count() == 25_001
+
+
 def test_batch_size_bounds_executor_memory_not_results(spark, pg_url):
     got = (
         W.read_postgres_wire(spark, pg_url, "select id from t1", batch_size=997)

@@ -145,6 +145,63 @@ def test_normalized_text_idempotent(spark, texts):
     assert joined.filter(F.col("n") != F.col("n2")).count() == 0
 
 
+@settings(max_examples=8, deadline=None)
+@given(
+    # per-flag row count 4k + r with r in {1, 2, 3}: ntile(4) tiles unevenly
+    st.lists(
+        st.tuples(st.integers(0, 8), st.sampled_from([1, 2, 3])), min_size=1, max_size=3
+    ),
+    st.integers(min_value=1, max_value=4),  # distinct quantities: heavy ties
+    st.randoms(use_true_random=False),
+)
+def test_window_rank_matches_literal_window_form(spark, flag_sizes, n_qty, rnd):
+    """window_rank's histogram/closed-form decomposition returns exactly the
+    rows of the literal row_number/rank/dense_rank/ntile(4) windows."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Window as W
+
+    from lakehouse_loader_spark.queries.relational import window_rank
+
+    flags, qtys = [], []
+    for flag, (k, r) in zip("ANR", flag_sizes):
+        for _ in range(4 * k + r):
+            flags.append(flag)
+            qtys.append(float(rnd.randint(1, n_qty)))
+    keys = [(i // 4 + 1, i % 4 + 1) for i in range(len(flags))]
+    rnd.shuffle(keys)
+    table = pa.table(
+        {
+            "l_orderkey": pa.array([k for k, _ in keys], pa.int64()),
+            "l_linenumber": pa.array([n for _, n in keys], pa.int32()),
+            "l_quantity": pa.array(qtys, pa.float64()),
+            "l_returnflag": pa.array(flags, pa.string()),
+        }
+    )
+    with tempfile.TemporaryDirectory(prefix="window_rank_") as sf_dir:
+        pq.write_table(table, f"{sf_dir}/lineitem.parquet")
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        w_uniq = W.partitionBy("l_returnflag").orderBy(
+            F.col("l_quantity").desc(), "l_orderkey", "l_linenumber"
+        )
+        w_qty = W.partitionBy("l_returnflag").orderBy(F.col("l_quantity").desc())
+        literal = li.select(
+            "l_returnflag",
+            "l_orderkey",
+            "l_linenumber",
+            "l_quantity",
+            F.row_number().over(w_uniq).cast("bigint").alias("rn"),
+            F.rank().over(w_qty).cast("bigint").alias("rnk"),
+            F.dense_rank().over(w_qty).cast("bigint").alias("drnk"),
+            F.ntile(4).over(w_uniq).cast("bigint").alias("quartile"),
+        ).filter("rn <= 20")
+        got = window_rank(spark, sf_dir)
+        assert got.columns == literal.columns
+        assert sorted(got.collect()) == sorted(literal.collect())
+
+
 # -- merge_schemas (by-name evolution) --------------------------------------
 
 from lakehouse_loader_spark.sinks.alignment import merge_schemas

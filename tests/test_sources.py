@@ -260,6 +260,32 @@ def test_avro_reader_types_and_nulls(spark, tmpdir):
     assert rows[3].d == dt.date(1970, 1, 1)
 
 
+def test_avro_reader_decodes_each_file_in_its_own_task(spark, tmpdir):
+    from pyspark.sql import functions as F
+
+    from lakehouse_loader_spark.sources.readers import read_avro_source
+
+    for n_files in (4, 8):
+        d = os.path.join(tmpdir, f"av_fanout_{n_files}")
+        os.makedirs(d, exist_ok=True)
+        want = {}
+        for k in range(n_files):
+            ids = [k * 100 + j for j in range(k + 1)]
+            _write_avro(os.path.join(d, f"f{k}.avro"), [
+                {"id": i, "name": None, "score": None, "d": None, "ts": None}
+                for i in ids
+            ])
+            want[k] = ids
+        got = {
+            r.p: sorted(r.ids)
+            for r in read_avro_source(spark, d)
+            .groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.collect_list("id").alias("ids"))
+            .collect()
+        }
+        assert got == want, n_files
+
+
 def test_avro_reader_rejects_mixed_schemas(spark, tmpdir):
     from lakehouse_loader_spark.sinks.avro_ocf import write_ocf
     from lakehouse_loader_spark.sources.readers import read_avro_source
