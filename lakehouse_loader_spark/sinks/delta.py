@@ -2124,6 +2124,31 @@ def _file_reader(spark: SparkSession, path: str, meta: dict, schema: T.StructTyp
 DV_BROADCAST_MAX = 4_000_000
 
 
+def _dv_positions_frame(
+    spark: SparkSession, path: str, dv_adds: dict[str, dict]
+) -> tuple[DataFrame, int]:
+    """The deleted positions of ``dv_adds`` as a (__dv_path, __dv_pos)
+    DataFrame, plus their total cardinality.  The driver materializes ONLY
+    the compressed bitmap blobs (CRC-checked; bytes ~ compressed delete
+    size, the same bound the write path guarantees); positions expand
+    executor-side, one blob per task (``dv.positions_frame``, shared with
+    the Iceberg DV read path).  Cardinality for the broadcast gate comes
+    from the descriptors, so no decode is needed to decide."""
+    from lakehouse_loader_spark.sinks import dv as dvmod
+
+    blobs, total = [], 0
+    for rel, add in sorted(dv_adds.items()):
+        desc = add["deletionVector"]
+        total += int(desc.get("cardinality") or 0)
+        blobs.append(
+            (
+                os.path.abspath(os.path.join(path, rel)),
+                dvmod.load_descriptor_bytes(path, desc),
+            )
+        )
+    return dvmod.positions_frame(spark, blobs, "__dv_path", "__dv_pos"), total
+
+
 def _scan_adds(
     spark: SparkSession,
     path: str,
@@ -2167,41 +2192,7 @@ def _scan_adds(
         F.col("_metadata.row_index").alias("__pos"),
     )
     if dv_adds:
-        from lakehouse_loader_spark.sinks import dv as dvmod
-
-        # Driver materializes ONLY the compressed bitmap blobs (CRC-checked;
-        # bytes ~ compressed delete size, the same bound the write path
-        # guarantees); position expansion — O(deleted rows) int64s — happens
-        # executor-side in mapInPandas.  Cardinality for the broadcast gate
-        # comes from the descriptors, so no decode is needed to decide.
-        blob_rows = []
-        total = 0
-        for rel, add in sorted(dv_adds.items()):
-            desc = add["deletionVector"]
-            total += int(desc.get("cardinality") or 0)
-            blob_rows.append(
-                (
-                    os.path.abspath(os.path.join(path, rel)),
-                    bytearray(dvmod.load_descriptor_bytes(path, desc)),
-                )
-            )
-        blobs = spark.createDataFrame(
-            blob_rows, "__dv_path string, __dv_blob binary"
-        ).repartition(min(len(blob_rows), spark.sparkContext.defaultParallelism))
-
-        def _expand(batches):
-            import pandas as pd
-
-            from lakehouse_loader_spark.sinks import dv as _dv
-
-            for pdf in batches:
-                for p, blob in zip(pdf["__dv_path"], pdf["__dv_blob"]):
-                    pos = _dv.deserialize_positions(bytes(blob))
-                    yield pd.DataFrame(
-                        {"__dv_path": p, "__dv_pos": pos.astype("int64")}
-                    )
-
-        dels = blobs.mapInPandas(_expand, "__dv_path string, __dv_pos long")
+        dels, total = _dv_positions_frame(spark, path, dv_adds)
         if total <= DV_BROADCAST_MAX:
             dels = F.broadcast(dels)
         scan = scan.join(
@@ -2767,6 +2758,29 @@ def _iso_utc_naive(v) -> str:
     return v.isoformat()
 
 
+def _micros_iso(micros: int) -> str:
+    """UTC microseconds since the epoch in the UTC-naive isoformat form
+    ``_file_stats`` writes for timestamps."""
+    import datetime as _dt
+
+    return (_dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=micros)).isoformat()
+
+
+def _stats_may_overlap(add: dict, column: str, lo, hi) -> bool:
+    """False only when ``add``'s stats prove no value of ``column`` lies in
+    [lo, hi]; a file without stats for the column, or with stats that do
+    not compare with the bounds, may hold one (conservative)."""
+    stats = json.loads(add.get("stats", "{}") or "{}")
+    mn = stats.get("minValues", {}).get(column)
+    mx = stats.get("maxValues", {}).get(column)
+    if mn is None or mx is None:
+        return True
+    try:
+        return mx >= lo and mn <= hi
+    except TypeError:
+        return True
+
+
 @accepts_file_uris
 def prune_files_by_stats(
     path: str, column: str, lower, upper, adds: dict[str, dict] | None = None
@@ -2779,13 +2793,11 @@ def prune_files_by_stats(
     concurrent commits)."""
     if adds is None:
         _, _, adds = _read_log(path)
-    kept = []
-    for p, add in sorted(adds.items()):
-        stats = json.loads(add.get("stats", "{}") or "{}")
-        mn = stats.get("minValues", {}).get(column)
-        mx = stats.get("maxValues", {}).get(column)
-        if mn is None or mx is None or (mx >= lower and mn <= upper):
-            kept.append(os.path.join(path, p))
+    kept = [
+        os.path.join(path, p)
+        for p, add in sorted(adds.items())
+        if _stats_may_overlap(add, column, lower, upper)
+    ]
     return kept, len(adds)
 
 
@@ -3209,11 +3221,17 @@ def merge_delta(
     refuse NULL in any key column — a NULL component makes the tuple
     unaddressable by the equality joins (the pgwire composite-key guard).
 
+    Two passes over the table, as Delta's own MERGE does: candidates are
+    pruned on the driver by each add's stats against the source keys'
+    [min, max]; one probe query over the candidates (sinks/keys.py
+    ``probe_matches``) returns the files holding a matching live row and
+    the matched key counts; the second pass reads only those files.
+
     ``mode="copy-on-write"`` (default): files
     containing matched keys are rewritten with updated rows; unmatched
-    source rows are appended.  One commit of remove+add actions; untouched
-    files are untouched (at scale, stats-based pruning limits the rewrite
-    set to files whose key range intersects the source's).
+    source rows are appended.  One commit of remove+add actions; files
+    without a matching live row are untouched, even when their stats
+    range holds a source key.
     ``mode="merge-on-read"``: the matched rows are masked behind deletion
     vectors and the full source is appended — write cost ∝ source size,
     never ∝ the size of the candidate files; a later OPTIMIZE folds the
@@ -3245,6 +3263,8 @@ def merge_delta(
 
     from lakehouse_loader_spark.sinks.keys import (
         align_merge_source_types,
+        probe_matches,
+        tombstone_flag,
         validate_merge_keys,
     )
 
@@ -3273,53 +3293,45 @@ def merge_delta(
     # refuse before any write (sinks/keys.py: insert-only merges would
     # otherwise fail only when a reader hits the new file)
     source = align_merge_source_types(source, schema)
-    # shared key contract (sinks/keys.py — one aggregate pass: distinct
-    # count, duplicate refusal, composite-NULL refusal)
-    key_cols, n_source_keys = validate_merge_keys(source, key)
+    # shared key contract and source measures (sinks/keys.py — one
+    # aggregate pass: distinct count, duplicate and NULL refusal,
+    # tombstone count, first key column's range).  A timestamp key's
+    # range comes back as UTC micros, independent of the driver's zone
+    first = key if isinstance(key, str) else next(iter(key), None)
+    ts_key = first in schema.fieldNames() and isinstance(
+        schema[first].dataType, T.TimestampType
+    )
+    mk = validate_merge_keys(source, key, delete_col, micros=ts_key)
+    key_cols, n_source_keys = mk.cols, mk.n_keys
     key = key_cols[0]  # stats pruning / bounds column (see docstring)
-    if delete_col is not None:
-        # NULL flag means "not a tombstone" (merge_postgres_wire contract)
-        flag = F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
-        del_keys = source.filter(flag).select(*key_cols).distinct()
-        all_keys = source.select(*key_cols).distinct()
-        source = source.filter(~flag)
-    else:
-        del_keys = None
-        all_keys = None
-    source = source.select(*schema.fieldNames())
+    flag = tombstone_flag(delete_col)
+    # source keys are proven unique: the key frames need no distinct.
+    # Tombstone keys take part in the probe and the anti-join exactly like
+    # upsert keys — a file holding only to-be-deleted rows is rewritten
+    # (or DV-masked) too
+    key_frame = source.select(*key_cols, flag.alias("__del"))
+    keys = source.select(*key_cols)
+    del_keys = source.filter(flag).select(*key_cols) if delete_col else None
+    source = source.filter(~flag).select(*schema.fieldNames())
     _enforce_constraints(source, _write_rules(meta))
 
-    # prune the rewrite set: a file is touched only if SOME source key
-    # falls inside its [min,max] stats range — file ranges are metadata
-    # (one row per file), so the range probe is a tiny broadcast join, not
-    # a coarse global-min/max test (which one outlier key would defeat)
-    ranges = []
-    for rel, add in sorted(adds.items()):
-        stats = json.loads(add.get("stats", "{}") or "{}")
-        mn = stats.get("minValues", {}).get(key)
-        mx = stats.get("maxValues", {}).get(key)
-        ranges.append((rel, mn, mx))
-    known = [(r, mn, mx) for r, mn, mx in ranges if mn is not None]
-    unknown_rel = [r for r, mn, _ in ranges if mn is None]
-    cand_rel = set(unknown_rel)
-    # tombstone keys participate in the probe and the anti-join exactly
-    # like upsert keys — a file holding only to-be-deleted rows must be
-    # rewritten (or DV-masked) too
-    keys = all_keys if delete_col is not None else source.select(*key_cols).distinct()
-    if known:
-        # dunder column names so a merge key literally named "mn"/"rel"
-        # can't collide with the probe frame's columns
-        files_df = spark.createDataFrame(known, ["__rel", "__mn", "__mx"])
-        hit = (
-            files_df.join(
-                keys,
-                (F.col(key) >= F.col("__mn")) & (F.col(key) <= F.col("__mx")),
-                "left_semi",
-            )
-            .select("__rel")
-            .collect()
-        )
-        cand_rel |= {r["__rel"] for r in hit}
+    # canonicalize the source range to the form _file_stats writes:
+    # temporal stats are isoformat strings of UTC-naive values
+    kb_mn, kb_mx = mk.lo, mk.hi
+    if ts_key and kb_mn is not None:
+        kb_mn, kb_mx = _micros_iso(kb_mn), _micros_iso(kb_mx)
+    elif hasattr(kb_mn, "isoformat"):
+        kb_mn, kb_mx = _iso_utc_naive(kb_mn), _iso_utc_naive(kb_mx)
+    # pass 1, the probe: prune candidates on the driver by each add's
+    # stats against the source's [min, max] (an empty source matches
+    # nothing; an outlier key widens the probe, never the rewrite), then
+    # one query over the candidates finds the files holding a matching
+    # live row and the matched key counts
+    cand_rel = (
+        [r for r, a in sorted(adds.items()) if _stats_may_overlap(a, key, kb_mn, kb_mx)]
+        if kb_mn is not None
+        else []
+    )
     # key-frame cardinality is already known (n_source_keys): broadcast the
     # probe/anti-join side only when it fits in an executor, mirroring the
     # Iceberg twin's DELETE_BROADCAST_MAX gate (iceberg.py) — an over-ceiling
@@ -3328,34 +3340,30 @@ def merge_delta(
     _bcast = (
         F.broadcast if n_source_keys <= DV_BROADCAST_MAX else (lambda df: df)
     )
+    matched_rel: list[str] = []
+    n_updated = n_deleted = 0
+    if cand_rel:
+        # DV-aware: rows already deleted merge-on-read never match
+        hit, n_updated, n_deleted = probe_matches(
+            _scan_adds(
+                spark, path, meta, schema, {r: adds[r] for r in cand_rel},
+                with_path=True,
+            ),
+            _bcast(key_frame),
+            key_cols,
+        )
+        abs_root = os.path.abspath(path) + os.sep
+        matched_rel = sorted(p.split(abs_root, 1)[1] for p in hit)
+    matched_adds = {r: adds[r] for r in matched_rel}
     if rt:
         mat_id, mat_rcv = _materialized_col_names(meta)
-    if cand_rel:
-        # DV-aware: rows already deleted merge-on-read must neither count
-        # as matches nor be resurrected into the rewritten files; on a
-        # row-tracking table the scan resolves each row's stable id so the
-        # rewrite can carry it
-        if rt:
-            cand_df = _scan_adds_materialized(
-                spark, path, meta, schema, {r: adds[r] for r in cand_rel}
-            )
-        else:
-            cand_df = _scan_adds(
-                spark, path, meta, schema, {r: adds[r] for r in cand_rel}
-            )
-        # count matched KEYS, not matched rows: a key present in several
-        # table rows updates them all but is still one update
-        n_updated = (
-            source.select(*key_cols)
-            .distinct()
-            .join(cand_df.select(*key_cols), key_cols, "left_semi")
-            .count()
-        )
-        n_deleted = (
-            del_keys.join(cand_df.select(*key_cols), key_cols, "left_semi").count()
-            if del_keys is not None
-            else 0
-        )
+    if matched_rel:
+        # pass 2 reads only the files with real matches; DV-aware, so
+        # rows already deleted merge-on-read are not resurrected into the
+        # rewrite; on a row-tracking table the scan resolves each row's
+        # stable id so the rewrite can carry it
+        scan_fn = _scan_adds_materialized if rt else _scan_adds
+        cand_df = scan_fn(spark, path, meta, schema, matched_adds)
         kept = cand_df.join(_bcast(keys), key_cols, "left_anti")
         if rt:
             # each matched key inherits its target row's stable id (min id
@@ -3376,31 +3384,22 @@ def merge_delta(
         else:
             rewritten = kept.unionByName(source)
     else:
-        n_updated = 0
-        n_deleted = 0
-        # no candidate files: every source row is an insert; fresh appends
+        # no matched files: every source row is an insert; fresh appends
         # need no materialized columns (readers use baseRowId + position)
         rewritten = source
         if rt:
             source_rt = source
-    n_ups_keys = (
-        n_source_keys
-        if del_keys is None
-        else n_source_keys - del_keys.count()
-    )
-    n_inserted = n_ups_keys - n_updated
+    n_inserted = n_source_keys - mk.n_tombstones - n_updated
 
     cdc_actions: list[dict] = []
     if _cdf_enabled(meta):
         # exact row-level changes: matched table rows are pre-images, the
         # matching source rows post-images, the rest of the source inserts
         ct = "_change_type"
-        if cand_rel:
+        if matched_rel:
             # matched_keys <= n_source_keys rows, so the same gate applies
-            matched_keys = (
-                source.select(*key_cols)
-                .distinct()
-                .join(cand_df.select(*key_cols), key_cols, "left_semi")
+            matched_keys = source.select(*key_cols).join(
+                cand_df.select(*key_cols), key_cols, "left_semi"
             )
             # change files carry logical columns only (no materialized ids)
             cdc_cand = cand_df.select(*schema.fieldNames())
@@ -3434,17 +3433,10 @@ def merge_delta(
         if txn
         else []
     )
-    key_bounds = keys.agg(F.min(key).alias("mn"), F.max(key).alias("mx")).first()
-    # canonicalize to the same representation _file_stats writes: temporal
-    # stats are serialized as isoformat strings in the "stats" payload, so
-    # comparing a native datetime/date against them would raise TypeError
-    kb_mn, kb_mx = key_bounds["mn"], key_bounds["mx"]
-    if hasattr(kb_mn, "isoformat"):
-        kb_mn, kb_mx = _iso_utc_naive(kb_mn), _iso_utc_naive(kb_mx)
     snapshot_files = set(adds)
     new_rel: set[str] = set()  # filled once the new parts are staged
 
-    _dv_validate = _dv_unchanged_validator(adds, set(cand_rel))
+    _dv_validate = _dv_unchanged_validator(adds, set(matched_rel))
 
     def _validate(live: dict[str, dict]) -> None:
         # a concurrent merge-on-read delete changing a rewritten file's DV
@@ -3458,14 +3450,7 @@ def merge_delta(
         for rel, add in live.items():
             if rel in snapshot_files or rel in new_rel:
                 continue
-            stats = json.loads(add.get("stats", "{}") or "{}")
-            mn = stats.get("minValues", {}).get(key)
-            mx = stats.get("maxValues", {}).get(key)
-            if (
-                mn is None
-                or mx is None
-                or (mx >= kb_mn and mn <= kb_mx)
-            ):
+            if _stats_may_overlap(add, key, kb_mn, kb_mx):
                 raise ConcurrentModificationError(
                     f"concurrently appended file {rel} may contain merge keys; "
                     "re-run MERGE against the new snapshot"
@@ -3475,10 +3460,9 @@ def merge_delta(
         # mask the matched rows behind DVs, append the FULL source (updated
         # copies + inserts) — write cost ∝ source size, never ∝ the size of
         # the candidate files
-        if cand_rel:
+        if matched_rel:
             cand_scan = _scan_adds(
-                spark, path, meta, schema, {r: adds[r] for r in cand_rel},
-                with_path=True,
+                spark, path, meta, schema, matched_adds, with_path=True
             )
             masked = cand_scan.join(_bcast(keys), key_cols, "left_semi").select(
                 "__path", "__pos"
@@ -3522,7 +3506,7 @@ def merge_delta(
     new_rel |= {a["path"] for a in new_adds}
     removes = [
         {"remove": {"path": p, "deletionTimestamp": now_ms, "dataChange": True}}
-        for p in sorted(cand_rel)
+        for p in matched_rel
     ]
 
     def _cow_actions(version: int) -> list[dict]:
@@ -3538,9 +3522,9 @@ def merge_delta(
             *cdc_actions,
         ]
 
-    _commit_checked(path, _cow_actions, set(cand_rel), validate=_validate)
+    _commit_checked(path, _cow_actions, set(matched_rel), validate=_validate)
     out = {
-        "rewritten_files": len(cand_rel),
+        "rewritten_files": len(matched_rel),
         "updated": n_updated,
         "inserted": int(n_inserted),
     }

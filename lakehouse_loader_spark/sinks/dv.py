@@ -342,3 +342,30 @@ def descriptor_dv_files(table_path: str, adds: dict[str, dict]) -> set[str]:
             uid = _uuid.UUID(bytes=z85_decode(z))
             out.add(os.path.join(table_path, prefix, dv_file_name(uid.hex)))
     return out
+
+
+def positions_frame(spark, blobs: list[tuple[str, bytes]], path_col: str, pos_col: str):
+    """(data file path, serialized DV) pairs → a DataFrame[path_col,
+    pos_col] of every deleted row position: the read half both formats
+    share (Delta DVs and Iceberg Puffin DV blobs carry the same bytes).
+
+    The driver holds only the compressed blobs; position expansion —
+    O(deleted rows) int64s — runs executor-side, one blob per task:
+    ``spark.range(0, n, 1, n)`` gives partition i the single index i, so
+    there is no local relation to slice and no exchange to run.  The
+    blobs ride in the closure (pyspark broadcasts a closure over 1 MB
+    once instead of shipping it with every task)."""
+
+    def expand(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            for i in pdf["id"]:
+                p, blob = blobs[i]
+                pos = deserialize_positions(blob).astype("int64")
+                yield pd.DataFrame({path_col: p, pos_col: pos})
+
+    n = len(blobs)
+    return spark.range(0, n, 1, n).mapInPandas(
+        expand, f"{path_col} string, {pos_col} long"
+    )

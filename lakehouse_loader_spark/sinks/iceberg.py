@@ -1131,35 +1131,23 @@ def _dv_positions_frame(
 ) -> DataFrame:
     """Deletion-vector entries → a (file_path, pos) DataFrame.  The driver
     reads ONLY the compressed CRC-checked blobs (bytes ~ compressed delete
-    size); position expansion — O(deleted rows) — happens executor-side in
-    mapInPandas, the exact mirror of the Delta DV read path."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    size); positions expand executor-side, one blob per task
+    (``dv.positions_frame``, shared with the Delta DV read path)."""
+    from lakehouse_loader_spark.sinks import dv as DV
     from lakehouse_loader_spark.sinks import puffin as PF
 
-    rows = []
-    for d in dv_entries:
-        ser = PF.read_blob(
-            _abs_file(path, d["file_path"]),
-            int(d["content_offset"]),
-            int(d["content_size_in_bytes"]),
+    blobs = [
+        (
+            d["referenced_data_file"],
+            PF.read_blob(
+                _abs_file(path, d["file_path"]),
+                int(d["content_offset"]),
+                int(d["content_size_in_bytes"]),
+            ),
         )
-        rows.append((d["referenced_data_file"], bytearray(ser)))
-    blobs = spark.createDataFrame(
-        rows, "file_path string, __blob binary"
-    ).repartition(min(len(rows), spark.sparkContext.defaultParallelism))
-
-    def expand(batches):
-        import pandas as pd
-
-        from lakehouse_loader_spark.sinks import dv as _dv
-
-        for pdf in batches:
-            for fp, blob in zip(pdf["file_path"], pdf["__blob"]):
-                pos = _dv.deserialize_positions(bytes(blob))
-                yield pd.DataFrame({"file_path": fp, "pos": pos.astype("int64")})
-
-    return blobs.mapInPandas(expand, "file_path string, pos long")
+        for d in dv_entries
+    ]
+    return DV.positions_frame(spark, blobs, "file_path", "pos")
 
 
 def _apply_pos_deletes(spark: SparkSession, scan: DataFrame, path: str, delete_entries: list[dict]) -> DataFrame:
@@ -3726,17 +3714,16 @@ def equality_delete_iceberg(
     key_frame = keys.select(
         *[F.col(c).cast(table_schema[c].dataType) for c in cols]
     ).distinct()
-    n_distinct = key_frame.count()
-    if n_distinct == 0:
-        return {"delete_files": 0, "key_rows": 0}
-    # ~2M keys per delete file: a handful-of-keys purge yields ONE file,
-    # a billion-key purge still parallelizes the sort
-    parts = max(1, n_distinct // 2_000_000 + (1 if n_distinct % 2_000_000 else 0))
+    # one pass, no pre-count: the distinct's shuffle spreads the keys (AQE
+    # coalesces a handful-of-keys purge into ONE part) and a part splits
+    # at ~2M keys per delete file; the key count comes from the written
+    # footers, and an empty key set stages only empty parts, which the
+    # promotion skips, so nothing commits
     staging = os.path.join(path, f".staging-{uuid.uuid4().hex}")
     (
-        key_frame.repartitionByRange(parts, *cols)
-        .sortWithinPartitions(*cols)
+        key_frame.sortWithinPartitions(*cols)
         .write.option("compression", "snappy")
+        .option("maxRecordsPerFile", 2_000_000)
         .parquet(staging)
     )
     entries, n_keys = _promote_staged_delete_files(
@@ -4949,13 +4936,16 @@ def merge_iceberg(
     joins use the full tuple, and composite keys refuse NULL in any key
     column (an equality join cannot address a NULL component).
 
-    Probe note: manifests record per-column bounds (lower/upper_bounds,
-    spec field-ids 125/128), so files whose key range cannot intersect the
-    source keys' [min,max] are skipped from the probe entirely — the
-    manifest-level analog of Delta's stats-range pruning; the remaining
-    candidates take one broadcast semi-join scan (predicate pushdown still
-    skips row groups via parquet footer stats).  Files from pre-bounds
-    manifests always scan.
+    Two passes over the table, the same shape as ``merge_delta``:
+    manifests record per-column bounds (lower/upper_bounds, spec
+    field-ids 125/128), so files whose key range cannot intersect the
+    source keys' [min,max] (taken in the source's one validation
+    aggregate) are skipped on the driver; files from pre-bounds manifests
+    always scan.  One probe query over the rest (sinks/keys.py
+    ``probe_matches``) returns the files holding a matching live row and
+    the matched key counts; the second pass rewrites those files plus
+    every target of a position delete or DV (the new snapshot drops all
+    delete manifests, so their effect must materialize).
 
     ``delete_col``: optional boolean TOMBSTONE column (the CDC-apply
     shape — merge_postgres_wire / merge_delta contract): per key a flagged
@@ -4976,6 +4966,8 @@ def merge_iceberg(
     from lakehouse_loader_spark.sinks.delta import ConcurrentModificationError
     from lakehouse_loader_spark.sinks.keys import (
         align_merge_source_types,
+        probe_matches,
+        tombstone_flag,
         validate_merge_keys,
     )
     from lakehouse_loader_spark.sinks.staging import local_path
@@ -5029,24 +5021,36 @@ def merge_iceberg(
     # refuse before any write (sinks/keys.py: insert-only merges would
     # otherwise fail only when a reader hits the new file)
     source = align_merge_source_types(source, schema)
-    # shared key contract (sinks/keys.py — one aggregate pass: distinct
-    # count, duplicate refusal, composite-NULL refusal)
-    key_cols, n_source_keys = validate_merge_keys(source, key)
+    # bounds pruning compares the first key column against the manifests'
+    # recorded [min, max]; timestamp keys compare in UTC MICROSECONDS on
+    # both sides (unix_micros on the source, raw encoded micros from the
+    # bounds) — collect()ed datetimes are session-LOCAL-naive while bounds
+    # are UTC, so comparing them directly would misprune by the TZ offset
+    first = key if isinstance(key, str) else next(iter(key), None)
+    key_field = next(
+        (
+            f
+            for f in meta["schemas"][meta["current-schema-id"]]["fields"]
+            if f["name"] == first
+        ),
+        None,
+    )
+    bounded = key_field is not None and isinstance(key_field["type"], str)
+    temporal = bounded and key_field["type"] in ("timestamp", "timestamptz")
+    # shared key contract and source measures (sinks/keys.py — one
+    # aggregate pass: distinct count, duplicate and NULL refusal,
+    # tombstone count, first key column's range over ALL source rows, so
+    # tombstones pull their target files into the rewrite set too)
+    mk = validate_merge_keys(source, key, delete_col, micros=temporal)
+    key_cols, n_source_keys = mk.cols, mk.n_keys
     key = key_cols[0]  # bounds-pruning column (see docstring)
-    # bounds pruning below runs over ALL source keys (tombstones must pull
-    # their target files into the rewrite set too)
-    key_probe_src = source.select(key)
-    if delete_col is not None:
-        flag = F.coalesce(F.col(delete_col).cast("boolean"), F.lit(False))
-        del_keys = source.filter(flag).select(*key_cols).distinct()
-        all_keys = source.filter(F.lit(True)).select(*key_cols).distinct()
-        n_del_total = del_keys.count()
-        source = source.filter(~flag)
-    else:
-        del_keys = None
-        all_keys = None
-        n_del_total = 0
-    source = source.select(*schema.fieldNames())
+    flag = tombstone_flag(delete_col)
+    # source keys are proven unique: the key frames need no distinct.
+    # Tombstone keys take part in the probe and the anti-join exactly like
+    # upsert keys — a file holding only to-be-deleted rows is rewritten too
+    key_frame = source.select(*key_cols, flag.alias("__del"))
+    keys = source.select(*key_cols)
+    source = source.filter(~flag).select(*schema.fieldNames())
     spec = _spec_by_id(meta, meta["default-spec-id"])
     spec_cols = _default_spec_cols(meta)
     by_id = {f["id"]: f for f in meta["schemas"][meta["current-schema-id"]]["fields"]}
@@ -5059,98 +5063,56 @@ def merge_iceberg(
         # _cow_iceberg); row positions attached for path attribution
         return _scan_with_deletes(spark, path, schema, partitioned, files, delete_entries)
 
-    # tombstone keys participate in the probe and the anti-join exactly
-    # like upsert keys — a file holding only to-be-deleted rows must be
-    # rewritten too
-    keys = all_keys if delete_col is not None else source.select(*key_cols).distinct()
-    ups_keys = source.select(*key_cols).distinct()
     if n_source_keys <= DELETE_BROADCAST_MAX:
         # key-frame size is already known (n_source_keys) — broadcast the
         # probe/anti-join side only when it fits; a huge batch upsert
         # degrades to shuffled joins instead of an over-ceiling broadcast
         keys = F.broadcast(keys)
-        ups_keys = F.broadcast(ups_keys)
+        key_frame = F.broadcast(key_frame)
     affected: set[str] = set()
     n_updated = 0
     n_deleted = 0
-    if entries_live:
-        # manifest-bounds pruning (the Delta stats-range analog): only files
-        # whose recorded [min,max] for the key column intersects the source
-        # keys' range can contain matches; bound-less files always scan.
-        # Timestamp keys compare in UTC MICROSECONDS on both sides
-        # (unix_micros on the source, raw encoded micros from the bounds) —
-        # collect()ed datetimes are session-LOCAL-naive while bounds are
-        # UTC, so comparing them directly would misprune by the TZ offset.
-        key_field = next(
-            (
-                f
-                for f in meta["schemas"][meta["current-schema-id"]]["fields"]
-                if f["name"] == key
-            ),
-            None,
-        )
-        probe_entries = entries_live
-        if key_field is not None and isinstance(key_field["type"], str):
-            import struct as _struct
+    if entries_live and mk.lo is not None:
+        # pass 1, the probe: manifest-bounds pruning (the Delta
+        # stats-range analog) keeps only files whose recorded [min,max]
+        # for the key column intersects the source keys' range (bound-less
+        # files always scan); one query over them finds the files holding
+        # a matching live row and the matched key counts
+        import struct as _struct
 
-            temporal = key_field["type"] in ("timestamp", "timestamptz")
-            key_expr = F.expr(f"unix_micros({key})") if temporal else F.col(key)
-            lo_hi = key_probe_src.agg(
-                F.min(key_expr).alias("lo"), F.max(key_expr).alias("hi")
-            ).collect()[0]
+        def bounds_of(d):
+            if temporal:
+                # raw micros, bypassing the datetime decode
+                def raw(kvs):
+                    for kv in kvs or []:
+                        if kv["key"] == key_field["id"]:
+                            return _struct.unpack("<q", bytes(kv["value"]))[0]
+                    return None
 
-            def bounds_of(d):
-                if temporal:
-                    # raw micros, bypassing the datetime decode
-                    def raw(kvs):
-                        for kv in kvs or []:
-                            if kv["key"] == key_field["id"]:
-                                return _struct.unpack("<q", bytes(kv["value"]))[0]
-                        return None
+                return raw(d.get("lower_bounds")), raw(d.get("upper_bounds"))
+            return _entry_bounds(d, key_field["id"], key_field["type"])
 
-                    return raw(d.get("lower_bounds")), raw(d.get("upper_bounds"))
-                return _entry_bounds(d, key_field["id"], key_field["type"])
+        def may_hold(d):
+            if not bounded:
+                return True
+            lo, hi = bounds_of(d)
+            return lo is None or hi is None or (hi >= mk.lo and lo <= mk.hi)
 
-            if lo_hi["lo"] is not None:
-                probe_entries = [
-                    d
-                    for d in entries_live
-                    if (
-                        lambda b: b[0] is None
-                        or b[1] is None
-                        or (b[1] >= lo_hi["lo"] and b[0] <= lo_hi["hi"])
-                    )(bounds_of(d))
-                ]
-        abs_files = [_abs_file(path, d["file_path"]) for d in probe_entries]
-        probe = (
-            (
-                scan(abs_files)
-                .join(keys, key_cols, "inner")
-                .groupBy("__path")
-                .agg(F.countDistinct(*key_cols).alias("nk"))
-                .collect()
+        abs_files = [
+            _abs_file(path, d["file_path"]) for d in entries_live if may_hold(d)
+        ]
+        if abs_files:
+            affected, n_updated, n_deleted = probe_matches(
+                scan(abs_files), key_frame, key_cols
             )
-            if abs_files
-            else []
-        )
-        affected = {r["__path"] for r in probe}
-        if delete_entries:
-            # force delete-target files into the rewrite: the new snapshot
-            # drops every delete manifest, so their effect must materialize.
-            # Intersect with ALL live data files, not the bounds-pruned
-            # probe set — a delete-target file outside the probe range must
-            # still rewrite or its dropped delete files would resurrect rows
-            all_live = {_abs_file(path, d["file_path"]) for d in entries_live}
-            affected |= _delete_target_files(spark, path, delete_entries) & all_live
-        if affected:
-            cand = scan(sorted(affected)).select(*schema.fieldNames())
-            n_updated = ups_keys.join(
-                cand.select(*key_cols), key_cols, "left_semi"
-            ).count()
-            if del_keys is not None:
-                n_deleted = del_keys.join(
-                    cand.select(*key_cols), key_cols, "left_semi"
-                ).count()
+    if delete_entries and entries_live:
+        # force delete-target files into the rewrite: the new snapshot
+        # drops every delete manifest, so their effect must materialize.
+        # Intersect with ALL live data files, not the bounds-pruned probe
+        # set — a delete-target file outside the probe range must still
+        # rewrite or its dropped delete files would resurrect rows
+        all_live = {_abs_file(path, d["file_path"]) for d in entries_live}
+        affected |= _delete_target_files(spark, path, delete_entries) & all_live
 
     if affected:
         if rl:
@@ -5187,7 +5149,7 @@ def merge_iceberg(
         # no candidate files: every source row is an insert; fresh appends
         # need no materialized columns (readers use first_row_id + pos)
         rewritten = source
-    n_inserted = n_source_keys - n_del_total - n_updated
+    n_inserted = n_source_keys - mk.n_tombstones - n_updated
 
     new_entries = _write_data_files(
         rewritten, path, spec_cols or None,

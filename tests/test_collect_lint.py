@@ -32,18 +32,27 @@ BUDGET = {
     # delta.py r10 +1: :3245 is the one-row one-pass MERGE dup-key/count
     # aggregate (folded from two passes, r9 advice); all six sites are
     # one-row aggregates or one-row-per-affected-file commit probes
-    "sinks/delta.py": 5,  # r14 −1: the merge key-contract agg moved to keys.py
+    # delta.py −2: MERGE's stats range-join collect and key-bounds first()
+    # are gone (driver-side stats pruning over the one source aggregate;
+    # the file probe is keys.probe_matches)
+    "sinks/delta.py": 3,  # r14 −1: the merge key-contract agg moved to keys.py
     # iceberg.py r10 +1: the CoW lineage probe (:3088) collects one row per
     # affected FILE (count per __path), bounded by live-file count like
     # every other sink-side commit-metadata collect
-    "sinks/iceberg.py": 6,  # r14 −1: same move
+    # iceberg.py −2: MERGE's key-bounds collect and per-file probe
+    # collect moved into keys.py (one source aggregate, one shared probe)
+    "sinks/iceberg.py": 4,  # r14 −1: same move
     "sinks/incremental.py": 3,
     "sinks/inspect.py": 2,
     "operators/clusters.py": 2,
     # keys.py (r14): the ONE merge-key contract aggregate shared by
     # merge_delta/merge_iceberg — a single one-row agg (count / distinct /
     # has-null) over the merge source, moved here from both sinks
-    "sinks/keys.py": 1,
+    # keys.py +1: probe_matches, the MERGE match probe both formats share,
+    # collects one row per distinct (matched file set, tombstone flag)
+    # pair — two per touched file when no key repeats across files, never
+    # one per key
+    "sinks/keys.py": 2,
     # ann_index.py (r15): load_ivf_index collects the centroid table
     # (n_centroids·dim-bounded constants) and ONE row for the
     # pair-dimension check; load_lsh_index collects its one-row config
