@@ -3,40 +3,43 @@
 Pair lists (from minhash/simhash/cosine dedup) answer "which two docs
 match"; a training-data pipeline needs "which GROUP of docs is one
 document" plus a canonical representative.  That's connected components,
-computed here with distributed min-label propagation: every node repeatedly
-adopts the smallest label among itself and its neighbors.  Each iteration
-is one join + one aggregate (shuffle on node id); components of diameter d
-converge in ≤ d iterations, and d is tiny for dedup graphs (dup clusters
-are near-cliques), so a fixed iteration budget is safe and keeps the plan
-fully declarative — no driver-side convergence polling.
+with component = min node id reachable (a deterministic representative).
 
-Edge sets at or below LOCAL_CC_MAX_EDGES take a driver-side union-find fast
-path instead: the verified pair set is usually orders of magnitude smaller
-than the corpus, and below the gate the iterative loop is pure job-launch +
-shuffle overhead (measured ~1s for a 256-edge graph at sf0.1).  Driver
-state is bounded by the constant gate, never by data scale.
+One function, two regimes chosen by the distinct edge count:
+
+- at or below LOCAL_CC_MAX_EDGES, a driver-side union-find: the verified
+  pair set is usually orders of magnitude smaller than the corpus, and
+  below the gate any distributed loop is pure job-launch + shuffle
+  overhead.  Driver state is bounded by the constant gate, never by data
+  scale.
+- above it, alternating large-star / small-star contraction (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14), which
+  converges in O(log² n) rounds whatever the component diameter — dup
+  cliques and 10⁶-hop chains alike.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Edge-count ceiling for the driver-local union-find fast path.  The
 # VERIFIED near-dup pair set is normally orders of magnitude smaller than
 # the corpus (it lists duplicate relationships, not documents), and below
-# this bound a single-pass union-find beats the distributed loop's 2 jobs +
-# 3 shuffles per propagation round by seconds of fixed overhead.  500k
-# two-column rows is tens of MB of driver state — bounded by this constant,
-# not by data scale; graphs above it take the distributed path unchanged.
+# this bound a single-pass union-find beats the contraction loop's
+# job-launch and shuffle overhead by seconds (measured ~1s for a 256-edge
+# graph at sf0.1).  500k two-column rows is tens of MB of driver state —
+# bounded by this constant, not by data scale; graphs above it take the
+# distributed path.
 LOCAL_CC_MAX_EDGES = 500_000
 
 
 def _local_union_find(edges: DataFrame) -> DataFrame:
-    """Exact connected components of a SMALL edge list (caller enforces the
-    size gate) via driver-side union-find with path halving; component =
-    min node id, matching the distributed contract."""
-    node_type = edges.schema["node"].dataType
+    """Exact connected components of a SMALL (a, b) edge list (caller
+    enforces the size gate) via driver-side union-find with path halving;
+    component = min node id, matching the distributed contract."""
+    node_type = edges.schema["a"].dataType
     parent: dict = {}
 
     def find(x):
@@ -46,7 +49,7 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
         return x
 
     for r in edges.collect():
-        a, b = r["node"], r["nbr"]
+        a, b = r["a"], r["b"]
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -57,8 +60,6 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     for n, r in roots.items():
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
@@ -66,247 +67,125 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(rows, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """(node, component) for every node in ``pairs``; component = min node
-    id reachable (deterministic canonical representative)."""
-    both = F.explode(
-        F.array(
-            F.struct(F.col(src_col).alias("node"), F.col(dst_col).alias("nbr")),
-            F.struct(F.col(dst_col).alias("node"), F.col(src_col).alias("nbr")),
-        )
-    )
-    edges = (
-        # explode to both orientations in ONE pass over pairs — a unionAll
-        # of two selects would reference (and recompute) the expensive
-        # upstream pair plan twice
-        pairs.select(both.alias("e"))
-        .select("e.node", "e.nbr")
-        .distinct()
-        .persist()  # referenced once per iteration — without this, the
-        # upstream pair computation (minhash etc.) re-runs every round
-        # (AQE coalesces the per-iteration shuffles down to the graph's
-        # actual size, so no manual repartition-by-count is needed)
-    )
-    # fill the cache with ONE upstream pass before the loop: the first
-    # iteration's plan references edges through several subtrees, and a
-    # lazy persist materializes concurrently per subtree — the expensive
-    # pair computation would run 3-4× inside the first checkpoint
-    n_edges = edges.count()
-    if n_edges <= LOCAL_CC_MAX_EDGES:
-        # small-graph fast path (measured: the distributed loop costs ~1s of
-        # job-launch + shuffle overhead even on a 256-edge graph at sf0.1)
-        try:
-            return _local_union_find(edges)
-        finally:
-            edges.unpersist()
-    # seed labels with round 1 fused in: label₀ = min(node, min neighbor) —
-    # the same groupBy that would otherwise only enumerate distinct nodes
-    # does the first propagation step for free
-    labels = (
-        edges.groupBy("node")
+# Deterministic block reclamation for the iterative checkpoints: each
+# round's eager localCheckpoint persists a new RDD that SUPERSEDES the
+# previous round's, but nothing unpersists the old one until driver GC
+# happens to drop the py4j reference, so a long session accumulates dead
+# blocks.  Track the persistent-RDD ids each checkpoint creates and free
+# superseded generations explicitly.  (The id-diff is session-global: this
+# operator assumes no concurrent thread persists RDDs mid-call — true for
+# the engine's one-query-at-a-time execution.)
+def _persistent_ids(jsc) -> set[int]:
+    return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _free(jsc, ids: set[int]) -> None:
+    rdds = jsc.getPersistentRDDs()
+    for rid in ids:
+        jrdd = rdds.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)
+
+
+def _checkpoint(df: DataFrame, jsc) -> tuple[DataFrame, set[int]]:
+    """Eager localCheckpoint (O(1) plan size per round) plus the ids of the
+    persistent RDDs it created."""
+    before = _persistent_ids(jsc)
+    df = df.localCheckpoint(eager=True)
+    return df, _persistent_ids(jsc) - before
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Every node's strictly-LARGER neighbors re-attach to its local minimum
+    m = min(Γ(u) ∪ {u}): emit (v, m) for v ∈ Γ(u), v > u."""
+    sym = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
+                F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
+            )
+        ).alias("e")
+    ).select("e.node", "e.nbr")
+    mins = (
+        sym.groupBy("node")
         .agg(F.min("nbr").alias("mn"))
-        .select("node", F.least("node", "mn").alias("label"))
+        .select("node", F.least("node", "mn").alias("m"))
+    )
+    # no distinct here: duplicate edges change no min() downstream, and
+    # small_star's terminal distinct dedups the round's output — saving
+    # one shuffle per round
+    return (
+        sym.join(mins, "node")
+        .filter(F.col("nbr") > F.col("node"))
+        .select(F.col("nbr").alias("a"), F.col("m").alias("b"))
+        .filter(F.col("a") != F.col("b"))
     )
 
-    # Deterministic block reclamation for the iterative checkpoints: each
-    # round's eager localCheckpoint persists a new RDD that SUPERSEDES the
-    # previous round's — but nothing unpersists the old one until driver GC
-    # happens to drop the py4j reference, so a long session accumulates
-    # dead blocks (and GC pauses get charged to whatever runs next).  Track
-    # the persistent-RDD ids each checkpoint creates and free the
-    # superseded generation explicitly.  (The id-diff is session-global:
-    # this operator assumes no concurrent thread persists RDDs mid-call —
-    # true for the engine's one-query-at-a-time execution.)
-    jsc = edges.sparkSession.sparkContext._jsc
 
-    def _persistent_ids() -> set[int]:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        rdds = jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = rdds.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-
-    prev_ckpt_ids: set[int] = set()
-    # every checkpoint generation currently persisted — the failure path
-    # frees ALL of these (covering a crash between creating a checkpoint
-    # and retiring its predecessor, when two generations are live at once)
-    live_ckpt_ids: set[int] = set()
-    converged = False
-    try:
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges.join(labels.withColumnRenamed("node", "nbr"), "nbr")
-                .groupBy("node")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            new_labels = labels.join(neighbor_min, "node", "left").select(
-                "node",
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
-                (F.coalesce("nbr_label", "label") < F.col("label")).alias("__changed"),
-            )
-            # each iteration references `labels` twice → without lineage
-            # truncation the logical plan doubles per round (2^k nodes);
-            # an eager localCheckpoint keeps every iteration O(1) plan size —
-            # the standard shape for iterative DataFrame algorithms
-            before = _persistent_ids()
-            new_labels = new_labels.localCheckpoint(eager=True)
-            new_ids = _persistent_ids() - before
-            live_ckpt_ids = prev_ckpt_ids | new_ids
-            changed = new_labels.filter("__changed").count()
-            labels = new_labels.drop("__changed")
-            # the previous round's checkpoint is now unreachable — free it
-            _free(prev_ckpt_ids)
-            prev_ckpt_ids = new_ids
-            live_ckpt_ids = new_ids
-            if changed == 0:  # fixpoint: labels stable ⇒ components final
-                converged = True
-                break
-    finally:
-        # on ANY exit the edge cache is done; on a FAILED exit every live
-        # checkpoint generation is also unreachable — reclaim them (the
-        # success path must keep its final checkpoint alive: the returned
-        # frame reads it)
-        edges.unpersist()
-        if not converged:
-            _free(live_ckpt_ids)
-    if not converged:
-        # budget exhausted without a fixpoint: silent partial components
-        # would split real duplicate groups — fail loudly instead
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; raise max_iterations (component diameter exceeds "
-            "the budget)"
-        )
-    return labels.select(F.col("node"), F.col("label").alias("component"))
+def _small_star(e: DataFrame) -> DataFrame:
+    """Orient edges high→low; every node's smaller neighbors (and the node
+    itself) attach to m = min(Γ₋(u) ∪ {u}): emit (v, m)."""
+    hi_lo = e.select(F.greatest("a", "b").alias("node"), F.least("a", "b").alias("nbr"))
+    mins = hi_lo.groupBy("node").agg(F.min("nbr").alias("m"))
+    re_attach = (
+        hi_lo.join(mins, "node")
+        .filter(F.col("nbr") != F.col("m"))
+        .select(F.col("nbr").alias("a"), F.col("m").alias("b"))
+    )
+    self_attach = mins.select(F.col("node").alias("a"), F.col("m").alias("b"))
+    return (
+        re_attach.unionByName(self_attach)
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
 
 
-def connected_components_star(
+def connected_components(
     pairs: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
     max_iterations: int = 30,
 ) -> DataFrame:
-    """(node, component) via alternating large-star / small-star rounds —
-    the two-phase algorithm of Kiveris et al., "Connected Components in
-    MapReduce and Beyond" (SoCC'14).  Same output contract as
-    ``connected_components``.
+    """(node, component) for every node in ``pairs``; component = min node
+    id reachable (deterministic canonical representative), with the
+    node column's type.
 
-    When to use which: min-label propagation needs one round per unit of
-    component DIAMETER — ideal for dedup graphs (near-cliques, d ≤ 3-4),
-    pathological for chain-shaped graphs (a 10⁶-hop path needs 10⁶
-    rounds).  Star contraction converges in O(log² n) rounds regardless of
-    diameter, at the cost of reshaping the edge set each round (two
-    shuffles/round vs one).  Default stays min-label for dup clusters;
-    reach for this variant when components can be long and thin (citation
-    chains, session graphs, web link paths).
+    Self-pairs ``(x, x)`` and pairs with a NULL endpoint are dropped before
+    either regime runs, so a node that appears only in such pairs gets no
+    row (callers treat docs without a row as singletons).
 
-    Each round:
-      large-star: every node's strictly-LARGER neighbors re-attach to its
-        local minimum m = min(Γ(u) ∪ {u}) — emit (v, m) for v ∈ Γ(u), v>u
-      small-star: orient edges high→low; every node's smaller neighbors
-        (and the node) attach to m = min(Γ₋(u) ∪ {u}) — emit (v, m)
-    Both steps preserve connectivity; the fixpoint is a star forest where
-    every node points at its component minimum.  Convergence is detected
-    with a constant-size fingerprint (edge count + hash sum) instead of a
-    subtract — one tiny aggregate, no extra shuffle of the edge set."""
-    spark = pairs.sparkSession
+    Large graphs run large-star then small-star per round; both steps
+    preserve connectivity, and the fixpoint is a star forest where every
+    node points at its component minimum.  Convergence is detected with a
+    constant-size fingerprint (edge count + hash xor) instead of a
+    subtract — one tiny aggregate, no extra shuffle of the edge set.  A
+    budget exhausted without a fixpoint raises: silent partial components
+    would split real duplicate groups."""
+    jsc = pairs.sparkSession.sparkContext._jsc
     edges = (
-        pairs.select(
-            F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
+        pairs.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .filter(F.col("a") != F.col("b"))  # NULL-safe: NULL != x drops too
         .distinct()
     )
-
-    jsc = spark.sparkContext._jsc
-
-    def _persistent_ids() -> set[int]:
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(ids: set[int]) -> None:
-        rdds = jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = rdds.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("node"), F.col("b").alias("nbr")),
-                    F.struct(F.col("b").alias("node"), F.col("a").alias("nbr")),
-                )
-            ).alias("e")
-        ).select("e.node", "e.nbr")
-        mins = (
-            sym.groupBy("node")
-            .agg(F.min("nbr").alias("mn"))
-            .select("node", F.least("node", "mn").alias("m"))
-        )
-        # no distinct here: duplicate edges change no min() downstream, and
-        # small_star's terminal distinct dedups the round's output — saving
-        # one shuffle per round
-        return (
-            sym.join(mins, "node")
-            .filter(F.col("nbr") > F.col("node"))
-            .select(F.col("nbr").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        hi_lo = e.select(
-            F.greatest("a", "b").alias("node"), F.least("a", "b").alias("nbr")
-        )
-        mins = hi_lo.groupBy("node").agg(F.min("nbr").alias("m"))
-        re_attach = (
-            hi_lo.join(mins, "node")
-            .filter(F.col("nbr") != F.col("m"))
-            .select(F.col("nbr").alias("a"), F.col("m").alias("b"))
-        )
-        self_attach = mins.select(F.col("node").alias("a"), F.col("m").alias("b"))
-        return (
-            re_attach.unionByName(self_attach)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    prev_ckpt_ids: set[int] = set()
+    # every checkpoint generation currently persisted: the failure path
+    # frees ALL of them (covering a crash between creating a checkpoint and
+    # retiring its predecessor, when two generations are live at once)
     live_ckpt_ids: set[int] = set()
     prev_fp: tuple[int, int] | None = None
     converged = False
     try:
-        # materialize the INITIAL edge set before the loop: round 1's
-        # large-star references it from two subtrees (the min aggregate and
-        # the re-attach join), and without a checkpoint each subtree re-runs
-        # the full upstream pair computation (minhash/shingle joins — the
-        # expensive part) before any contraction happens
-        before = _persistent_ids()
-        edges = edges.localCheckpoint(eager=True)
-        prev_ckpt_ids = _persistent_ids() - before
-        live_ckpt_ids = set(prev_ckpt_ids)
+        # materialize the INITIAL edge set once, before anything reads it:
+        # the count, the union-find collect and round 1's two large-star
+        # subtrees would each re-run the upstream pair computation
+        # (minhash/shingle joins — the expensive part) otherwise
+        edges, live_ckpt_ids = _checkpoint(edges, jsc)
         if edges.count() <= LOCAL_CC_MAX_EDGES:
-            # same size-gated fast path as connected_components: union-find
-            # needs one orientation only.  The finally block reclaims the
-            # edge checkpoint (converged stays False → _free runs; the
-            # returned frame is driver-built and doesn't read it).
-            return _local_union_find(
-                edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-            )
+            # the returned frame is driver-built and doesn't read the edge
+            # checkpoint; converged stays False, so finally reclaims it
+            return _local_union_find(edges)
         for _ in range(max_iterations):
-            new_edges = small_star(large_star(edges))
-            before = _persistent_ids()
-            new_edges = new_edges.localCheckpoint(eager=True)  # O(1) plan/round
-            new_ids = _persistent_ids() - before
-            live_ckpt_ids = prev_ckpt_ids | new_ids
+            new_edges, new_ids = _checkpoint(_small_star(_large_star(edges)), jsc)
+            live_ckpt_ids |= new_ids
             row = new_edges.agg(
                 F.count(F.lit(1)).alias("n"),
                 # xor-fold of per-edge hashes: order-independent and cannot
@@ -315,19 +194,21 @@ def connected_components_star(
             ).first()
             fp = (int(row["n"]), int(row["h"]))
             edges = new_edges
-            _free(prev_ckpt_ids)
-            prev_ckpt_ids = new_ids
+            # the previous round's checkpoint is now unreachable — free it
+            _free(jsc, live_ckpt_ids - new_ids)
             live_ckpt_ids = new_ids
             if fp == prev_fp:  # star-forest fixpoint: (v, root) edges only
                 converged = True
                 break
             prev_fp = fp
     finally:
+        # the success path keeps its final checkpoint alive: the returned
+        # frame reads it
         if not converged:
-            _free(live_ckpt_ids)
+            _free(jsc, live_ckpt_ids)
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iterations} "
+            f"connected_components did not converge in {max_iterations} "
             "iterations; raise max_iterations"
         )
     # converged edge set is a star forest: every non-root has edges to its
@@ -344,21 +225,13 @@ def connected_components_star(
     return members.unionByName(roots)
 
 
-def dedup_clusters(pairs: DataFrame, algorithm: str = "min_label") -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Cluster summary per component: canonical (min) doc id and member
     count.  Docs not in any pair are singletons and excluded (they keep
-    themselves).  ``algorithm``: "min_label" (default; one shuffle/round,
-    rounds = component diameter — right for near-clique dup graphs) or
-    "two_phase_star" (O(log² n) rounds regardless of diameter — right for
-    long, thin components)."""
-    if algorithm == "min_label":
-        cc = connected_components(pairs)
-    elif algorithm == "two_phase_star":
-        cc = connected_components_star(pairs)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    themselves)."""
     return (
-        cc.groupBy("component")
+        connected_components(pairs)
+        .groupBy("component")
         .agg(F.count(F.lit(1)).alias("n_members"), F.min("node").alias("canonical_doc"))
         .select(
             F.col("component").cast("bigint").alias("cluster_id"),

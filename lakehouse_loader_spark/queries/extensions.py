@@ -1299,7 +1299,8 @@ def agg_distinct_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Dedup cluster formation: connected components over near-dup pairs
-# (iterative min-label propagation vs a recursive-CTE oracle)
+# (star contraction behind a small-graph union-find, vs a recursive-CTE
+# oracle)
 # --------------------------------------------------------------------------
 @query(
     "dedup_clusters",
@@ -1321,10 +1322,11 @@ def agg_distinct_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate groups: minhash near-dup pairs → connected components via
-    distributed min-label propagation (operators/clusters.py) → one row per
-    cluster with canonical doc + member count.  The oracle computes the
-    same components with a recursive CTE."""
+    """Duplicate groups: minhash near-dup pairs → connected components
+    (operators/clusters.py: driver union-find for small graphs,
+    large/small-star contraction above the gate) → one row per cluster
+    with canonical doc + member count.  The oracle computes the same
+    components with a recursive CTE."""
     from lakehouse_loader_spark.operators.clusters import dedup_clusters as _dc
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1354,19 +1356,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same duplicate groups, but components form via alternating
-    large-star/small-star contraction (Kiveris et al., SoCC'14) — the
-    diameter-independent O(log² n)-round variant for long, thin components
-    where min-label propagation (rounds = diameter) can't finish.  Must
-    agree exactly with `dedup_clusters` (and does: same recursive-CTE
-    oracle)."""
+    """Same duplicate groups through the same operator as
+    `dedup_clusters`: operators/clusters.py has one components
+    algorithm (large/small-star contraction, Kiveris et al., SoCC'14,
+    behind the small-graph union-find).  Kept as a declared path with its
+    own recursive-CTE oracle so the declared query set stays fixed."""
     from lakehouse_loader_spark.operators.clusters import dedup_clusters as _dc
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_near_duplicates(
         docs, threshold=0.8, **_staged_minhash_inputs(spark, sf_dir)
     )
-    return _dc(pairs, algorithm="two_phase_star")
+    return _dc(pairs)
 
 
 # --------------------------------------------------------------------------

@@ -115,9 +115,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe 80/10/10 split: near-duplicate documents must never
     straddle the train/eval boundary (a train copy of a test document is
     contamination), so the split key is the document's NEAR-DUP CLUSTER
-    id — minhash pairs at j ≥ 0.8 → connected components (min-label),
-    singletons their own cluster — and every member inherits its
-    cluster's assignment.  Deterministic (hash split on the cluster id,
+    id — minhash pairs at j ≥ 0.8 → connected components (cluster id =
+    min member id), singletons their own cluster — and every member
+    inherits its cluster's assignment.  Deterministic (hash split on the cluster id,
     same md5 pipeline as split_train_val_test): adding documents later
     never moves an existing cluster between splits.
 

@@ -9,8 +9,9 @@ the budget here (with a line in the table's rationale).
 
 The audit (r9): cli.py prints query output (user-facing, explicitly
 bounded by --limit); sinks/* collect commit METADATA (one row per data
-file / manifest, never data rows); operators/clusters.py:48 is the gated
-LOCAL_CC_MAX_EDGES small-graph path, :315 a 2-long fingerprint aggregate;
+file / manifest, never data rows); operators/clusters.py's two are the
+union-find collect() of the gated LOCAL_CC_MAX_EDGES small-graph path and
+the star-contraction round's 2-long fingerprint first();
 operators/graph.py:100 the optional tol early-exit's 1-row L1 aggregate;
 operators/similarity.py probes vector dim / k centroids (constant-size);
 sources/pgwire.py:~1075 a 1-row written-count aggregate;

@@ -180,105 +180,111 @@ def test_connected_components_chain_and_star(spark):
     assert clusters == {1: (1, 5), 10: (10, 4), 20: (20, 2)}
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    jsc = spark.sparkContext._jsc
+    return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+
 def test_connected_components_long_chain_needs_iterations(spark, monkeypatch):
+    """A too-small round budget fails loudly and reclaims every checkpoint
+    generation it made; a converged run keeps only the one generation its
+    result reads."""
     from lakehouse_loader_spark.operators import clusters as C
 
-    # force the DISTRIBUTED loop (the size gate would otherwise solve a
-    # 12-edge graph exactly on the driver, budget-free)
+    # force the DISTRIBUTED loop (the size gate would otherwise solve the
+    # chain exactly on the driver, budget-free)
     monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", -1)
-    n = 12
+    n = 40
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], ["doc_a", "doc_b"])
-    # diameter n needs n change-iterations + 1 fixpoint-confirm iteration
-    cc = {
-        r.node: r.component
-        for r in C.connected_components(pairs, max_iterations=n + 1).collect()
-    }
-    assert set(cc.values()) == {0}
+    before = _persistent_rdd_ids(spark)
     # too-small budget must fail loudly, never return split components
-    import pytest as _pytest
+    with pytest.raises(RuntimeError, match="did not converge"):
+        C.connected_components(pairs, max_iterations=2).collect()
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"failed run left persisted RDDs behind: {leaked}"
 
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        C.connected_components(pairs, max_iterations=3).collect()
-
-
-def test_local_union_find_matches_distributed(spark, monkeypatch):
-    """The size-gated driver union-find fast path must be exactly
-    interchangeable with both distributed algorithms — same (node,
-    component) map, component = min member id."""
-    import random
-
-    from lakehouse_loader_spark.operators import clusters as C
-
-    rng = random.Random(11)
-    nodes = list(range(300))
-    edge_list = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(220)]
-    edge_list = [(a, b) for a, b in edge_list if a != b]
-    pairs = spark.createDataFrame(edge_list, ["doc_a", "doc_b"])
-
-    fast = sorted(
-        (r.node, r.component) for r in C.connected_components(pairs).collect()
-    )
-    monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", -1)
-    dist = sorted(
-        (r.node, r.component) for r in C.connected_components(pairs).collect()
-    )
-    dist_star = sorted(
-        (r.node, r.component) for r in C.connected_components_star(pairs).collect()
-    )
-    assert fast == dist == dist_star
+    before = _persistent_rdd_ids(spark)
+    cc = {r.node: r.component for r in C.connected_components(pairs).collect()}
+    assert len(cc) == n + 1 and set(cc.values()) == {0}
+    kept = _persistent_rdd_ids(spark) - before
+    assert len(kept) <= 1, f"converged run kept {len(kept)} checkpoint generations"
 
 
-@pytest.mark.slow  # high-diameter synthetic graph (~35s) — slow tier (r16)
 def test_star_contraction_handles_high_diameter(spark, monkeypatch):
-    """A path graph of length ≫ the min-label budget: star contraction must
-    converge in O(log² n) rounds where min-label propagation (one round per
-    diameter unit) exhausts its budget — the scale property the variant
-    exists for (VERDICT r04 design headroom)."""
-    import pytest as _pytest
-
+    """A path graph far longer than the round budget: star contraction
+    converges in O(log² n) rounds, not one round per diameter unit."""
     from lakehouse_loader_spark.operators import clusters as C
 
-    monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", -1)  # exercise the loops
-    n = 200  # diameter 200 ≫ min-label's default 25-iteration budget
+    monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", -1)  # exercise the loop
+    n = 200  # diameter 200 ≫ the default 30-round budget
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n)], ["doc_a", "doc_b"])
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        C.connected_components(pairs).collect()
-    cc = {r.node: r.component for r in C.connected_components_star(pairs).collect()}
+    cc = {r.node: r.component for r in C.connected_components(pairs).collect()}
     assert len(cc) == n + 1
     assert set(cc.values()) == {0}
 
 
-def test_star_contraction_matches_min_label(spark):
-    """Both algorithms must produce identical (node, component) maps on a
-    seeded random graph (components small enough for min-label)."""
+def _bfs_components(edge_list) -> dict:
+    """Literal reference: node -> min node id of its BFS-reachable set."""
+    from collections import defaultdict, deque
+
+    adj = defaultdict(set)
+    for a, b in edge_list:
+        if a is not None and b is not None and a != b:
+            adj[a].add(b)
+            adj[b].add(a)
+    comp: dict = {}
+    for s in adj:
+        if s in comp:
+            continue
+        seen, queue = {s}, deque([s])
+        while queue:
+            for v in adj[queue.popleft()] - seen:
+                seen.add(v)
+                queue.append(v)
+        for v in seen:
+            comp[v] = min(seen)
+    return comp
+
+
+@pytest.mark.parametrize("regime", ["union_find", "distributed"])
+def test_connected_components_match_bfs_reference(spark, monkeypatch, regime):
+    """Both regimes (the size-gated driver union-find and star contraction)
+    return exactly a BFS reference's (node, component) map, component =
+    min member id, on one disjoint union of: two seeded multi-component
+    random graphs, a star, and a path longer than 25 hops.  Self-pairs and
+    NULL endpoints are dropped.  dedup_clusters agrees as (cluster_id,
+    canonical_doc, n_members)."""
     import random
 
-    from lakehouse_loader_spark.operators.clusters import (
-        connected_components,
-        connected_components_star,
-        dedup_clusters,
-    )
+    from lakehouse_loader_spark.operators import clusters as C
 
-    rng = random.Random(7)
-    nodes = list(range(120))
-    pairs = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(90)
-    ]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame(pairs, ["doc_a", "doc_b"])
-    a = {r.node: r.component for r in connected_components(df).collect()}
-    b = {r.node: r.component for r in connected_components_star(df).collect()}
-    assert a == b
-    # and through the public dedup_clusters API
-    c1 = {
+    edge_list = []
+    for seed, n_nodes, n_edges, offset in ((7, 120, 90, 0), (11, 300, 220, 1000)):
+        rng = random.Random(seed)
+        edge_list += [
+            (offset + rng.randrange(n_nodes), offset + rng.randrange(n_nodes))
+            for _ in range(n_edges)
+        ]
+    edge_list += [(2000, 2000 + k) for k in range(1, 31)]  # star, hub 2000
+    edge_list += [(3000 + i, 3001 + i) for i in range(40)]  # 40-hop path
+    edge_list += [(4000, 4000), (4001, None), (None, 4002)]  # dropped
+    want = _bfs_components(edge_list)
+    assert 4000 not in want and len(set(want.values())) > 10
+
+    if regime == "distributed":
+        monkeypatch.setattr(C, "LOCAL_CC_MAX_EDGES", -1)
+    pairs = spark.createDataFrame(edge_list, "doc_a BIGINT, doc_b BIGINT")
+    got = {r.node: r.component for r in C.connected_components(pairs).collect()}
+    assert got == want
+
+    members: dict = {}
+    for node, comp in want.items():
+        members.setdefault(comp, []).append(node)
+    clusters = {
         (r.cluster_id, r.canonical_doc, r.n_members)
-        for r in dedup_clusters(df).collect()
+        for r in C.dedup_clusters(pairs).collect()
     }
-    c2 = {
-        (r.cluster_id, r.canonical_doc, r.n_members)
-        for r in dedup_clusters(df, algorithm="two_phase_star").collect()
-    }
-    assert c1 == c2
+    assert clusters == {(c, min(ns), len(ns)) for c, ns in members.items()}
 
 
 def test_asof_join_picks_latest_row_atomically(spark):
@@ -411,15 +417,10 @@ def test_dedup_queries_leave_no_cache_residue(spark):
     from tests.conftest import SF_SMOKE
 
     _ensure_loaded()
-    jsc = spark.sparkContext._jsc
-
-    def persistent_ids():
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
     for key in ("dedup_ngram_jaccard", "dedup_incremental", "dedup_minhash"):
-        before = persistent_ids()
+        before = _persistent_rdd_ids(spark)
         REGISTRY[key].fn(spark, SF_SMOKE).collect()
-        leaked = persistent_ids() - before
+        leaked = _persistent_rdd_ids(spark) - before
         assert not leaked, f"{key} left persisted RDDs behind: {leaked}"
 
 

@@ -491,7 +491,7 @@ def test_weighted_sample_prefers_heavy_rows_and_is_stable(spark):
 def test_leakage_safe_split_keeps_neardups_together(spark):
     """The defining invariant: every minhash near-dup pair (j >= 0.8)
     lands in ONE split — a train copy of a test document would be
-    contamination.  Also: cluster ids are the component min-label,
+    contamination.  Also: cluster ids are the component's min member id,
     singletons are their own cluster, and the assignment is a pure
     function (re-running moves nothing)."""
     from lakehouse_loader_spark.catalog import load_table
@@ -511,7 +511,7 @@ def test_leakage_safe_split_keeps_neardups_together(spark):
         cb, sb = out[p["doc_b"]]
         assert ca == cb, f"near-dups {p['doc_a']},{p['doc_b']} in different clusters"
         assert sa == sb, f"near-dups {p['doc_a']},{p['doc_b']} straddle splits"
-        assert ca <= min(p["doc_a"], p["doc_b"])  # min-label
+        assert ca <= min(p["doc_a"], p["doc_b"])  # cluster id = min member id
     # determinism: second run identical
     out2 = {r["doc_id"]: (r["cluster_id"], r["split"]) for r in fn(spark, SF_ORACLE).collect()}
     assert out2 == out
