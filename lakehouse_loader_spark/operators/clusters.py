@@ -10,8 +10,11 @@ One function, two regimes chosen by the distinct edge count:
 - at or below LOCAL_CC_MAX_EDGES, a driver-side union-find: the verified
   pair set is usually orders of magnitude smaller than the corpus, and
   below the gate any distributed loop is pure job-launch + shuffle
-  overhead.  Driver state is bounded by the constant gate, never by data
-  scale.
+  overhead.  The edges are collected as Arrow and the result is an
+  Arrow-built frame (a LocalTableScan: no job, no Python worker when the
+  caller's action runs).  Driver state is bounded by the constant gate,
+  never by data scale — the same shape as PageRank's LOCAL_PR_MAX_EDGES
+  driver regime (operators/graph.py).
 - above it, alternating large-star / small-star contraction (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14), which
   converges in O(log² n) rounds whatever the component diameter — dup
@@ -38,8 +41,12 @@ LOCAL_CC_MAX_EDGES = 500_000
 def _local_union_find(edges: DataFrame) -> DataFrame:
     """Exact connected components of a SMALL (a, b) edge list (caller
     enforces the size gate) via driver-side union-find with path halving;
-    component = min node id, matching the distributed contract."""
-    node_type = edges.schema["a"].dataType
+    component = min node id, matching the distributed contract.  The
+    edges arrive through ``toArrow()`` and the result is an Arrow-built
+    frame, which plans as a LocalTableScan: a list-built frame plans as a
+    PythonRDD scan that starts Python workers on every action."""
+    import pyarrow as pa
+
     parent: dict = {}
 
     def find(x):
@@ -48,8 +55,8 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in edges.collect():
-        a, b = r["a"], r["b"]
+    tbl = edges.toArrow()
+    for a, b in zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -60,11 +67,18 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     for n, r in roots.items():
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
+    node_type = edges.schema["a"].dataType
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
-    rows = [(n, comp_min[r]) for n, r in roots.items()]
-    return edges.sparkSession.createDataFrame(rows, schema)
+    col_type = tbl.schema.field("a").type
+    out = pa.table(
+        {
+            "node": pa.array(list(roots), col_type),
+            "component": pa.array([comp_min[r] for r in roots.values()], col_type),
+        }
+    )
+    return edges.sparkSession.createDataFrame(out, schema)
 
 
 # Deterministic block reclamation for the iterative checkpoints: each

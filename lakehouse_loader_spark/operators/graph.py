@@ -1,24 +1,35 @@
-"""Graph ranking: PageRank by power iteration, fully declarative.
+"""Graph ranking: PageRank by power iteration.
 
 The companion to connected components (operators/clusters.py): components
 answer "which docs are one group", PageRank answers "which nodes matter" —
 the signal crawl pipelines use for URL/domain prioritization (the original
 use) and dedup pipelines use to pick cluster representatives.
 
-Spark shape: each iteration is one join (ranks ⋈ out-degree-normalized
-edges, shuffled on src) + one aggregate (shuffled on dst) — the classic
-Pregel superstep expressed as DataFrames, so Catalyst/AQE pick the
-join strategy (edges shuffle-join at scale, broadcast when tiny).  Driver
-state is a loop counter; rank state lives in the cluster.
+One function, two regimes chosen by the distinct edge count (the shape of
+clusters.py's LOCAL_CC_MAX_EDGES gate):
+
+- at or below LOCAL_PR_MAX_EDGES, the driver regime: the distinct edge
+  list is collected once as Arrow, node ids map to dense indices with
+  pyarrow, and each superstep is one numpy ``bincount`` followed by
+  Spark's own ``round(double, scale)``.  Below the gate every distributed
+  superstep is job-launch cost (sf0.01, 97k edges: 3.1s and 15 jobs per
+  warm call; PERF_NOTES "PageRank: a driver regime").  Driver state is
+  bounded by the constant gate, never by data scale.
+- above it, the distributed regime: each superstep is one join (ranks ⋈
+  out-degree-normalized edges, shuffled on src) + one aggregate (shuffled
+  on dst) — the Pregel superstep expressed as DataFrames, so Catalyst/AQE
+  pick the join strategy.  Driver state is a loop counter; rank state
+  lives in the cluster.
 
 Determinism: double summation order differs across partitionings/engines,
-so each iteration's rank is rounded to ``scale`` decimals — both engines
-re-synchronize to identical inputs every superstep and the result is
-bit-stable at any parallelism (the float discipline of
-queries/__init__.py applied per-iteration instead of per-result).
+so each iteration's rank is rounded to ``scale`` decimals — both regimes
+and the DuckDB twin re-synchronize to identical inputs every superstep and
+the result is bit-stable at any parallelism (the float discipline of
+queries/__init__.py applied per-iteration instead of per-result).  The
+driver regime rounds with :func:`spark_round`, Spark's exact semantics.
 
-At 100 TB: iterations compose lineage, but MEASURED (r9,
-tools/probe_pagerank_iters.py) the un-checkpointed chain stays ~40ms per
+At 100 TB (distributed regime): iterations compose lineage, but MEASURED
+(PERF_NOTES r9, 800k-edge graph) the un-checkpointed chain stays ~40ms per
 marginal superstep 50 deep — whole-stage codegen plus the
 scratch-materialized edge table keep deep lineage cheap, and
 localCheckpoint-every-5 costs 6x in materialization.  ``checkpoint_every``
@@ -30,30 +41,31 @@ Page 1998, §2.1), and ``tol`` gives a measured L1 early exit.
 
 from __future__ import annotations
 
+import decimal
+
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DAMPING = 0.85
 
+# Edge-count ceiling for the driver regime.  Driver state is ~60 bytes per
+# edge for long ids (two id columns, their dense indices, 1/deg weights,
+# one contribution vector; string ids add their bytes), so 2M edges is
+# ~120-250 MB of driver memory — bounded by this constant, not by data
+# scale.  It covers sf0.1's 1.17M-edge trade graph; larger graphs take the
+# distributed regime.
+LOCAL_PR_MAX_EDGES = 2_000_000
 
-def build_norm(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """The normalized adjacency every superstep scans: (src, dst, 1/deg)
-    contribution edges plus zero-weight SELF-edges — lazy; callers
-    materialize it (``pagerank`` to per-call scratch, queries/staging.py
-    to a session-staged corpus artifact).
 
-    The DISTINCT EDGE LIST is materialized first (r11): deg, the
-    self-edge node set and the contribution join all consume it, and
-    without the scratch the whole upstream edge derivation (often a
-    fact-table join + distinct) re-executes once per consumer —
-    per-branch column pruning defeats ReusedExchange (see
-    materialize_shared).  Measured at sf0.1 this halves the norm-build
-    wall (6.7s → ~3.5s warm).
+def build_norm(e: DataFrame) -> DataFrame:
+    """The normalized adjacency every distributed superstep scans: (src,
+    dst, 1/deg) contribution edges plus zero-weight SELF-edges, over an
+    already-distinct, cheap-to-rescan (src, dst) edge frame (a scratch or
+    staged parquet scan) — lazy; callers materialize it (``pagerank`` to
+    per-call scratch, queries/staging.py to a session-staged corpus
+    artifact).
 
     Zero-weight SELF-edges keep every node present in each superstep's
     dst-keyed aggregate with exactly its true mass (x + 0.0 == x in IEEE
@@ -62,12 +74,6 @@ def build_norm(
     a second shuffle per superstep for the left join.  deg IS the
     distinct src set (out-degree ≥ 1 contract), so the self-edge branch
     needs no separate nodes distinct."""
-    from lakehouse_loader_spark.operators import materialize_shared
-
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not assume_distinct:
-        e = e.distinct()
-    e = materialize_shared(e, label="pagerank-edges")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     return (
         e.join(deg, "src")
@@ -92,26 +98,35 @@ def pagerank(
     n_nodes: int | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list (``src``/``dst``
-    string columns).  Every node must have out-degree ≥ 1 (undirect the
-    graph first if it has sinks — the callers here do); rank mass is then
-    conserved at Σ=N up to rounding.  The node set is the distinct ``src``
-    set; a node with in-degree 0 receives no contributions but keeps its
-    (1-d) base mass every superstep (a zero-weight self-edge keeps it in
-    the aggregate) — it does NOT vanish from the result.  Returns
-    (node, rank).
+    columns of one type, non-null).  Every node should have out-degree ≥ 1
+    (undirect the graph first if it has sinks — the callers here do); rank
+    mass is then conserved at Σ=N up to rounding.  Iteration 0 ranks the
+    distinct ``src`` set; every superstep ranks the ``src`` set plus every
+    ``dst``.  A node with in-degree 0 receives no contributions but keeps
+    its (1-d) base mass every superstep — it does NOT vanish from the
+    result; a sink's mass leaves the graph.  Returns (node, rank).
+
+    Regime: without ``staged_norm_path``, the distinct edge list is
+    collected as Arrow up to LOCAL_PR_MAX_EDGES + 1 rows; at or below the
+    gate the whole computation runs on the driver and the result is an
+    Arrow-built frame (``checkpoint_every``, ``broadcast_ranks_max`` and
+    ``n_nodes`` do not apply).  Past the gate that bounded probe is
+    dropped and the distributed regime recomputes the edge list — callers
+    that know their graph is large stage the norm and pass
+    ``staged_norm_path``, which always takes the distributed regime.
 
     ``tol``: optional L1-delta early exit — stop once
-    Σ|rank_i - rank_{i-1}| < tol (costs one extra action per superstep;
-    the fixed-budget default keeps the plan fully lazy and oracle-exact).
+    Σ|rank_i - rank_{i-1}| < tol (distributed: one extra action per
+    superstep; the fixed-budget default keeps the plan fully lazy and
+    oracle-exact).
     ``checkpoint_every``: localCheckpoint the rank frame every N
     supersteps, truncating the composed lineage.  Default OFF — measured
-    (tools/probe_pagerank_iters.py, 800k-edge graph, local[32]): the
-    un-checkpointed 50-superstep chain runs at ~0.1s/superstep while
-    checkpoint_every=5 costs 6x (materialization dominates; whole-stage
-    codegen handles the deep plan fine).  Turn it on only where lineage
-    depth genuinely bites: recompute-on-executor-loss cost on very large
-    clusters, or driver plan-compile blowup past hundreds of
-    supersteps.
+    (PERF_NOTES r9, 800k-edge graph, local[32]): the un-checkpointed
+    50-superstep chain runs at ~0.1s/superstep while checkpoint_every=5
+    costs 6x (materialization dominates; whole-stage codegen handles the
+    deep plan fine).  Turn it on only where lineage depth genuinely bites:
+    recompute-on-executor-loss cost on very large clusters, or driver
+    plan-compile blowup past hundreds of supersteps.
 
     ``staged_norm_path``: path of an already-materialized normalized
     adjacency (the frame :func:`build_norm` returns) — skips the edge
@@ -120,15 +135,31 @@ def pagerank(
     signature-table pattern the dedup family uses)."""
     from lakehouse_loader_spark.operators import materialize_shared
 
-    if staged_norm_path is not None:
+    if staged_norm_path is None:
+        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        if not assume_distinct:
+            e = e.distinct()
+        probe = e.limit(LOCAL_PR_MAX_EDGES + 1).toArrow()
+        if probe.num_rows <= LOCAL_PR_MAX_EDGES:
+            return _driver_pagerank(
+                edges.sparkSession, probe, e.schema["src"].dataType,
+                iterations, scale, tol,
+            )
+        del probe
+        # the DISTINCT EDGE LIST is materialized first (r11): deg, the
+        # self-edge node set and the contribution join all consume it, and
+        # without the scratch the whole upstream edge derivation (often a
+        # fact-table join + distinct) re-executes once per consumer —
+        # per-branch column pruning defeats ReusedExchange (see
+        # materialize_shared).  Measured at sf0.1 this halves the
+        # norm-build wall (6.7s → ~3.5s warm)
+        e = materialize_shared(e, label="pagerank-edges")
+        norm, norm_path = materialize_shared(
+            build_norm(e), label="pagerank-norm", with_path=True
+        )
+    else:
         norm_path = staged_norm_path
         norm = edges.sparkSession.read.parquet(norm_path)
-    else:
-        norm, norm_path = materialize_shared(
-            build_norm(edges, src=src, dst=dst, assume_distinct=assume_distinct),
-            label="pagerank-norm",
-            with_path=True,
-        )
     # the node set falls out of the norm scratch for free: exactly the
     # zero-weight self-edge rows (a column-pruned scan, no shuffle)
     nodes = norm.where(F.col("w") == 0.0).select(F.col("src").alias("node"))
@@ -208,6 +239,86 @@ def pagerank(
         )
         return edges.sparkSession.read.parquet(out_path)
     return ranks
+
+
+def _driver_pagerank(spark, edges, node_type, iterations, scale, tol) -> DataFrame:
+    """The driver regime over a collected, distinct (src, dst) Arrow table:
+    the same supersteps as the distributed chain, in numpy.
+
+    Dense ids come from one dictionary encode of src ++ dst, so the first
+    n_src dictionary entries are exactly the distinct src set (iteration
+    0's node set) and every node has one slot.  Each superstep sums
+    rank[src] * (1/deg) per dst with ``bincount``; a node with no in-edge
+    sums to 0.0 — exactly the zero-weight self-edge's contribution in the
+    distributed norm.  Only the summation order differs from Spark's, and
+    the per-superstep rounding absorbs it as it does across
+    partitionings."""
+    import pyarrow as pa
+
+    src, dst = edges.column(0), edges.column(1)
+    if src.null_count or dst.null_count:
+        raise ValueError("pagerank: edge endpoints must be non-null")
+    n_e = edges.num_rows
+    enc = pa.chunked_array(src.chunks + dst.chunks, src.type).combine_chunks()
+    enc = enc.dictionary_encode()
+    idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.intp)
+    si, di = idx[:n_e], idx[n_e:]
+    n = len(enc.dictionary)
+    deg = np.bincount(si, minlength=n)
+    w = 1.0 / deg[si]
+    rank = np.ones(np.count_nonzero(deg))
+    base, damp = 1 - DAMPING, DAMPING
+    for _ in range(iterations):
+        mass = np.bincount(di, weights=rank[si] * w, minlength=n)
+        new = spark_round(base + damp * mass, scale)
+        if tol is not None:
+            # the inner join on node: the nodes ranked in both supersteps
+            delta = np.abs(new[: len(rank)] - rank).sum()
+            rank = new
+            if delta < tol:
+                break
+        else:
+            rank = new
+    out = pa.table(
+        {"node": enc.dictionary.slice(0, len(rank)), "rank": pa.array(rank)}
+    )
+    schema = T.StructType(
+        [T.StructField("node", node_type), T.StructField("rank", T.DoubleType())]
+    )
+    return spark.createDataFrame(out, schema)
+
+
+_ROUND_CTX = decimal.Context(prec=800)
+
+
+def spark_round(x, scale: int) -> np.ndarray:
+    """Spark's ``round(double, scale)`` over a float64 array: HALF_UP on the
+    double's decimal string (``BigDecimal.valueOf(d).setScale(scale,
+    HALF_UP).doubleValue()``); NaN and ±inf pass through, -0.0 comes back
+    as 0.0.
+
+    Vectorized: ``floor(|x|·10^scale + 0.5) / 10^scale`` is exact unless
+    the scaled value lies within float error of a .5 tie (the product's
+    rounding and the decimal string's distance from the binary value are
+    each ≤ |y|·2⁻⁵³), so only those values — and scales or magnitudes
+    where the product itself is inexact — take the Decimal path over the
+    shortest repr, which is the string Spark reads."""
+    x = np.array(x, dtype=np.float64, ndmin=1)
+    exact_scale = 0 <= scale <= 22  # 10^scale is an exact double
+    p = 10.0**scale if exact_scale else 1.0
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = np.abs(x) * p
+        out = np.copysign(np.floor(y + 0.5) / p, x) + 0.0
+        slow = np.isfinite(x) & (
+            (np.abs(y - np.floor(y) - 0.5) <= y * 2.0**-48)
+            | (y >= 2.0**50)
+            | (not exact_scale)
+        )
+    q = decimal.Decimal(1).scaleb(-scale)
+    for i in np.flatnonzero(slow):
+        d = decimal.Decimal(repr(float(x[i])))
+        out[i] = float(d.quantize(q, decimal.ROUND_HALF_UP, _ROUND_CTX)) + 0.0
+    return out
 
 
 _STATIC_SESSION = None

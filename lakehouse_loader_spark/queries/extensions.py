@@ -3498,15 +3498,14 @@ def _pagerank_oracle() -> str:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the customer↔supplier trade graph (orders⋈lineitem,
     undirected so no node is a sink) — the iterative-algorithm class the
-    registry lacked: 8 declarative power-iteration supersteps, each one
-    shuffle-join + one keyed aggregate (operators/graph.py).  The oracle
-    runs the SAME supersteps unrolled as chained SQL CTEs, generated from
-    the same constants; per-iteration rounding re-synchronizes the two
-    engines' float state, so the match is exact, not approximate."""
-    from lakehouse_loader_spark.operators.graph import pagerank
+    registry lacked: 8 power-iteration supersteps, on the driver below
+    the edge gate and as one shuffle-join + one keyed aggregate each
+    above it (operators/graph.py).  The oracle runs the SAME supersteps
+    unrolled as chained SQL CTEs, generated from the same constants;
+    per-iteration rounding re-synchronizes the two engines' float state,
+    so the match is exact, not approximate."""
+    from lakehouse_loader_spark.operators.graph import LOCAL_PR_MAX_EDGES, pagerank
 
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
     # LONG node ids through the iterations (custkey*2 / suppkey*2+1 — the
     # parity bit replaces the oracle's c/s string prefixes), mapped back to
     # the oracle's string form only on the final 16k-row frame: every
@@ -3514,43 +3513,59 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of strings (measured sf0.1: 7.0s → ~4.8s steady).  Ranks are
     # unchanged — the graph is isomorphic and per-iteration rounding
     # re-synchronizes float state regardless of key representation
-    pairs = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
+    def build_edges() -> DataFrame:
+        o = load_table(spark, sf_dir, "orders")
+        li = load_table(spark, sf_dir, "lineitem")
+        pairs = (
+            o.join(li, o.o_orderkey == li.l_orderkey)
+            .select(
+                (F.col("o_custkey") * 2).alias("c"),
+                (F.col("l_suppkey") * 2 + 1).alias("s"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    # pairs is already distinct and the two directions are disjoint by
-    # construction (the parity bit), so the union needs no re-dedup.
-    # The normalized adjacency (the artifact every superstep scans) is
-    # session-staged per sf_dir like the dedup signature tables — the
-    # fact-table join + distinct + degree normalization run once per
-    # corpus, the supersteps per call (measured sf0.1: 6.0→~3.2s warm)
-    from lakehouse_loader_spark.queries.staging import memo, staged_pagerank_norm
+        # pairs is already distinct and the two directions are disjoint
+        # by construction (the parity bit), so the union needs no re-dedup
+        return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
+            pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+        )
 
-    norm_path = staged_pagerank_norm(spark, sf_dir, "cust_supp_bipartite", lambda: edges)
-    # the staged norm is immutable per session, so its node count (the
-    # broadcast-regime gate inside pagerank) is a per-artifact constant —
-    # count it once per (norm_path) per session instead of one gate scan
-    # per call (r16; at 100 TB that scan is a full pass over the artifact)
-    n_nodes = memo(
-        spark,
-        ("pr_n_nodes", norm_path),
-        lambda: spark.read.parquet(norm_path).where(F.col("w") == 0.0).count(),
+    # The distinct edge list is session-staged per sf_dir like the dedup
+    # signature tables: the fact-table join + distinct run once per
+    # corpus, the supersteps per call.  At or below the driver-regime
+    # gate pagerank collects the staged edges and ranks on the driver;
+    # above it the normalized adjacency is staged from the same files
+    from lakehouse_loader_spark.queries.staging import (
+        memo,
+        staged_pagerank_edges,
+        staged_pagerank_norm,
     )
-    ranks = pagerank(
-        edges,
-        iterations=8,
-        scale=6,
-        assume_distinct=True,
-        staged_norm_path=norm_path,
-        n_nodes=n_nodes,
-    )
+
+    key = "cust_supp_bipartite"
+    edges_path = staged_pagerank_edges(spark, sf_dir, key, build_edges)
+    staged = spark.read.parquet(edges_path)
+    n_edges = memo(spark, ("pr_n_edges", edges_path), staged.count)
+    if n_edges <= LOCAL_PR_MAX_EDGES:
+        ranks = pagerank(staged, iterations=8, scale=6, assume_distinct=True)
+    else:
+        norm_path = staged_pagerank_norm(spark, sf_dir, key, edges_path)
+        # the staged norm is immutable per session, so its node count (the
+        # broadcast-regime gate inside pagerank) is a per-artifact constant
+        # — counted once per session, not one gate scan per call (at
+        # 100 TB that scan is a full pass over the artifact)
+        n_nodes = memo(
+            spark,
+            ("pr_n_nodes", norm_path),
+            lambda: spark.read.parquet(norm_path).where(F.col("w") == 0.0).count(),
+        )
+        ranks = pagerank(
+            staged,
+            iterations=8,
+            scale=6,
+            assume_distinct=True,
+            staged_norm_path=norm_path,
+            n_nodes=n_nodes,
+        )
     return ranks.select(
         F.when(
             F.col("node") % 2 == 0,

@@ -2,9 +2,9 @@
 
 Several query families derive the same artifact from the same corpus on
 every call: the dedup family's hashed shingle sets, MinHash signatures and
-SimHash fingerprints; the ANN indexes; pagerank's normalized adjacency;
-the streaming parities' multi-file events directory; the pipeline
-queries' staged Delta/Iceberg tables with their DML applied.  Each is
+SimHash fingerprints; the ANN indexes; pagerank's edge list and
+normalized adjacency; the streaming parities' multi-file events directory;
+the pipeline queries' staged Delta/Iceberg tables with their DML applied.  Each is
 built ONCE per key per session by :func:`stage` and every consumer —
 across queries and across repeat runs — scans the files.  Only
 INPUT-DERIVED artifacts are staged: candidate generation, verification,
@@ -33,9 +33,9 @@ Lifecycle of a staged artifact:
 - **reaped at exit** — every staged dir is removed at interpreter exit and
   never earlier, so a frame a caller still holds never loses its files.
 
-:func:`memo` keeps small per-artifact constants (pagerank's node count) in
-the same registry; key them on the staged path so a rebuilt artifact is
-derived again.
+:func:`memo` keeps small per-artifact constants (pagerank's edge and
+node counts) in the same registry; key them on the staged path so a
+rebuilt artifact is derived again.
 """
 
 from __future__ import annotations
@@ -178,27 +178,39 @@ def staged_simhash(
     return _staged(spark, sf_dir, f"simhash{bits}_{hash_fn}", build)
 
 
-def staged_pagerank_norm(
+def staged_pagerank_edges(
     spark: SparkSession, sf_dir: str, graph_key: str, build_edges
 ) -> str:
+    """Path of the staged DISTINCT (src, dst) edge list ``build_edges()``
+    derives — the corpus artifact pagerank consumes in both regimes (the
+    driver regime collects it, the distributed regime normalizes it into
+    :func:`staged_pagerank_norm`), so the edge derivation runs once per
+    (graph_key, sf_dir) per session.  ``graph_key`` names the EDGE
+    DERIVATION: the registry cannot inspect the ``build_edges`` closure,
+    so two queries staging different graphs over the same corpus must
+    pass distinct keys or the second would silently reuse the first's
+    edges (ADVICE r13)."""
+    return _staged_path(spark, sf_dir, f"pr_edges_{graph_key}", build_edges)
+
+
+def staged_pagerank_norm(
+    spark: SparkSession, sf_dir: str, graph_key: str, edges_path: str
+) -> str:
     """Path of the staged normalized adjacency (``operators.graph.
-    build_norm`` output: src, dst, 1/deg contribution edges + zero-weight
-    self-edges) for the graph ``build_edges()`` derives — the corpus
-    artifact every pagerank superstep scans, staged once per
-    (graph_key, sf_dir) per session exactly like the dedup signature
-    tables.  ``graph_key`` names the EDGE DERIVATION: the registry cannot
-    inspect the ``build_edges`` closure, so two queries staging different
-    graphs over the same corpus must pass distinct keys or the second
-    would silently reuse the first's normalized adjacency (ADVICE r13).
-    Returned as a PATH because the static small-graph regime re-reads it
-    from an isolated session (operators/graph.py:_static_session)."""
+    build_norm`` output: src, dst, 1/deg contribution edges +
+    zero-weight self-edges) over the staged edge list at ``edges_path``
+    (:func:`staged_pagerank_edges` with the same ``graph_key``) — the
+    artifact every distributed superstep scans, staged once per
+    (graph_key, sf_dir) per session.  Returned as a PATH because the
+    static small-graph regime re-reads it from an isolated session
+    (operators/graph.py:_static_session)."""
     from lakehouse_loader_spark.operators.graph import build_norm
 
     return _staged_path(
         spark,
         sf_dir,
         f"pr_norm_{graph_key}",
-        lambda: build_norm(build_edges(), assume_distinct=True),
+        lambda: build_norm(spark.read.parquet(edges_path)),
     )
 
 

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # Reference: max 2,097,152 rows per output parquet file
 # (src/delta_destination.rs:434-440).
@@ -58,3 +59,22 @@ def get_spark(app_name: str = "lakehouse_loader_spark", cpus: int | None = None)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for small driver-built
+    frames (lookup maps, driver-regime operator results), built from
+    Arrow.  A list input plans as ``Scan ExistingRDD``, a PythonRDD whose
+    every scan starts Python workers; an Arrow input under
+    ``spark.sql.execution.arrow.localRelationThreshold`` plans as a
+    ``LocalTableScan`` and runs no job at all."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema)
+    pa_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(pa_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
+    )
+    return spark.createDataFrame(table, struct)

@@ -38,6 +38,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from lakehouse_loader_spark.session import local_frame
 from lakehouse_loader_spark.sinks.staging import accepts_file_uris, create_exclusive
 from lakehouse_loader_spark.sinks.alignment import check_schema_aligned, merge_schemas
 from lakehouse_loader_spark.sinks.modes import (
@@ -1243,7 +1244,8 @@ def _scan_adds_materialized(
         + [T.StructField(mat_id, T.LongType()), T.StructField(mat_rcv, T.LongType())]
     )
     scan = _scan_adds(spark, path, meta, ext, adds, with_path=True)
-    fmap = spark.createDataFrame(
+    fmap = local_frame(
+        spark,
         [
             (
                 os.path.abspath(os.path.join(path, p)),

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 
 from lakehouse_loader_spark.sinks import avro_ocf
 from lakehouse_loader_spark.sinks import transforms as TR
+from lakehouse_loader_spark.session import local_frame
 from lakehouse_loader_spark.sinks.staging import accepts_file_uris, create_exclusive
 from lakehouse_loader_spark.sinks.alignment import check_schema_aligned, merge_schemas
 from lakehouse_loader_spark.sinks.modes import (
@@ -1223,7 +1224,7 @@ def _apply_eq_deletes(
     ]
     # helper columns use reserved __-names: a user column literally named
     # "file_path" must survive the join/drop
-    seq_map = spark.createDataFrame(seq_rows, "__seq_path string, __fseq bigint")
+    seq_map = local_frame(spark, seq_rows, "__seq_path string, __fseq bigint")
     out = scan.join(
         F.broadcast(seq_map), scan["__path"] == seq_map["__seq_path"], "left"
     ).drop("__seq_path")
@@ -3934,7 +3935,8 @@ def _mor_update_iceberg(
                 f"files without first_row_id in a row-lineage table "
                 f"(foreign writer?): {missing[:3]}"
             )
-        fmap = spark.createDataFrame(
+        fmap = local_frame(
+            spark,
             [
                 (_abs_file(path, d["file_path"]), int(d["first_row_id"]))
                 for d in data_entries
@@ -4379,7 +4381,8 @@ def _lineage_rewrite_scan(
         ]
     )
     scan = _scan_with_deletes(spark, path, ext, partitioned, sorted(sel), delete_entries)
-    fmap = spark.createDataFrame(
+    fmap = local_frame(
+        spark,
         [
             (_abs_file(path, d["file_path"]), int(d["first_row_id"]), int(d["__seq"]))
             for d in entries
@@ -4654,7 +4657,8 @@ def read_iceberg_with_row_ids(
         spark, scan, path, delete_entries, data_entries,
         meta["schemas"][meta["current-schema-id"]],
     )
-    fmap = spark.createDataFrame(
+    fmap = local_frame(
+        spark,
         [
             (
                 _abs_file(path, d["file_path"]),

@@ -1,7 +1,7 @@
 """Driver-materialization lint: the 100 TB scale contract.
 
-Every ``collect()``/``toPandas()``/``first()``/``head()``/``take()`` in
-the package must be driver-bounded — an aggregate result, a schema/dim
+Every ``collect()``/``toPandas()``/``toArrow()``/``toLocalIterator()``/
+``first()``/``head()``/``take()`` in the package must be driver-bounded — an aggregate result, a schema/dim
 probe, commit metadata (one row per file), or a gated small-graph path.
 This test freezes the audited budget per file; ANY new materialization
 site fails it until the author proves the new site is bounded and raises
@@ -10,9 +10,10 @@ the budget here (with a line in the table's rationale).
 The audit (r9): cli.py prints query output (user-facing, explicitly
 bounded by --limit); sinks/* collect commit METADATA (one row per data
 file / manifest, never data rows); operators/clusters.py's two are the
-union-find collect() of the gated LOCAL_CC_MAX_EDGES small-graph path and
+union-find collect of the gated LOCAL_CC_MAX_EDGES small-graph path and
 the star-contraction round's 2-long fingerprint first();
-operators/graph.py:100 the optional tol early-exit's 1-row L1 aggregate;
+operators/graph.py the gated LOCAL_PR_MAX_EDGES driver-regime edge probe
+and the optional tol early-exit's 1-row L1 aggregate;
 operators/similarity.py probes vector dim / k centroids (constant-size);
 sources/pgwire.py:~1075 a 1-row written-count aggregate;
 queries/pipeline.py collects min/max bounds and constant-size stats
@@ -45,6 +46,9 @@ BUDGET = {
     "sinks/iceberg.py": 4,  # r14 −1: same move
     "sinks/incremental.py": 3,
     "sinks/inspect.py": 2,
+    # clusters.py: the union-find edge collect, now through toArrow()
+    # (the same gated LOCAL_CC_MAX_EDGES site), plus the contraction
+    # round's fingerprint first()
     "operators/clusters.py": 2,
     # keys.py (r14): the ONE merge-key contract aggregate shared by
     # merge_delta/merge_iceberg — a single one-row agg (count / distinct /
@@ -59,7 +63,11 @@ BUDGET = {
     # pair-dimension check; load_lsh_index collects its one-row config
     # table — never corpus-sized
     "sinks/ann_index.py": 3,
-    "operators/graph.py": 1,
+    # graph.py +1: pagerank's driver-regime probe collects the
+    # distinct edge list through limit(LOCAL_PR_MAX_EDGES + 1).toArrow()
+    # — bounded by the constant gate, never by data scale; the other site
+    # is the tol early-exit's 1-row L1 aggregate
+    "operators/graph.py": 2,
     # text.py (r15): bpe_train_merges collects ONE top-pair row per
     # training round, k (=8) rounds — constant driver state; the merge
     # list it accumulates is the k-entry trained artifact itself
@@ -74,7 +82,7 @@ BUDGET = {
     "queries/staging.py": 1,
 }
 
-_PAT = re.compile(r"\.(collect|toPandas|first|head|take)\(")
+_PAT = re.compile(r"\.(collect|toPandas|toArrow|toLocalIterator|first|head|take)\(")
 
 
 def _count(path: str) -> int:

@@ -180,6 +180,19 @@ def test_connected_components_chain_and_star(spark):
     assert clusters == {1: (1, 5), 10: (10, 4), 20: (20, 2)}
 
 
+def test_local_union_find_result_is_a_local_scan(spark):
+    """The union-find regime reads its edges through Arrow and returns an
+    Arrow-built frame: a LocalTableScan, never a PythonRDD scan whose
+    every action starts Python workers."""
+    from lakehouse_loader_spark.operators.clusters import connected_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (8, 7)], "doc_a long, doc_b long")
+    cc = connected_components(pairs)
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert {r.node: r.component for r in cc.collect()} == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     jsc = spark.sparkContext._jsc
     return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}

@@ -231,3 +231,16 @@ def test_eq_delete_broadcast_gated_and_never_bnlj(spark, tmpdir, monkeypatch):
     assert n_hints < under_log.count("strategy=broadcast")
     assert "BroadcastNestedLoopJoin" not in over_phys
     assert over.count() == 98  # rows identical under either plan
+
+
+def test_eq_deleted_read_builds_its_seq_map_from_arrow(spark, tmpdir):
+    """The (file → sequence) map every equality-deleted read joins is an
+    Arrow-built LocalTableScan: a list-built map plans as a PythonRDD
+    scan, which starts Python workers on every read of the table."""
+    path = os.path.join(tmpdir, "ice")
+    _table(spark, path)
+    IC.equality_delete_iceberg(spark, path, spark.createDataFrame([(3,)], "id long"))
+    back = IC.read_iceberg(spark, path)
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert back.count() == 99
