@@ -2,8 +2,16 @@
 text analysis, multimodal columns, as-of join.
 
 Design rule for every operator here: express the computation as
-joins/aggregations/windows over partitioned data — never a driver-side
-collect — so the same code runs at 100 TB on a real cluster.
+joins/aggregations/windows over partitioned data, so the same code runs
+at 100 TB on a real cluster.  The one exception is a gated driver
+regime: at or below a module-constant size gate, one bounded collect
+brings a small input to the driver, where numpy or pyarrow finishes it
+without per-job and Python-worker overhead, and
+above the gate the distributed path runs unchanged.  The union-find
+(``clusters.LOCAL_CC_MAX_EDGES``), PageRank (``graph.LOCAL_PR_MAX_EDGES``)
+and the small staged corpus artifacts (``queries/staging.py``) are the
+gated regimes; each collect site is budgeted, with its rationale, in
+``tests/test_collect_lint.py``.
 """
 
 from __future__ import annotations

@@ -302,6 +302,24 @@ def with_hashed_shingles(df: DataFrame, text_col: str = "text", k: int = 3) -> D
     ).drop("shingles")
 
 
+def _minhash_kernel(num_hashes: int):
+    """``one(hv) -> np.ndarray``: the ``num_hashes``-wide signature of one
+    document's shingle hashes ``hv`` (int64, already reduced into the
+    31-bit field) — the 128 affine permutations + mins as ONE (num_hashes,
+    n_shingles) numpy broadcast.  The pandas UDF and the driver regime
+    (:func:`minhash_signature_matrix`) both call it, so the two cannot
+    drift apart."""
+    params = _hash_params(num_hashes)
+    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
+
+    def one(hv: np.ndarray) -> np.ndarray:
+        # products < 2^62: exact in int64, no overflow
+        return ((hv[None, :] * a_vec + b_vec) % MINHASH_PRIME).min(axis=1)
+
+    return one
+
+
 def with_minhash_signature(
     df: DataFrame, num_hashes: int = 128, shingle_col: str = "shingles"
 ) -> DataFrame:
@@ -310,28 +328,27 @@ def with_minhash_signature(
     signature because string shingles are xxhash64-ed first anyway).
 
     Hybrid JVM/Arrow split: shingle hashing stays JVM-side (xxhash64 → pmod
-    into the 31-bit prime field), then the 128 affine permutations + mins
-    run as ONE vectorized numpy broadcast per document inside an
-    Arrow-batched pandas UDF — integer math is exact, so the result is
-    bit-identical to a per-element fold but ~20× faster (the fold is
-    interpreted per element; the UDF is a (128, n_shingles) matrix op)."""
+    into the 31-bit prime field), then :func:`_minhash_kernel` runs per
+    document inside an Arrow-batched pandas UDF — integer math is exact,
+    so the result is bit-identical to a per-element fold but ~20× faster
+    (the fold is interpreted per element; the UDF is a (128, n_shingles)
+    matrix op).  An empty or null shingle set signs as all-``MINHASH_PRIME``.
+    Small staged corpora skip the UDF (and its Python workers) altogether:
+    ``queries/staging.py:staged_minhash_sigs`` signs them on the driver with
+    :func:`minhash_signature_matrix`, the same kernel."""
     from pyspark.sql.functions import pandas_udf
 
-    params = _hash_params(num_hashes)
-    a_vec = np.array([a for a, _ in params], dtype=np.int64)[:, None]
-    b_vec = np.array([b for _, b in params], dtype=np.int64)[:, None]
+    one = _minhash_kernel(num_hashes)
     empty_sig = [MINHASH_PRIME] * num_hashes
 
     @pandas_udf("array<long>")
     def sig_udf(base: pd.Series) -> pd.Series:
-        def one(h):
+        def sig(h):
             if h is None or len(h) == 0:
                 return empty_sig
-            hv = np.asarray(h, dtype=np.int64)[None, :]
-            # products < 2^62: exact in int64, no overflow
-            return ((hv * a_vec + b_vec) % MINHASH_PRIME).min(axis=1).tolist()
+            return one(np.asarray(h, dtype=np.int64)).tolist()
 
-        return base.map(one)
+        return base.map(sig)
 
     col = F.col(shingle_col)
     field = next(f for f in df.schema.fields if f.name == shingle_col)
@@ -341,6 +358,24 @@ def with_minhash_signature(
         hashed = col
     base = F.transform(hashed, lambda h: F.pmod(h, F.lit(MINHASH_PRIME)))
     return df.withColumn("minhash_sig", sig_udf(base))
+
+
+def minhash_signature_matrix(
+    hashes: np.ndarray, lengths: np.ndarray, num_hashes: int = 128
+) -> np.ndarray:
+    """The driver form of :func:`with_minhash_signature` over 64-bit
+    shingle hashes: ``hashes`` is every document's ``sh_h`` concatenated
+    (int64, any sign), ``lengths`` each document's share of it (all ≥ 1).
+    Returns the (n_docs, num_hashes) int64 signature matrix, row i equal
+    to the UDF's signature of document i: ``np.mod`` by the positive prime
+    floors exactly as Spark's ``pmod`` does, then the shared kernel."""
+    one = _minhash_kernel(num_hashes)
+    field = np.mod(hashes, MINHASH_PRIME)
+    ends = np.cumsum(lengths)
+    out = np.empty((len(lengths), num_hashes), dtype=np.int64)
+    for i, (start, end) in enumerate(zip(ends - lengths, ends)):
+        out[i] = one(field[start:end])
+    return out
 
 
 def minhash_candidate_pairs(

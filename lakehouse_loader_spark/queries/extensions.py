@@ -3533,18 +3533,25 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The distinct edge list is session-staged per sf_dir like the dedup
     # signature tables: the fact-table join + distinct run once per
     # corpus, the supersteps per call.  At or below the driver-regime
-    # gate pagerank collects the staged edges and ranks on the driver;
-    # above it the normalized adjacency is staged from the same files
+    # gate the edges are staged from the driver (their count known from
+    # the build), pagerank collects them and ranks on the driver; above
+    # it the normalized adjacency is staged from the same files
     from lakehouse_loader_spark.queries.staging import (
         memo,
         staged_pagerank_edges,
         staged_pagerank_norm,
+        staged_rows,
+        staged_scan,
     )
 
     key = "cust_supp_bipartite"
     edges_path = staged_pagerank_edges(spark, sf_dir, key, build_edges)
-    staged = spark.read.parquet(edges_path)
-    n_edges = memo(spark, ("pr_n_edges", edges_path), staged.count)
+    staged = staged_scan(spark, edges_path)
+    n_edges = memo(
+        spark,
+        ("pr_n_edges", edges_path),
+        lambda: staged_rows(spark, edges_path) or staged.count(),
+    )
     if n_edges <= LOCAL_PR_MAX_EDGES:
         ranks = pagerank(staged, iterations=8, scale=6, assume_distinct=True)
     else:

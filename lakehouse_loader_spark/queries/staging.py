@@ -36,6 +36,32 @@ Lifecycle of a staged artifact:
 :func:`memo` keeps small per-artifact constants (pagerank's edge and
 node counts) in the same registry; key them on the staged path so a
 rebuilt artifact is derived again.
+
+Two build regimes, one lifecycle:
+
+- **distributed** — the artifact frame is written by one Spark parquet
+  write (``operators._staged_write``: full-width build, bounded file
+  count).
+- **driver** — for small artifacts that declare a gate (the dedup
+  shingles and signatures, :data:`LOCAL_DEDUP_MAX_DOCS`; pagerank's edge
+  list, ``operators.graph.LOCAL_PR_MAX_EDGES``): one Arrow collect of
+  the frame's first ``gate + 1`` rows (:func:`_collect_below`); at or
+  below the gate the Arrow table is written as the same number of
+  parquet files by ``pyarrow.parquet``, with no Spark write job, and
+  the MinHash signatures are computed on the driver from the staged
+  shingle files, with no pandas UDF and so no Python worker.  On a
+  500-document corpus the per-job and worker-start costs are most of
+  the build (McSherry et al., "Scalability! But at what COST?").  Above
+  the gate the distributed build runs; the collect is not even tried
+  when the frame's input files already hold more than ``gate`` rows.
+  A scheme'd scratch root (``hdfs://``, ``s3a://`` —
+  ``spark.lakehouse.scratch.dir``) always takes the distributed regime:
+  the driver writes local files only.
+
+Either way the build records the artifact's Spark schema (and, on the
+driver, its row count), so every scan of a staged dir passes an explicit
+schema (:func:`staged_scan`) instead of running a schema-inference job
+per read.
 """
 
 from __future__ import annotations
@@ -43,11 +69,13 @@ from __future__ import annotations
 import atexit
 import os
 
+import numpy as np
 import pandas as pd  # module-level: pandas_udf type-hint resolution needs
 # `pd` in module globals (``from __future__ import annotations`` stringifies
 # the hints and pyspark resolves them against this module's namespace)
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from lakehouse_loader_spark.catalog import load_table
 from lakehouse_loader_spark.operators import _rm_scratch, _scratch_path, _staged_write
@@ -55,6 +83,17 @@ from lakehouse_loader_spark.operators import _rm_scratch, _scratch_path, _staged
 # every dir staged in this process, with the session that staged it (the
 # Hadoop FileSystem handle for scheme'd URIs); reaped by _reap_staged
 _STAGED: list[tuple[str, SparkSession]] = []
+
+# Document ceiling for the driver regime of the dedup shingle and
+# signature artifacts.  A row is one document's whole shingle set, so what
+# bounds driver memory is this constant times the documents' length: the
+# collected shingle table holds 8 bytes per shingle (at most one shingle
+# per word) and the signature matrix 1 KB per document (128 longs).  For
+# this corpus's ~300-character documents (~50 shingles each) that is
+# under 10 MB at the gate; sf0.1 (5,000 documents, ~2 MB of shingle
+# hashes) is under it, the 50,000-document sf1 synth above it.  A corpus of
+# much longer documents should lower it.
+LOCAL_DEDUP_MAX_DOCS = 20_000
 
 
 def _registry(spark: SparkSession) -> dict:
@@ -97,25 +136,98 @@ def memo(spark: SparkSession, key: tuple, fn):
     return reg[key]
 
 
-def _staged(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
+def _staged(
+    spark: SparkSession, sf_dir: str, key: str, build, local=None
+) -> DataFrame:
     """A scan of ``build()``'s frame, staged as parquet once per
-    (key, sf_dir) per session."""
-    return spark.read.parquet(_staged_path(spark, sf_dir, key, build))
+    (key, sf_dir) per session (``local``: see :func:`_staged_path`)."""
+    return staged_scan(spark, _staged_path(spark, sf_dir, key, build, local))
 
 
-def _staged_path(spark: SparkSession, sf_dir: str, key: str, build) -> str:
+def _staged_path(
+    spark: SparkSession, sf_dir: str, key: str, build, local=None
+) -> str:
     """The path variant of :func:`_staged` — for consumers that re-scan
     the staged files from ANOTHER SparkSession (pagerank's isolated
-    static-conf clone reads the norm artifact by path)."""
+    static-conf clone reads the norm artifact by path).  ``local()``, when
+    given, is the artifact's driver regime: its rows as an Arrow table, or
+    None above its gate (then ``build()`` runs distributed)."""
 
     def write(path: str) -> None:
         # bounded file count, same rationale as materialize_shared: tiny
         # files cost task overhead locally; parquet splittability restores
         # read parallelism on a real cluster regardless
         n_out = max(8, spark.sparkContext.defaultParallelism // 4)
-        _staged_write(build(), n_out, path)
+        table = local() if local is not None and "://" not in path else None
+        if table is None:
+            df = build()
+            _staged_write(df, n_out, path)
+            meta = (df.schema, None)
+        else:
+            _write_arrow(table, n_out, path)
+            meta = (from_arrow_schema(table.schema), table.num_rows)
+        _registry(spark)[("meta", path)] = meta
 
     return stage(spark, (key, sf_dir), write)
+
+
+def _collect_below(df: DataFrame, gate: int):
+    """``df`` as an Arrow table when it has at most ``gate`` rows, else
+    None: the driver regime's one bounded collect.  The collect is tried
+    only when ``df``'s inputs hold at most ``gate`` rows too (read from
+    their parquet footers, no Spark job): a staged artifact's size follows
+    its inputs', and an overflowing collect is discarded after paying a
+    whole derivation (the join and distinct of pagerank's edges), which
+    the distributed build then repeats."""
+    rows = _input_rows(df)
+    if rows is not None and rows > gate:
+        return None
+    table = df.limit(gate + 1).toArrow()
+    return table if table.num_rows <= gate else None
+
+
+def _input_rows(df: DataFrame) -> int | None:
+    """Total rows of ``df``'s input files from their parquet footers, or
+    None when an input is not a local parquet file."""
+    import pyarrow.parquet as pq
+
+    from lakehouse_loader_spark.sinks.staging import local_path
+
+    total = 0
+    for uri in df.inputFiles():
+        if not uri.startswith("file:"):
+            return None
+        try:
+            total += pq.ParquetFile(local_path(uri)).metadata.num_rows
+        except (OSError, ValueError):
+            return None
+    return total
+
+
+def _write_arrow(table, n_out: int, path: str) -> None:
+    """``table`` as ``n_out`` parquet files under the new dir ``path`` —
+    the driver regime's stand-in for ``_staged_write``."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    step = -(-table.num_rows // n_out) or 1
+    for i in range(n_out):
+        pq.write_table(
+            table.slice(i * step, step), os.path.join(path, f"part-{i:05d}.parquet")
+        )
+
+
+def staged_scan(spark: SparkSession, path: str) -> DataFrame:
+    """A scan of the artifact staged at ``path`` under the schema its
+    build recorded — no schema-inference job."""
+    schema, _ = _registry(spark)[("meta", path)]
+    return spark.read.schema(schema).parquet(path)
+
+
+def staged_rows(spark: SparkSession, path: str) -> int | None:
+    """Row count of the artifact at ``path`` when it was built on the
+    driver (known without a scan), else None."""
+    return _registry(spark)[("meta", path)][1]
 
 
 def staged_doc_shingles(
@@ -126,35 +238,83 @@ def staged_doc_shingles(
     decontamination (consumers that don't select it never read the column
     — columnar scan).  Identical derivation to
     ``operators.dedup.with_hashed_shingles``, so swapping a staged scan in
-    for an inline computation cannot change any oracle-checked result."""
+    for an inline computation cannot change any oracle-checked result.
+    At or below :data:`LOCAL_DEDUP_MAX_DOCS` documents it is one JVM job
+    and a driver-side write; above, the corpus is spread first."""
+    return staged_scan(spark, _doc_shingles_path(spark, sf_dir, k))
+
+
+def _doc_shingles_path(spark: SparkSession, sf_dir: str, k: int) -> str:
     from lakehouse_loader_spark.operators import spread
     from lakehouse_loader_spark.operators.dedup import with_hashed_shingles
 
-    def build() -> DataFrame:
-        docs = spread(load_table(spark, sf_dir, "documents"))
+    def shingles(docs: DataFrame) -> DataFrame:
         return with_hashed_shingles(docs, k=k).select("doc_id", "source", "sh_h")
 
-    return _staged(spark, sf_dir, f"shingles{k}", build)
+    def docs() -> DataFrame:
+        return load_table(spark, sf_dir, "documents")
+
+    return _staged_path(
+        spark,
+        sf_dir,
+        f"shingles{k}",
+        lambda: shingles(spread(docs())),
+        local=lambda: _collect_below(shingles(docs()), LOCAL_DEDUP_MAX_DOCS),
+    )
 
 
 def staged_minhash_sigs(
     spark: SparkSession, sf_dir: str, k: int = 3, num_hashes: int = 128
 ) -> DataFrame:
     """(doc_id, minhash_sig): the 128-wide MinHash signature of every
-    document with ≥1 shingle — derived FROM the staged shingle files (one
-    columnar scan + the vectorized signature UDF), shared by the three
-    minhash consumers (pairs, clusters, clusters_star).  Docs without
+    document with ≥1 shingle — derived FROM the staged shingle files,
+    shared by the three minhash consumers (pairs, clusters,
+    clusters_star).  When the shingles were staged on the driver, the
+    signatures are too: pyarrow reads the shingle files and
+    ``operators.dedup.minhash_signature_matrix`` signs them, with no Spark
+    job and no Python worker; otherwise one columnar scan + the vectorized
+    signature UDF.  Both run the same exact int64 kernel.  Docs without
     shingles are excluded exactly as ``minhash_candidate_pairs`` excludes
     them (they cannot be near-dups by this measure)."""
     from lakehouse_loader_spark.operators.dedup import with_minhash_signature
 
+    sh_path = _doc_shingles_path(spark, sf_dir, k)
+
     def build() -> DataFrame:
-        sh = staged_doc_shingles(spark, sf_dir, k=k)
+        sh = staged_scan(spark, sh_path)
         return with_minhash_signature(
             sh.filter(F.size("sh_h") > 0), num_hashes, shingle_col="sh_h"
         ).select("doc_id", "minhash_sig")
 
-    return _staged(spark, sf_dir, f"mhsig{k}_{num_hashes}", build)
+    def local():
+        if staged_rows(spark, sh_path) is None:
+            return None
+        return _local_minhash_sigs(sh_path, num_hashes)
+
+    return _staged(spark, sf_dir, f"mhsig{k}_{num_hashes}", build, local)
+
+
+def _local_minhash_sigs(sh_path: str, num_hashes: int):
+    """The (doc_id, minhash_sig) Arrow table of the driver-staged shingle
+    files at ``sh_path``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from lakehouse_loader_spark.operators.dedup import minhash_signature_matrix
+
+    sh = pq.read_table(sh_path, columns=["doc_id", "sh_h"])
+    sh = sh.filter(pc.fill_null(pc.list_value_length(sh["sh_h"]), 0).to_numpy() > 0)
+    lengths = pc.list_value_length(sh["sh_h"]).to_numpy().astype(np.int64)
+    hashes = pc.list_flatten(sh["sh_h"]).to_numpy()
+    sigs = minhash_signature_matrix(hashes, lengths, num_hashes)
+    offsets = pa.array(np.arange(0, sigs.size + 1, num_hashes, dtype=np.int32))
+    return pa.table(
+        {
+            "doc_id": sh["doc_id"],
+            "minhash_sig": pa.ListArray.from_arrays(offsets, pa.array(sigs.ravel())),
+        }
+    )
 
 
 def staged_simhash(
@@ -185,12 +345,23 @@ def staged_pagerank_edges(
     derives — the corpus artifact pagerank consumes in both regimes (the
     driver regime collects it, the distributed regime normalizes it into
     :func:`staged_pagerank_norm`), so the edge derivation runs once per
-    (graph_key, sf_dir) per session.  ``graph_key`` names the EDGE
+    (graph_key, sf_dir) per session.  At or below
+    ``operators.graph.LOCAL_PR_MAX_EDGES`` edges — where pagerank collects
+    them anyway — it is written on the driver, and :func:`staged_rows`
+    knows its edge count.  ``graph_key`` names the EDGE
     DERIVATION: the registry cannot inspect the ``build_edges`` closure,
     so two queries staging different graphs over the same corpus must
     pass distinct keys or the second would silently reuse the first's
     edges (ADVICE r13)."""
-    return _staged_path(spark, sf_dir, f"pr_edges_{graph_key}", build_edges)
+    from lakehouse_loader_spark.operators.graph import LOCAL_PR_MAX_EDGES
+
+    return _staged_path(
+        spark,
+        sf_dir,
+        f"pr_edges_{graph_key}",
+        build_edges,
+        local=lambda: _collect_below(build_edges(), LOCAL_PR_MAX_EDGES),
+    )
 
 
 def staged_pagerank_norm(
@@ -210,7 +381,7 @@ def staged_pagerank_norm(
         spark,
         sf_dir,
         f"pr_norm_{graph_key}",
-        lambda: build_norm(spark.read.parquet(edges_path)),
+        lambda: build_norm(staged_scan(spark, edges_path)),
     )
 
 

@@ -61,17 +61,21 @@ def get_spark(app_name: str = "lakehouse_loader_spark", cpus: int | None = None)
     return spark
 
 
-def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for small driver-built
-    frames (lookup maps, driver-regime operator results), built from
-    Arrow.  A list input plans as ``Scan ExistingRDD``, a PythonRDD whose
-    every scan starts Python workers; an Arrow input under
+    frames (lookup maps, driver-regime operator results, empty reads),
+    built from Arrow.  A list input plans as ``Scan ExistingRDD``, a
+    PythonRDD whose every scan starts Python workers; an Arrow input under
     ``spark.sql.execution.arrow.localRelationThreshold`` plans as a
-    ``LocalTableScan`` and runs no job at all."""
+    ``LocalTableScan`` and runs no job at all.  ``schema`` is a DDL string
+    or a ``StructType`` (kept as given: nullability and field metadata
+    included)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    struct = T.DataType.fromDDL(schema)
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
     pa_schema = to_arrow_schema(struct)
     cols = list(zip(*rows)) if rows else [()] * len(pa_schema)
     table = pa.Table.from_arrays(

@@ -1293,7 +1293,7 @@ def read_delta_with_row_ids(spark: SparkSession, path: str) -> DataFrame:
                 T.StructField("_row_commit_version", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     mat_id, mat_rcv = _materialized_col_names(meta)
     return _scan_adds_materialized(spark, path, meta, schema, adds).select(
         *schema.fieldNames(),
@@ -2302,7 +2302,7 @@ def read_delta(
     _, meta, adds = _read_log(path, as_of_version=version)
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     if not adds:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _scan_adds(spark, path, meta, schema, adds)
 
 
@@ -2358,7 +2358,7 @@ def read_delta_appends(
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     fresh = sorted(set(adds_new) - set(adds_old))
     if not fresh:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return _scan_adds(
         spark, path, meta, schema, {p: adds_new[p] for p in fresh}
     )
@@ -2402,7 +2402,7 @@ def read_delta_changes(
     out_cols = [f.name for f in final_schema.fields]
 
     def _empty() -> DataFrame:
-        return spark.createDataFrame([], final_schema).select(
+        return local_frame(spark, [], final_schema).select(
             *out_cols,
             F.lit("insert").alias("_change_type"),
             F.lit(0).cast("long").alias("_commit_version"),
@@ -2518,7 +2518,7 @@ def read_delta_changes(
             if added is not None:
                 pieces.append(_align(added, "insert"))
             continue
-        new_side = added if added is not None else spark.createDataFrame([], schema_v)
+        new_side = added if added is not None else local_frame(spark, [], schema_v)
         pieces.append(_align(removed.exceptAll(new_side), "delete"))
         pieces.append(_align(new_side.exceptAll(removed), "insert"))
 
@@ -2815,7 +2815,7 @@ def read_delta_pruned(
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
     files, _ = prune_files_by_stats(path, column, lower, upper, adds=adds)
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     kept_rel = {os.path.relpath(f, path).replace(os.sep, "/") for f in files}
     return _scan_adds(
         spark, path, meta, schema, {p: adds[p] for p in kept_rel}
@@ -2984,7 +2984,7 @@ def scan_delta_with_plan(
             raise ValueError(f"{c!r} is not a column of {path}")
     plan = plan_delta_scan(path, preds, _snapshot=(meta, adds))
     if not plan["files"]:
-        return spark.createDataFrame([], schema).select(*out_cols), plan
+        return local_frame(spark, [], schema).select(*out_cols), plan
     scan = _scan_adds(
         spark, path, meta, schema, {p: adds[p] for p in plan["files"]}
     )
@@ -3470,7 +3470,7 @@ def merge_delta(
                 "__path", "__pos"
             )
         else:
-            masked = spark.createDataFrame([], "__path string, __pos bigint")
+            masked = local_frame(spark, [], "__path string, __pos bigint")
         new_adds = _write_parts(
             source_rt if rt else source, path, MAX_ROWS_PER_FILE, part_cols
         )

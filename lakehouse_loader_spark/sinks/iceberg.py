@@ -1727,7 +1727,7 @@ def read_iceberg(
         path, meta, snapshot_id
     )
     if not data_entries:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     files = [_abs_file(path, d["file_path"]) for d in data_entries]
     # historical renames: scan under current + historical names, coalesce
     # back to current (pre-rename files surface their column either way)
@@ -1820,7 +1820,7 @@ def read_iceberg_pruned(
     schema = iceberg_to_schema(meta["schemas"][meta["current-schema-id"]])
     kept, _ = _prune_files_by_partition(path, meta, column, value)
     if not kept:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     read_schema = _extended_read_schema(meta, schema)
     reader = spark.read.schema(read_schema).option("basePath", os.path.join(os.path.abspath(path), "data"))
     files = [_abs_file(path, p) for p in kept]
@@ -1901,7 +1901,7 @@ def read_iceberg_stats_pruned(
     data_entries, delete_entries, partitioned = _split_live_entries(path, meta)
     kept = _prune_entries_by_stats(path, meta, data_entries, column, lower, upper)
     if not kept:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     read_schema = _extended_read_schema(meta, schema)
     reader = spark.read.schema(read_schema)
     if partitioned:
@@ -2158,7 +2158,7 @@ def scan_iceberg_with_plan(
     data_entries, delete_entries, partitioned = _split_live_entries(path, meta)
     plan = plan_iceberg_scan(path, preds, _snapshot=(meta, data_entries))
     if not plan["files"]:
-        return spark.createDataFrame([], schema).select(*out_cols), plan
+        return local_frame(spark, [], schema).select(*out_cols), plan
     read_schema = _extended_read_schema(meta, schema)
     reader = spark.read.schema(read_schema)
     if partitioned:
@@ -2882,7 +2882,7 @@ def read_iceberg_appends(
         )
     fresh = sorted(new_files - old_files)
     if not fresh:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     files = [fp if os.path.isabs(fp) else os.path.join(path, fp) for fp in fresh]
     reader = spark.read.schema(schema)
     if partitioned:
@@ -3044,14 +3044,14 @@ def read_iceberg_changes(
             touched = {f for f in touched if f in carried}
         old_df = _rows(removed | touched, partitioned, p_del_entries, p_data)
         new_df = _rows(added | touched, partitioned, cur_del_entries, cur_data)
-        empty = spark.createDataFrame([], schema)
+        empty = local_frame(spark, [], schema)
         old_side = old_df if old_df is not None else empty
         new_side = new_df if new_df is not None else empty
         pieces.append(_align(old_side.exceptAll(new_side), "delete"))
         pieces.append(_align(new_side.exceptAll(old_side), "insert"))
 
     if not pieces:
-        return spark.createDataFrame([], schema).select(
+        return local_frame(spark, [], schema).select(
             *out_cols,
             F.lit("insert").alias("_change_type"),
             F.lit(0).cast("int").alias("_snapshot_ordinal"),
@@ -4631,7 +4631,7 @@ def read_iceberg_with_row_ids(
                 T.StructField("_last_updated_sequence_number", T.LongType()),
             ]
         )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     missing = sorted(
         d["file_path"] for d in data_entries if d.get("first_row_id") is None
     )

@@ -552,11 +552,24 @@ def test_staged_dedup_artifacts_cache_per_session(spark):
     _registry(spark).clear()
 
 
-def test_staged_artifacts_match_inline_derivations(spark):
-    """The staged shingle/signature/fingerprint frames must be
+@pytest.fixture(params=["driver", "distributed"])
+def staging_regime(request, monkeypatch):
+    """Both build regimes of the gated staged artifacts: the driver regime
+    at the module gates, the distributed one with every gate at 0."""
+    from lakehouse_loader_spark.operators import graph
+    from lakehouse_loader_spark.queries import staging
+
+    if request.param == "distributed":
+        monkeypatch.setattr(staging, "LOCAL_DEDUP_MAX_DOCS", 0)
+        monkeypatch.setattr(graph, "LOCAL_PR_MAX_EDGES", 0)
+    return request.param
+
+
+def test_staged_artifacts_match_inline_derivations(spark, staging_regime):
+    """The staged shingle/signature/fingerprint/edge frames must be
     row-identical to the inline operator derivations they replace — the
     guarantee that swapping the stage into a query cannot change any
-    oracle-checked result."""
+    oracle-checked result — in both build regimes."""
     from pyspark.sql import functions as F2
 
     from lakehouse_loader_spark.catalog import load_table
@@ -569,6 +582,9 @@ def test_staged_artifacts_match_inline_derivations(spark):
         _registry,
         staged_doc_shingles,
         staged_minhash_sigs,
+        staged_pagerank_edges,
+        staged_rows,
+        staged_scan,
         staged_simhash,
     )
     from tests.conftest import SF_SMOKE
@@ -598,6 +614,25 @@ def test_staged_artifacts_match_inline_derivations(spark):
     )
     assert s_sig == i_sig
 
+    def edges():
+        o = load_table(spark, SF_SMOKE, "orders")
+        return o.select(
+            F2.col("o_custkey").alias("src"), (F2.col("o_orderkey") % 97).alias("dst")
+        ).distinct()
+
+    e_path = staged_pagerank_edges(spark, SF_SMOKE, "test_edges", edges)
+    assert sorted(staged_scan(spark, e_path).collect()) == sorted(edges().collect())
+
+    reg = _registry(spark)
+    built = [
+        staged_rows(spark, reg[key])
+        for key in [("shingles3", SF_SMOKE), ("mhsig3_128", SF_SMOKE)]
+    ] + [staged_rows(spark, e_path)]
+    if staging_regime == "driver":
+        assert built == [len(staged), len(s_sig), staged_scan(spark, e_path).count()]
+    else:
+        assert built == [None, None, None]
+
     s_fp = (
         staged_simhash(spark, SF_SMOKE, bits=60, hash_fn="md5_60")
         .orderBy("doc_id")
@@ -612,6 +647,47 @@ def test_staged_artifacts_match_inline_derivations(spark):
     )
     assert s_fp == i_fp
     _registry(spark).clear()
+
+
+def test_dedup_staging_job_budget(spark, monkeypatch):
+    """Below the gate the shingle and signature builds run at most 2 Spark
+    jobs together (the shingle probe and the documents scan's schema
+    read), write no Spark parquet, and plan no pandas UDF
+    (``ArrowEvalPython``): the signatures are signed on the driver."""
+    import uuid
+
+    from lakehouse_loader_spark.queries import staging
+    from tests.conftest import SF_SMOKE
+
+    plans = []
+    probe = staging._collect_below
+
+    def recording_probe(df, gate):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return probe(df, gate)
+
+    def no_spark_write(*args):
+        raise AssertionError("a Spark staging write ran below the gate")
+
+    monkeypatch.setattr(staging, "_collect_below", recording_probe)
+    monkeypatch.setattr(staging, "_staged_write", no_spark_write)
+    staging._registry(spark).clear()
+    sc = spark.sparkContext
+    group = f"dedup-staging-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dedup staging budget")
+    try:
+        staging.staged_doc_shingles(spark, SF_SMOKE)
+        sigs = staging.staged_minhash_sigs(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    try:
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+        plans.append(sigs._jdf.queryExecution().executedPlan().toString())
+        assert len(plans) == 2
+        assert not [p for p in plans if "ArrowEvalPython" in p], plans
+    finally:
+        staging._registry(spark).clear()
 
 
 def test_staged_ann_indexes_match_inline_paths(spark, emb):
@@ -673,6 +749,60 @@ def test_staged_artifacts_honor_scratch_dir_conf(spark, tmp_path):
         path = _registry(spark)[("shingles3", SF_SMOKE)]
         assert path.startswith(root), path
         assert df.count() > 0
+    finally:
+        spark.conf.unset("spark.lakehouse.scratch.dir")
+        _registry(spark).clear()
+
+
+def test_driver_probe_skipped_when_inputs_exceed_the_gate(spark):
+    """The bounded collect is tried only when the frame's inputs (their
+    parquet footers) hold at most ``gate`` rows: above that it runs no
+    Spark job, so a distributed build never pays a discarded probe."""
+    import uuid
+
+    from lakehouse_loader_spark.catalog import load_table
+    from lakehouse_loader_spark.queries.staging import _collect_below, _input_rows
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    n = _input_rows(docs)
+    assert n == docs.count()
+    sc = spark.sparkContext
+    group = f"probe-skip-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "probe skip")
+    try:
+        assert _collect_below(docs, n - 1) is None
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert _collect_below(docs, n).num_rows == n
+
+
+def test_schemed_scratch_root_stages_distributed(spark, tmp_path):
+    """The driver regime writes local files only: under a scheme'd scratch
+    root the gated artifacts take the distributed build (a Spark write)
+    even below their gates, with the same rows."""
+    from lakehouse_loader_spark.queries.staging import (
+        _registry,
+        staged_doc_shingles,
+        staged_minhash_sigs,
+        staged_rows,
+    )
+    from tests.conftest import SF_SMOKE
+
+    _registry(spark).clear()
+    local_sigs = sorted(staged_minhash_sigs(spark, SF_SMOKE).collect())
+    _registry(spark).clear()
+    spark.conf.set("spark.lakehouse.scratch.dir", f"file://{tmp_path}")
+    try:
+        staged_doc_shingles(spark, SF_SMOKE)
+        sigs = sorted(staged_minhash_sigs(spark, SF_SMOKE).collect())
+        reg = _registry(spark)
+        for key in [("shingles3", SF_SMOKE), ("mhsig3_128", SF_SMOKE)]:
+            assert reg[key].startswith("file://")
+            assert staged_rows(spark, reg[key]) is None
+        assert sigs == local_sigs
     finally:
         spark.conf.unset("spark.lakehouse.scratch.dir")
         _registry(spark).clear()

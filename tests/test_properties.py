@@ -3,7 +3,7 @@ upgrade over the reference's example-based unit tests (SURVEY.md §5)."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -94,6 +94,50 @@ def test_minhash_params_in_field(n):
     for a, b in _hash_params(n):
         assert 1 <= a < MINHASH_PRIME
         assert 0 <= b < MINHASH_PRIME
+
+
+_I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+# edge values for the pmod into the field: both int64 ends, around 0 and
+# around the prime — drawn often, so duplicates within a document are too
+_FIELD_EDGES = st.sampled_from(
+    [-(2**63), -MINHASH_PRIME, -1, 0, 1, MINHASH_PRIME - 1, MINHASH_PRIME, 2**63 - 1]
+)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(st.lists(_I64 | _FIELD_EDGES, min_size=1, max_size=30), min_size=1, max_size=12),
+    st.sampled_from([1, 16, 128]),
+)
+@example([[5], [7, 7, 7], [-3, -3, 2**63 - 1]], 128)
+def test_minhash_driver_kernel_matches_udf(spark, docs, num_hashes):
+    """The driver signature (``minhash_signature_matrix``: ``np.mod`` then
+    the shared kernel) equals the pandas UDF's (JVM ``pmod`` then the same
+    kernel) for any 64-bit shingle hashes, negative ones, single-element
+    sets and repeats included."""
+    import numpy as np
+
+    from lakehouse_loader_spark.operators.dedup import (
+        minhash_signature_matrix,
+        with_minhash_signature,
+    )
+    from lakehouse_loader_spark.session import local_frame
+
+    frame = local_frame(
+        spark, list(enumerate(docs)), "doc_id bigint, sh_h array<bigint>"
+    )
+    udf = [
+        r.minhash_sig
+        for r in with_minhash_signature(frame, num_hashes, shingle_col="sh_h")
+        .orderBy("doc_id")
+        .collect()
+    ]
+    driver = minhash_signature_matrix(
+        np.array([h for d in docs for h in d], dtype=np.int64),
+        np.array([len(d) for d in docs], dtype=np.int64),
+        num_hashes,
+    )
+    assert driver.tolist() == udf
 
 
 # --- training-pipeline operator properties (round 2) -----------------------

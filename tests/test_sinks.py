@@ -1429,3 +1429,21 @@ def test_parquet_physical_layout_parity(spark, tmpdir):
     i = os.path.join(str(tmpdir), "rg_ice")
     IC.write_iceberg(df, i)
     check(glob.glob(os.path.join(i, "data", "*.parquet")))
+
+
+def test_empty_reads_plan_a_local_scan(spark, small_df, tmpdir):
+    """A read that prunes every file returns an Arrow-built empty frame: a
+    LocalTableScan, never a PythonRDD scan (``Scan ExistingRDD``) whose
+    every action starts Python workers."""
+    d = os.path.join(tmpdir, "delta")
+    i = os.path.join(tmpdir, "ice")
+    DL.write_delta(small_df, d)
+    IC.write_iceberg(small_df, i)
+    for empty in (
+        DL.read_delta_pruned(spark, d, "id", 1000, 2000),
+        IC.read_iceberg_stats_pruned(spark, i, "id", 1000, 2000),
+    ):
+        plan = empty._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert empty.schema.names == small_df.columns
+        assert empty.count() == 0
