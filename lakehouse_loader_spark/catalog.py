@@ -51,7 +51,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # natively as TIMESTAMP_NTZ (truncated to µs) and ignores the conf.
         # Setting it is harmless on 4.1+ and required on older engines.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = _read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # Normalize ts to TIMESTAMP_NTZ(µs) whatever the engine handed us,
         # branching on the OBSERVED dtype rather than the Spark version —
@@ -78,6 +78,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "native TIMESTAMP(NANOS) support)"
             )
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` under the schema Spark inferred for the
+    same files earlier in this session: inference runs a Spark job per
+    read, so it runs once per session and table version instead (the
+    files' names, sizes and mtimes key it; a rewritten table is inferred
+    again).  Paths the driver cannot stat are inferred on every read."""
+    from lakehouse_loader_spark.queries.staging import memo
+
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(root, f) for root, _dirs, names in os.walk(path) for f in names
+        )
+    stamp = []
+    for f in files:
+        st = os.stat(f)
+        stamp.append((f, st.st_size, st.st_mtime_ns))
+    schema = memo(
+        spark, ("schema", path, tuple(stamp)), lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -4,14 +4,17 @@ text analysis, multimodal columns, as-of join.
 Design rule for every operator here: express the computation as
 joins/aggregations/windows over partitioned data, so the same code runs
 at 100 TB on a real cluster.  The one exception is a gated driver
-regime: at or below a module-constant size gate, one bounded collect
-brings a small input to the driver, where numpy or pyarrow finishes it
-without per-job and Python-worker overhead, and
-above the gate the distributed path runs unchanged.  The union-find
-(``clusters.LOCAL_CC_MAX_EDGES``), PageRank (``graph.LOCAL_PR_MAX_EDGES``)
-and the small staged corpus artifacts (``queries/staging.py``) are the
-gated regimes; each collect site is budgeted, with its rationale, in
-``tests/test_collect_lint.py``.
+regime: at or below a module-constant size gate,
+``session.collect_bounded`` brings a small input to the driver as an
+Arrow table (None above the gate), numpy or pyarrow finishes it without per-job and
+Python-worker overhead, and ``session.local_frame`` hands the result back
+as a ``LocalTableScan``; above the gate the distributed path runs
+unchanged.  The union-find (``clusters.LOCAL_CC_MAX_EDGES``), PageRank
+(``graph.LOCAL_PR_MAX_EDGES``) and the small staged corpus artifacts
+(``queries/staging.py``) are the gated regimes.  No operator calls
+``createDataFrame`` or ``toArrow`` itself: ``tests/test_collect_lint.py``
+keeps both in ``session.py`` and budgets every other collect site, with
+its rationale.
 """
 
 from __future__ import annotations

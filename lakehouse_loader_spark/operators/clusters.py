@@ -10,11 +10,12 @@ One function, two regimes chosen by the distinct edge count:
 - at or below LOCAL_CC_MAX_EDGES, a driver-side union-find: the verified
   pair set is usually orders of magnitude smaller than the corpus, and
   below the gate any distributed loop is pure job-launch + shuffle
-  overhead.  The edges are collected as Arrow and the result is an
-  Arrow-built frame (a LocalTableScan: no job, no Python worker when the
-  caller's action runs).  Driver state is bounded by the constant gate,
-  never by data scale — the same shape as PageRank's LOCAL_PR_MAX_EDGES
-  driver regime (operators/graph.py).
+  overhead.  The edges arrive through ``session.collect_bounded`` and the
+  result is an Arrow-built frame (``session.local_frame``: a
+  LocalTableScan, no job and no Python worker when the caller's action
+  runs).  Driver state is bounded by the constant gate, never by data
+  scale — the same shape as PageRank's LOCAL_PR_MAX_EDGES driver regime
+  (operators/graph.py).
 - above it, alternating large-star / small-star contraction (Kiveris et
   al., "Connected Components in MapReduce and Beyond", SoCC'14), which
   converges in O(log² n) rounds whatever the component diameter — dup
@@ -27,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_loader_spark.session import collect_bounded, local_frame
+
 # Edge-count ceiling for the driver-local union-find fast path.  The
 # VERIFIED near-dup pair set is normally orders of magnitude smaller than
 # the corpus (it lists duplicate relationships, not documents), and below
@@ -38,13 +41,11 @@ from pyspark.sql import types as T
 LOCAL_CC_MAX_EDGES = 500_000
 
 
-def _local_union_find(edges: DataFrame) -> DataFrame:
-    """Exact connected components of a SMALL (a, b) edge list (caller
-    enforces the size gate) via driver-side union-find with path halving;
-    component = min node id, matching the distributed contract.  The
-    edges arrive through ``toArrow()`` and the result is an Arrow-built
-    frame, which plans as a LocalTableScan: a list-built frame plans as a
-    PythonRDD scan that starts Python workers on every action."""
+def _local_union_find(spark, tbl, node_type: T.DataType) -> DataFrame:
+    """Exact connected components of a SMALL collected (a, b) Arrow edge
+    table via driver-side union-find with path halving; component = min
+    node id, matching the distributed contract.  The result is an
+    Arrow-built frame (``session.local_frame``)."""
     import pyarrow as pa
 
     parent: dict = {}
@@ -55,7 +56,6 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    tbl = edges.toArrow()
     for a, b in zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
@@ -67,7 +67,6 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
     for n, r in roots.items():
         if r not in comp_min or n < comp_min[r]:
             comp_min[r] = n
-    node_type = edges.schema["a"].dataType
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
@@ -78,7 +77,7 @@ def _local_union_find(edges: DataFrame) -> DataFrame:
             "component": pa.array([comp_min[r] for r in roots.values()], col_type),
         }
     )
-    return edges.sparkSession.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 # Deterministic block reclamation for the iterative checkpoints: each
@@ -189,14 +188,17 @@ def connected_components(
     converged = False
     try:
         # materialize the INITIAL edge set once, before anything reads it:
-        # the count, the union-find collect and round 1's two large-star
-        # subtrees would each re-run the upstream pair computation
-        # (minhash/shingle joins — the expensive part) otherwise
+        # the bounded collect and round 1's two large-star subtrees would
+        # each re-run the upstream pair computation (minhash/shingle joins
+        # — the expensive part) otherwise
         edges, live_ckpt_ids = _checkpoint(edges, jsc)
-        if edges.count() <= LOCAL_CC_MAX_EDGES:
+        tbl = collect_bounded(edges, LOCAL_CC_MAX_EDGES)
+        if tbl is not None:
             # the returned frame is driver-built and doesn't read the edge
             # checkpoint; converged stays False, so finally reclaims it
-            return _local_union_find(edges)
+            return _local_union_find(
+                edges.sparkSession, tbl, edges.schema["a"].dataType
+            )
         for _ in range(max_iterations):
             new_edges, new_ids = _checkpoint(_small_star(_large_star(edges)), jsc)
             live_ckpt_ids |= new_ids

@@ -9,12 +9,14 @@ One function, two regimes chosen by the distinct edge count (the shape of
 clusters.py's LOCAL_CC_MAX_EDGES gate):
 
 - at or below LOCAL_PR_MAX_EDGES, the driver regime: the distinct edge
-  list is collected once as Arrow, node ids map to dense indices with
-  pyarrow, and each superstep is one numpy ``bincount`` followed by
-  Spark's own ``round(double, scale)``.  Below the gate every distributed
-  superstep is job-launch cost (sf0.01, 97k edges: 3.1s and 15 jobs per
-  warm call; PERF_NOTES "PageRank: a driver regime").  Driver state is
-  bounded by the constant gate, never by data scale.
+  list is collected once as Arrow (``session.collect_bounded``; a staged
+  edge list is read by pyarrow, with no Spark job), node ids map to
+  dense indices with pyarrow, and each superstep is one numpy
+  ``bincount`` followed by Spark's own ``round(double, scale)``.  Below
+  the gate every distributed superstep is job-launch cost (sf0.01, 97k
+  edges: 3.1s and 15 jobs per warm call; PERF_NOTES "PageRank: a driver
+  regime").  Driver state is bounded by the constant gate, never by data
+  scale.
 - above it, the distributed regime: each superstep is one join (ranks ⋈
   out-degree-normalized edges, shuffled on src) + one aggregate (shuffled
   on dst) — the Pregel superstep expressed as DataFrames, so Catalyst/AQE
@@ -47,6 +49,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from lakehouse_loader_spark.session import collect_bounded, local_frame
 
 DAMPING = 0.85
 
@@ -106,14 +110,14 @@ def pagerank(
     its (1-d) base mass every superstep — it does NOT vanish from the
     result; a sink's mass leaves the graph.  Returns (node, rank).
 
-    Regime: without ``staged_norm_path``, the distinct edge list is
-    collected as Arrow up to LOCAL_PR_MAX_EDGES + 1 rows; at or below the
-    gate the whole computation runs on the driver and the result is an
-    Arrow-built frame (``checkpoint_every``, ``broadcast_ranks_max`` and
-    ``n_nodes`` do not apply).  Past the gate that bounded probe is
-    dropped and the distributed regime recomputes the edge list — callers
-    that know their graph is large stage the norm and pass
-    ``staged_norm_path``, which always takes the distributed regime.
+    Regime: without ``staged_norm_path``, the distinct edge list goes
+    through ``session.collect_bounded`` with LOCAL_PR_MAX_EDGES as the
+    bound; at or below the gate the whole computation runs on the driver
+    and the result is an Arrow-built frame (``checkpoint_every``,
+    ``broadcast_ranks_max`` and ``n_nodes`` do not apply).  Past the gate
+    the distributed regime recomputes the edge list — callers that know
+    their graph is large stage the norm and pass ``staged_norm_path``,
+    which always takes the distributed regime.
 
     ``tol``: optional L1-delta early exit — stop once
     Σ|rank_i - rank_{i-1}| < tol (distributed: one extra action per
@@ -139,13 +143,12 @@ def pagerank(
         e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         if not assume_distinct:
             e = e.distinct()
-        probe = e.limit(LOCAL_PR_MAX_EDGES + 1).toArrow()
-        if probe.num_rows <= LOCAL_PR_MAX_EDGES:
+        probe = collect_bounded(e, LOCAL_PR_MAX_EDGES)
+        if probe is not None:
             return _driver_pagerank(
                 edges.sparkSession, probe, e.schema["src"].dataType,
                 iterations, scale, tol,
             )
-        del probe
         # the DISTINCT EDGE LIST is materialized first (r11): deg, the
         # self-edge node set and the contribution join all consume it, and
         # without the scratch the whole upstream edge derivation (often a
@@ -285,7 +288,7 @@ def _driver_pagerank(spark, edges, node_type, iterations, scale, tol) -> DataFra
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("rank", T.DoubleType())]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 _ROUND_CTX = decimal.Context(prec=800)

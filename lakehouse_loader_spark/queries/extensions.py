@@ -2611,66 +2611,40 @@ def streaming_join_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_stateful_v2_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The transformWithStateInPandas operator (streaming/events.py:
-    stateful_type_histogram — Spark 4's arbitrary-state API: typed
-    MapState per key, per-entry batch IO) through the driver gate.  Where
-    its runtime dependencies are absent (the protobuf state-server
-    protocol isn't shipped in every container) the query runs the
-    applyInPandasWithState twin computing the IDENTICAL per-(user, type)
-    running histogram, so the SAME oracle checks whichever operator the
-    environment can execute — and flips to the v2 operator automatically
-    when the dependency appears.  Convergence contract as
-    streaming_stateful_parity: counts grow monotonically per batch, so
-    max n_events per key pair is the final state."""
+    """The per-user event-type histogram operator (streaming/events.py:
+    stateful_type_histogram_fallback, on applyInPandasWithState) through
+    the driver gate: running per-(user, type) totals in update mode.
+    Convergence contract as streaming_stateful_parity: counts grow
+    monotonically per batch, so max n_events per key pair is the final
+    state."""
 
     from lakehouse_loader_spark.streaming.events import (
         read_event_stream,
-        stateful_type_histogram,
         stateful_type_histogram_fallback,
-        transformwithstate_runtime_available,
     )
 
     staged = _staged_event_files(
         spark, sf_dir, "events4", lambda ev: ev.repartition(4)
     )
-    # width 24: with the fallback's user-keyed histogram state the Python
-    # group count is |users|, and the width balances UDF parallelism
-    # against per-store commit cost (A/B at sf0.1 under the clone confs:
-    # 3.1s/2.4s/2.9s at 8/16/32; r15 re-sweep with the pruned-input
-    # operator: best/median 2.40/2.66 at 16 vs 2.24/2.38 at 24; before
-    # the user-keyed rewrite the (user,type)-keyed version wanted 32 —
-    # the state-width knob tracks the operator's group count;
-    # PERF_NOTES r8/r12/r15)
+    # width 24: with the user-keyed histogram state the Python group count
+    # is |users|, and the width balances UDF parallelism against per-store
+    # commit cost (A/B at sf0.1 under the clone confs: 3.1s/2.4s/2.9s at
+    # 8/16/32; r15 re-sweep with the pruned-input operator: best/median
+    # 2.40/2.66 at 16 vs 2.24/2.38 at 24; before the user-keyed rewrite
+    # the (user,type)-keyed version wanted 32 — the state-width knob
+    # tracks the operator's group count; PERF_NOTES r8/r12/r15)
     child = _parity_stream_session(spark, width=24)
     stream = read_event_stream(child, staged, max_files_per_trigger=2)
-    use_v2 = transformwithstate_runtime_available()
     sink = _parity_sink(child, "sstate2")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = child.conf.get(prov_key, None)
-    try:
-        if use_v2:
-            # transformWithState is only implemented on the RocksDB store
-            child.conf.set(
-                prov_key,
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            out = stateful_type_histogram(stream)
-        else:
-            out = stateful_type_histogram_fallback(stream)
-        q = (
-            out.writeStream.trigger(availableNow=True)
-            .outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        if prior is None:
-            child.conf.unset(prov_key)
-        else:
-            child.conf.set(prov_key, prior)
+    q = (
+        stateful_type_histogram_fallback(stream)
+        .writeStream.trigger(availableNow=True)
+        .outputMode("update")
+        .format("memory")
+        .queryName(sink)
+        .start()
+    )
+    q.awaitTermination(300)
     updates = child.table(sink)
     return (
         updates.groupBy("user_id", "event_type")

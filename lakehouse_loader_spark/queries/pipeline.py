@@ -19,6 +19,7 @@ from lakehouse_loader_spark.operators import sampling as SA
 from lakehouse_loader_spark.operators import text as T
 from lakehouse_loader_spark.queries import query
 from lakehouse_loader_spark.queries.staging import stage
+from lakehouse_loader_spark.session import local_frame
 
 _TOKS = "string_split_regex(trim(text), '\\s+')"
 
@@ -512,7 +513,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     for row in sorted(totals, key=lambda r: r["_bkt"]):
         offsets.append((int(row["_bkt"]), running))
         running += int(row["_tot"])
-    off_df = spark.createDataFrame(offsets, "_bkt int, _bkt_off bigint")
+    off_df = local_frame(spark, offsets, "_bkt int, _bkt_off bigint")
 
     # pass B: keyed window (bucket-local running sum) + broadcast offsets;
     # recomputes the cheap token expression instead of caching the frame
@@ -635,7 +636,7 @@ def shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     for row in sorted(counts, key=lambda r: r["_cell"]):
         offsets.append((int(row["_cell"]), running))
         running += int(row["count"])
-    off_df = spark.createDataFrame(offsets, "_cell int, _off bigint")
+    off_df = local_frame(spark, offsets, "_cell int, _off bigint")
     w = W.partitionBy("_cell").orderBy("_bkt", "doc_id")
     return (
         t2.join(F.broadcast(off_df), "_cell")
@@ -1632,7 +1633,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     for row in sorted(cells, key=lambda r: r["_cell"]):
         offsets.append((int(row["_cell"]), running))
         running += int(row["tok"])
-    off_df = spark.createDataFrame(offsets, "_cell int, _off bigint")
+    off_df = local_frame(spark, offsets, "_cell int, _off bigint")
     w = (
         W.partitionBy("_cell")
         .orderBy(F.col("quality").desc(), "doc_id")
@@ -1989,7 +1990,7 @@ def iceberg_analyze_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
         (field_names[b["fields"][0]], int(b["properties"]["ndv"]))
         for b in stats["blob-metadata"]
     ]
-    est = spark.createDataFrame(est_rows, "column_name string, ndv long")
+    est = local_frame(spark, est_rows, "column_name string, ndv long")
     exact = (
         load_table(spark, sf_dir, "orders")
         .agg(

@@ -44,10 +44,10 @@ Two build regimes, one lifecycle:
   count).
 - **driver** — for small artifacts that declare a gate (the dedup
   shingles and signatures, :data:`LOCAL_DEDUP_MAX_DOCS`; pagerank's edge
-  list, ``operators.graph.LOCAL_PR_MAX_EDGES``): one Arrow collect of
-  the frame's first ``gate + 1`` rows (:func:`_collect_below`); at or
-  below the gate the Arrow table is written as the same number of
-  parquet files by ``pyarrow.parquet``, with no Spark write job, and
+  list, ``operators.graph.LOCAL_PR_MAX_EDGES``): the frame's bounded
+  Arrow collect (``session.collect_bounded``); at or below the gate the
+  Arrow table is written as the same number of parquet files by
+  ``pyarrow.parquet``, with no Spark write job, and
   the MinHash signatures are computed on the driver from the staged
   shingle files, with no pandas UDF and so no Python worker.  On a
   500-document corpus the per-job and worker-start costs are most of
@@ -79,6 +79,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from lakehouse_loader_spark.catalog import load_table
 from lakehouse_loader_spark.operators import _rm_scratch, _scratch_path, _staged_write
+from lakehouse_loader_spark.session import collect_bounded, local_frame
 
 # every dir staged in this process, with the session that staged it (the
 # Hadoop FileSystem handle for scheme'd URIs); reaped by _reap_staged
@@ -171,39 +172,6 @@ def _staged_path(
     return stage(spark, (key, sf_dir), write)
 
 
-def _collect_below(df: DataFrame, gate: int):
-    """``df`` as an Arrow table when it has at most ``gate`` rows, else
-    None: the driver regime's one bounded collect.  The collect is tried
-    only when ``df``'s inputs hold at most ``gate`` rows too (read from
-    their parquet footers, no Spark job): a staged artifact's size follows
-    its inputs', and an overflowing collect is discarded after paying a
-    whole derivation (the join and distinct of pagerank's edges), which
-    the distributed build then repeats."""
-    rows = _input_rows(df)
-    if rows is not None and rows > gate:
-        return None
-    table = df.limit(gate + 1).toArrow()
-    return table if table.num_rows <= gate else None
-
-
-def _input_rows(df: DataFrame) -> int | None:
-    """Total rows of ``df``'s input files from their parquet footers, or
-    None when an input is not a local parquet file."""
-    import pyarrow.parquet as pq
-
-    from lakehouse_loader_spark.sinks.staging import local_path
-
-    total = 0
-    for uri in df.inputFiles():
-        if not uri.startswith("file:"):
-            return None
-        try:
-            total += pq.ParquetFile(local_path(uri)).metadata.num_rows
-        except (OSError, ValueError):
-            return None
-    return total
-
-
 def _write_arrow(table, n_out: int, path: str) -> None:
     """``table`` as ``n_out`` parquet files under the new dir ``path`` —
     the driver regime's stand-in for ``_staged_write``."""
@@ -259,7 +227,7 @@ def _doc_shingles_path(spark: SparkSession, sf_dir: str, k: int) -> str:
         sf_dir,
         f"shingles{k}",
         lambda: shingles(spread(docs())),
-        local=lambda: _collect_below(shingles(docs()), LOCAL_DEDUP_MAX_DOCS),
+        local=lambda: collect_bounded(shingles(docs()), LOCAL_DEDUP_MAX_DOCS),
     )
 
 
@@ -360,7 +328,7 @@ def staged_pagerank_edges(
         sf_dir,
         f"pr_edges_{graph_key}",
         build_edges,
-        local=lambda: _collect_below(build_edges(), LOCAL_PR_MAX_EDGES),
+        local=lambda: collect_bounded(build_edges(), LOCAL_PR_MAX_EDGES),
     )
 
 
@@ -431,7 +399,8 @@ def staged_ivf_index(
     def build_cents() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         cents = train_ivf_centroids_sampled(emb, n_centroids=n_centroids)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
             "cid int, vec array<double>",
         ).coalesce(1)
@@ -548,8 +517,8 @@ def staged_bpe_merges(
         # ONCE and let every round scan the columnar artifact
         vocab = materialize_shared(vocab, "bpe-vocab")
         merges = bpe_train_merges(vocab, k=k)
-        return spark.createDataFrame(
-            merges, "rank long, a string, b string, merged string, cnt long"
+        return local_frame(
+            spark, merges, "rank long, a string, b string, merged string, cnt long"
         ).coalesce(1)
 
     return _staged(spark, sf_dir, f"bpemerges{k}", build)

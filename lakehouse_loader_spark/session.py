@@ -1,16 +1,26 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the one boundary between
+the driver and Spark.
 
 Local-mode defaults mirror the scale knobs the reference fixes in code
 (src/delta_destination.rs:43-46, 439): snappy parquet, bounded file sizes —
 but expressed as Spark confs so they hold on a real cluster too.
+
+Data crosses between the driver and Spark in one form, Arrow tables (the
+reference hands Arrow ``RecordBatch``es from its source to its writers),
+and only through this module: :func:`local_frame` turns driver-side rows
+or an Arrow table into a frame, :func:`collect_bounded` is the one gated
+collect of a frame into the driver.  ``tests/test_collect_lint.py`` keeps
+every other module off ``createDataFrame(`` and ``toArrow(``.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Reference: max 2,097,152 rows per output parquet file
 # (src/delta_destination.rs:434-440).
@@ -62,23 +72,95 @@ def get_spark(app_name: str = "lakehouse_loader_spark", cpus: int | None = None)
 
 
 def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: str | T.StructType
+    spark: SparkSession, data: list[tuple] | pa.Table, schema: str | T.StructType
 ) -> DataFrame:
-    """``spark.createDataFrame(rows, schema)`` for small driver-built
-    frames (lookup maps, driver-regime operator results, empty reads),
-    built from Arrow.  A list input plans as ``Scan ExistingRDD``, a
-    PythonRDD whose every scan starts Python workers; an Arrow input under
-    ``spark.sql.execution.arrow.localRelationThreshold`` plans as a
-    ``LocalTableScan`` and runs no job at all.  ``schema`` is a DDL string
+    """The frame of driver-side ``data`` (row tuples or an Arrow table)
+    under ``schema``: lookup maps, driver-regime operator results,
+    metadata tables, empty reads.  Built from Arrow, it plans as a
+    ``LocalTableScan`` under ``spark.sql.execution.arrow.
+    localRelationThreshold`` and runs no job; a list handed to
+    ``createDataFrame`` plans as ``Scan ExistingRDD`` over a PythonRDD,
+    whose every action starts Python workers.  ``schema`` is a DDL string
     or a ``StructType`` (kept as given: nullability and field metadata
     included)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
-    pa_schema = to_arrow_schema(struct)
-    cols = list(zip(*rows)) if rows else [()] * len(pa_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
-    )
-    return spark.createDataFrame(table, struct)
+    if not isinstance(data, pa.Table):
+        pa_schema = to_arrow_schema(struct)
+        cols = list(zip(*data)) if data else [()] * len(pa_schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, pa_schema)], schema=pa_schema
+        )
+    return spark.createDataFrame(data, struct)
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` as an Arrow table when it has at most ``max_rows`` rows, else
+    None (the caller takes its distributed path): the one gated collect of
+    every driver regime.
+
+    The input files' parquet footers are read first (no Spark job): when
+    they hold more than ``max_rows`` rows the collect is not tried, since
+    a gated frame's size follows its inputs' and an overflowing collect is
+    discarded after paying the whole derivation, which the distributed
+    path then repeats.  A bare scan of local parquet files is read by
+    pyarrow with no Spark job; any other frame runs one
+    ``limit(max_rows + 1)`` collect."""
+    import pyarrow.parquet as pq
+
+    footers = _local_parquet_footers(df)
+    if footers is not None and sum(m.num_rows for m in footers.values()) > max_rows:
+        return None
+    if footers is not None and _is_bare_scan(df, footers):
+        want = to_arrow_schema(df.schema)
+        parts = []
+        for path in footers:
+            with pq.ParquetFile(path) as f:
+                parts.append(f.read(columns=df.columns).cast(want))
+        return pa.concat_tables([want.empty_table(), *parts])
+    table = df.limit(max_rows + 1).toArrow()
+    return table if table.num_rows <= max_rows else None
+
+
+def _local_parquet_footers(df: DataFrame) -> dict | None:
+    """Local path -> parquet footer of every file ``df`` scans, in path
+    order, or None when an input is not a local parquet file."""
+    import pyarrow.parquet as pq
+
+    from lakehouse_loader_spark.sinks.staging import local_path
+
+    footers = {}
+    for uri in sorted(df.inputFiles()):
+        if not uri.startswith("file:"):
+            return None
+        try:
+            footers[local_path(uri)] = pq.read_metadata(local_path(uri))
+        except (OSError, ValueError):
+            return None
+    return footers
+
+
+def _is_bare_scan(df: DataFrame, footers: dict) -> bool:
+    """True when ``df`` plans as one unpartitioned parquet relation whose
+    files pyarrow reads exactly as Spark would: every column stored under
+    its own name and the Arrow type Spark's own collect produces, and no
+    Spark legacy calendar or INT96 rebase recorded in a footer."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() != "LogicalRelation":
+        return False
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().toString() != "Parquet"
+        or rel.partitionSchema().length() > 0
+    ):
+        return False
+    want = to_arrow_schema(df.schema)
+    for meta in footers.values():
+        if any(k.startswith(b"org.apache.spark.legacy") for k in meta.metadata or {}):
+            return False
+        have = meta.schema.to_arrow_schema()
+        for field in want:
+            i = have.get_field_index(field.name)
+            if i < 0 or have.field(i).type != field.type:
+                return False
+    return True

@@ -23,6 +23,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
+from lakehouse_loader_spark.session import local_frame
+
 _INVERTED = "inverted"
 _CENTROIDS = "centroids"
 
@@ -85,7 +87,8 @@ def save_ivf_index(
         overwrite=True,
         partition_by=["cid"],
     )
-    cents_df = spark.createDataFrame(
+    cents_df = local_frame(
+        spark,
         [(i, [float(x) for x in row]) for i, row in enumerate(cents)],
         "cid int, vec array<double>",
     ).coalesce(1)
@@ -154,7 +157,8 @@ def save_lsh_index(
         overwrite=True,
         partition_by=["table_id"],
     )
-    cfg = spark.createDataFrame(
+    cfg = local_frame(
+        spark,
         [(int(dim), int(n_tables), int(planes_per_table))],
         "dim int, n_tables int, planes_per_table int",
     ).coalesce(1)

@@ -4526,7 +4526,8 @@ def read_delta_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             )
             for p, a in sorted(adds.items())
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "file_path string, size bigint, num_records bigint, "
             "has_stats boolean, dv_cardinality bigint",
@@ -4541,7 +4542,9 @@ def read_delta_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             )
             for h in table_history(path)
         ]
-        return spark.createDataFrame(
-            rows, "version int, timestamp long, operation string, operation_parameters string"
+        return local_frame(
+            spark,
+            rows,
+            "version int, timestamp long, operation string, operation_parameters string",
         )
     raise ValueError(f"unknown metadata table {table!r} (have files/history)")

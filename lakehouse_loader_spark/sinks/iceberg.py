@@ -5544,7 +5544,8 @@ def read_iceberg_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             )
             for d in data + dels
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "file_path string, content string, record_count bigint, "
             "file_size_in_bytes bigint, has_bounds boolean",
@@ -5560,7 +5561,8 @@ def read_iceberg_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             )
             for s in meta.get("snapshots", [])
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "snapshot_id long, sequence_number long, timestamp_ms long, "
             "operation string, is_current boolean",
@@ -5577,7 +5579,8 @@ def read_iceberg_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             )
             for m in _snapshot_manifests(path, meta)
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "manifest_path string, manifest_length bigint, content string, "
             "sequence_number bigint, added_files_count int, added_rows_count bigint",
@@ -5587,9 +5590,7 @@ def read_iceberg_meta(spark: SparkSession, path: str, table: str) -> DataFrame:
             (name, r["type"], r["snapshot-id"])
             for name, r in sorted((meta.get("refs") or {}).items())
         ]
-        return spark.createDataFrame(
-            rows, "name string, type string, snapshot_id long"
-        )
+        return local_frame(spark, rows, "name string, type string, snapshot_id long")
     raise ValueError(
         f"unknown metadata table {table!r} (have files/snapshots/manifests/refs)"
     )

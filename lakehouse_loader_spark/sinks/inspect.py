@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from lakehouse_loader_spark.sinks import delta as DL
 from lakehouse_loader_spark.sinks import iceberg as IC
+from lakehouse_loader_spark.session import local_frame
 
 _SNAPSHOTS_SCHEMA = T.StructType(
     [
@@ -54,7 +55,7 @@ def iceberg_snapshots(spark: SparkSession, path: str) -> DataFrame:
         )
         for s in meta.get("snapshots", [])
     ]
-    return spark.createDataFrame(rows, _SNAPSHOTS_SCHEMA)
+    return local_frame(spark, rows, _SNAPSHOTS_SCHEMA)
 
 
 _FILES_SCHEMA = T.StructType(
@@ -75,6 +76,10 @@ def iceberg_files(
     """One row per live file of a snapshot (the `table.files` metadata
     table): data files content=0, position/DV deletes 1, equality deletes
     2 — the same split the reader applies."""
+    return local_frame(spark, _iceberg_file_rows(path, snapshot_id), _FILES_SCHEMA)
+
+
+def _iceberg_file_rows(path: str, snapshot_id: int | None = None) -> list[tuple]:
     _, meta = IC._read_metadata(path)
     data, deletes, _ = IC._split_live_entries(path, meta, snapshot_id)
 
@@ -89,7 +94,7 @@ def iceberg_files(
             {k: ("" if v is None else str(v)) for k, v in part.items()},
         )
 
-    return spark.createDataFrame([row(d) for d in data + deletes], _FILES_SCHEMA)
+    return [row(d) for d in data + deletes]
 
 
 _MANIFESTS_SCHEMA = T.StructType(
@@ -120,7 +125,7 @@ def iceberg_manifests(spark: SparkSession, path: str) -> DataFrame:
         )
         for m in IC._snapshot_manifests(path, meta)
     ]
-    return spark.createDataFrame(rows, _MANIFESTS_SCHEMA)
+    return local_frame(spark, rows, _MANIFESTS_SCHEMA)
 
 
 _REFS_SCHEMA = T.StructType(
@@ -142,7 +147,7 @@ def iceberg_refs(spark: SparkSession, path: str) -> DataFrame:
         cur = meta.get("current-snapshot-id", -1)
         if cur != -1:
             rows.append(("main", "branch", cur))
-    return spark.createDataFrame(rows, _REFS_SCHEMA)
+    return local_frame(spark, rows, _REFS_SCHEMA)
 
 
 _DELTA_FILES_SCHEMA = T.StructType(
@@ -162,6 +167,10 @@ def delta_files(
 ) -> DataFrame:
     """One row per live Add action at a version (delta-spark's
     `DESCRIBE DETAIL` file inventory / the `_delta_log` state)."""
+    return local_frame(spark, _delta_file_rows(path, version), _DELTA_FILES_SCHEMA)
+
+
+def _delta_file_rows(path: str, version: int | None = None) -> list[tuple]:
     _, _, adds = DL._read_log(path, as_of_version=version)
 
     def row(a: dict):
@@ -181,7 +190,7 @@ def delta_files(
             a.get("deletionVector") is not None,
         )
 
-    return spark.createDataFrame([row(a) for a in adds.values()], _DELTA_FILES_SCHEMA)
+    return [row(a) for a in adds.values()]
 
 
 _HISTORY_SCHEMA = T.StructType(
@@ -208,7 +217,7 @@ def delta_history(spark: SparkSession, path: str) -> DataFrame:
         )
         for h in DL.table_history(path)
     ]
-    return spark.createDataFrame(rows, _HISTORY_SCHEMA)
+    return local_frame(spark, rows, _HISTORY_SCHEMA)
 
 
 def describe_detail(spark: SparkSession, path: str) -> DataFrame:
@@ -218,18 +227,17 @@ def describe_detail(spark: SparkSession, path: str) -> DataFrame:
     ids are tracked (Delta rowTracking / Iceberg row lineage)."""
     fmt = "iceberg" if os.path.isdir(os.path.join(path, "metadata")) else "delta"
     if fmt == "iceberg":
-        from lakehouse_loader_spark.sinks import iceberg as IC
-
-        files = iceberg_files(spark, path).collect()
-        data = [f for f in files if f.content == 0]
+        # (content, file_path, record_count, file_size_in_bytes, ...)
+        files = _iceberg_file_rows(path)
+        data = [(f[2], f[3]) for f in files if f[0] == 0]
         n_deletes = len(files) - len(data)
         clustering = ", ".join(IC.table_sort_order(path)) or None
         row_ids = IC._row_lineage_enabled(IC._read_metadata(path)[1])
     else:
-        from lakehouse_loader_spark.sinks import delta as DL
-
-        data = delta_files(spark, path).collect()
-        n_deletes = sum(1 for f in data if f.has_deletion_vector)
+        # (path, size_bytes, num_records, ..., has_deletion_vector)
+        files = _delta_file_rows(path)
+        data = [(f[2], f[1]) for f in files]
+        n_deletes = sum(1 for f in files if f[5])
         clustering = ", ".join(DL.table_cluster_by(path)) or None
         row_ids = DL._row_tracking_enabled(DL._read_log(path)[1])
     schema = T.StructType(
@@ -244,9 +252,10 @@ def describe_detail(spark: SparkSession, path: str) -> DataFrame:
             T.StructField("row_ids_tracked", T.BooleanType()),
         ]
     )
-    total_records = sum((f.record_count if fmt == "iceberg" else f.num_records) or 0 for f in data)
-    total_bytes = sum((f.file_size_in_bytes if fmt == "iceberg" else f.size_bytes) or 0 for f in data)
-    return spark.createDataFrame(
+    total_records = sum(n or 0 for n, _ in data)
+    total_bytes = sum(b or 0 for _, b in data)
+    return local_frame(
+        spark,
         [(fmt, path, len(data), total_records, total_bytes, n_deletes, clustering, row_ids)],
         schema,
     )

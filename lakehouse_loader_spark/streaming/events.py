@@ -104,88 +104,6 @@ def stateful_user_totals(stream: DataFrame) -> DataFrame:
     )
 
 
-def stateful_type_histogram(stream: DataFrame) -> DataFrame:
-    """Per-user event-type histogram via ``transformWithStateInPandas`` —
-    the Spark 4 arbitrary-state API that supersedes applyInPandasWithState:
-    MULTIPLE typed state variables per key (ValueState/ListState/MapState,
-    each queryable/updatable entry-wise against the RocksDB state store),
-    plus timers and per-state TTL.  Here each user's state is a MapState
-    keyed by event_type, so a micro-batch touches ONLY the entries its
-    rows hit — with applyInPandasWithState the whole per-user state blob
-    would round-trip every batch.  At scale state size is
-    O(users x live types) in the store, but per-batch IO is O(touched
-    entries) — the point of entry-wise state.
-
-    Emits the RUNNING (n_events, total_value) per (user, type) seen in
-    each batch (update mode): counts grow monotonically, so the emission
-    with the highest count per pair IS the converged total (the parity
-    contract streaming_transformwithstate_parity hash-checks).
-
-    Runtime requirements: the RocksDB state-store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...state.RocksDBStateStoreProvider — transformWithState is not
-    implemented on the default HDFS-backed store) AND the ``protobuf``
-    package (the transformWithState state-server protocol; NOT shipped in
-    this container, so the parity test is dependency-gated like the live
-    Postgres/MinIO suite — tests/test_streaming.py).  The operator itself
-    is complete; it is not registered as a driver query because the gate
-    environment cannot execute it.
-
-    Input pruned to (user_id, event_type, value) before the stateful op —
-    column pruning cannot pass through the Python UDF boundary (see
-    stateful_user_totals)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    stream = stream.select("user_id", "event_type", "value")
-
-    class TypeHistogram(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._hist = handle.getMapState(
-                "hist", "event_type string", "n bigint, total double"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            (user_id,) = key
-            batch: dict[str, list] = {}
-            for pdf in rows:
-                # dropna=False: a NULL event_type is a real group (the
-                # batch GROUP BY keeps it); sentinel-encoded for MapState
-                for et, grp in pdf.groupby("event_type", dropna=False):
-                    acc = batch.setdefault(_type_key(et), [0, 0.0])
-                    acc[0] += len(grp)
-                    acc[1] += float(grp["value"].sum())
-            types, ns, totals = [], [], []
-            for et in sorted(batch):
-                dn, dv = batch[et]
-                prior = self._hist.getValue((et,)) if self._hist.containsKey((et,)) else None
-                n = (prior[0] if prior else 0) + dn
-                tv = (prior[1] if prior else 0.0) + dv
-                self._hist.updateValue((et,), (n, tv))
-                types.append(et)
-                ns.append(n)
-                totals.append(tv)
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(types),
-                    "event_type": [
-                        None if t == _NULL_TYPE else t for t in types
-                    ],
-                    "n_events": ns,
-                    "total_value": totals,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=TypeHistogram(),
-        outputStructType="user_id BIGINT, event_type STRING, n_events BIGINT, total_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def stream_stream_interval_join(
     clicks: DataFrame,
     purchases: DataFrame,
@@ -233,25 +151,24 @@ def stream_stream_interval_join(
 
 
 def stateful_type_histogram_fallback(stream: DataFrame) -> DataFrame:
-    """The applyInPandasWithState twin of ``stateful_type_histogram`` —
-    SAME computation (running per-(user, event_type) count/value totals,
-    update mode, only the types a batch touches are emitted), expressed on
-    the Spark 3-era arbitrary-state API so the semantics are executable
-    where transformWithStateInPandas's runtime dependencies (protobuf
-    state-server protocol + RocksDB provider) are absent.
+    """Per-user event-type histogram on applyInPandasWithState: the
+    running per-(user, event_type) count/value totals, update mode, only
+    the types a batch touches emitted.  Counts grow monotonically, so the
+    emission with the highest count per pair IS the converged total (the
+    contract streaming_stateful_v2_parity hash-checks).  The name is kept
+    from when a transformWithStateInPandas form existed beside it; that
+    form needed the ``protobuf`` package, which no verified environment
+    installs, and was deleted.
 
-    State is keyed per USER with the histogram as parallel arrays (the
-    pre-MapState encoding of a map state): the v2 operator's per-entry
-    batch IO within a user key is traded for one user-sized state blob per
+    State is keyed per USER with the histogram as parallel arrays (a map
+    state's encoding on this API): one user-sized state blob per
     round-trip — bounded by |live event types|, a handful of entries.  The
-    coarser key is also the throughput lever for THIS api: Python-side
+    coarser key is also the throughput lever for this API: Python-side
     cost is dominated by the per-group fixed overhead (one state
     round-trip + one yielded pd.DataFrame is ~150µs regardless of rows),
     so grouping by (user, type) pays |users| x |types| fixed costs per
     batch where this pays |users| — measured 1.9s vs 0.8s per 50k-row
-    micro-batch at sf0.1.  The driver query streaming_stateful_v2_parity
-    runs whichever of the two the environment supports; both converge to
-    the batch GROUP BY.
+    micro-batch at sf0.1.
 
     Input pruned to (user_id, event_type, value) before the stateful op —
     column pruning cannot pass through the Python UDF boundary (see
@@ -308,18 +225,6 @@ def stateful_type_histogram_fallback(stream: DataFrame) -> DataFrame:
     )
 
 
-def transformwithstate_runtime_available() -> bool:
-    """True iff this environment can EXECUTE transformWithStateInPandas:
-    the operator's state-server protocol needs the protobuf package (not
-    shipped everywhere; the RocksDB provider rides with Spark 4)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def session_window_agg(
     stream: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
 ) -> DataFrame:
@@ -362,8 +267,8 @@ def streaming_dedup(
     )
 
 
-# NULL event_type sentinel for the stateful histogram operators: state
-# array entries / MapState keys cannot hold None, and pandas groupby drops
+# NULL event_type sentinel for the stateful histogram operator: state
+# array entries cannot hold None, and pandas groupby drops
 # NaN groups by default — either would silently lose NULL-typed rows'
 # value mass while the batch GROUP BY oracle keeps NULL as a group.  The
 # \x00 prefix cannot collide with real event types and sorts first.

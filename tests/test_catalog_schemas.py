@@ -100,3 +100,32 @@ def test_table_loads_with_expected_dtypes(spark, name):
     )
     # one action so a lazy read error can't hide behind schema-only checks
     assert df.limit(1).count() >= 0
+
+
+def test_reload_reuses_the_inferred_schema_until_the_files_change(spark, tmp_path):
+    """A second load of unchanged table files runs no Spark job (the
+    schema inferred by the first load is reused within the session); a
+    rewritten table is inferred again."""
+    import uuid
+
+    sf = str(tmp_path)
+    spark.range(3).selectExpr("cast(id as int) AS r_regionkey").write.parquet(
+        f"{sf}/region.parquet"
+    )
+    assert load_table(spark, sf, "region").columns == ["r_regionkey"]
+    sc = spark.sparkContext
+    group = f"catalog-reload-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog reload")
+    try:
+        again = load_table(spark, sf, "region")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert again.count() == 3
+    spark.range(2).selectExpr(
+        "cast(id as int) AS r_regionkey", "'x' AS r_name"
+    ).write.mode("overwrite").parquet(f"{sf}/region.parquet")
+    rewritten = load_table(spark, sf, "region")
+    assert rewritten.columns == ["r_regionkey", "r_name"]
+    assert rewritten.count() == 2

@@ -2,23 +2,23 @@
 
 Every ``collect()``/``toPandas()``/``toArrow()``/``toLocalIterator()``/
 ``first()``/``head()``/``take()`` in the package must be driver-bounded — an aggregate result, a schema/dim
-probe, commit metadata (one row per file), or a gated small-graph path.
+probe, commit metadata (one row per file), or a gated driver regime's
+bounded collect (``session.collect_bounded``, the one such site).
 This test freezes the audited budget per file; ANY new materialization
 site fails it until the author proves the new site is bounded and raises
 the budget here (with a line in the table's rationale).
 
 The audit (r9): cli.py prints query output (user-facing, explicitly
 bounded by --limit); sinks/* collect commit METADATA (one row per data
-file / manifest, never data rows); operators/clusters.py's two are the
-union-find collect of the gated LOCAL_CC_MAX_EDGES small-graph path and
-the star-contraction round's 2-long fingerprint first();
-operators/graph.py the gated LOCAL_PR_MAX_EDGES driver-regime edge probe
-and the optional tol early-exit's 1-row L1 aggregate; queries/staging.py
-the gated driver-regime collect of small staged artifacts;
-operators/similarity.py probes vector dim / k centroids (constant-size);
-sources/pgwire.py:~1075 a 1-row written-count aggregate;
-queries/pipeline.py collects min/max bounds and constant-size stats
-frames.  COVERAGE.md's scale-notes section points here.
+file / manifest, never data rows); session.py's collect_bounded is the
+one gated collect every driver regime (union-find, PageRank, small
+staged artifacts) goes through; operators/clusters.py keeps the
+star-contraction round's 2-long fingerprint first(), operators/graph.py
+the optional tol early-exit's 1-row L1 aggregate, queries/staging.py the
+IVF centroid rows; operators/similarity.py probes vector dim / k
+centroids (constant-size); sources/pgwire.py:~1075 a 1-row
+written-count aggregate; queries/pipeline.py collects min/max bounds
+and constant-size stats frames.  COVERAGE.md's scale-notes section points here.
 """
 
 from __future__ import annotations
@@ -46,11 +46,18 @@ BUDGET = {
     # collect moved into keys.py (one source aggregate, one shared probe)
     "sinks/iceberg.py": 4,  # r14 −1: same move
     "sinks/incremental.py": 3,
-    "sinks/inspect.py": 2,
-    # clusters.py: the union-find edge collect, now through toArrow()
-    # (the same gated LOCAL_CC_MAX_EDGES site), plus the contraction
-    # round's fingerprint first()
-    "operators/clusters.py": 2,
+    # inspect.py −2: describe_detail sums the file rows it builds instead
+    # of collecting them back from the frames built from them
+    "sinks/inspect.py": 0,
+    # clusters.py −1: the union-find's count() and edge collect are one
+    # session.collect_bounded call; left is the contraction round's
+    # fingerprint first()
+    "operators/clusters.py": 1,
+    # session.py: collect_bounded's limit(max_rows + 1).toArrow(), the one
+    # gated collect of every driver regime (LOCAL_CC_MAX_EDGES,
+    # LOCAL_PR_MAX_EDGES, LOCAL_DEDUP_MAX_DOCS) — bounded by the caller's
+    # constant gate, never by data scale
+    "session.py": 1,
     # keys.py (r14): the ONE merge-key contract aggregate shared by
     # merge_delta/merge_iceberg — a single one-row agg (count / distinct /
     # has-null) over the merge source, moved here from both sinks
@@ -64,11 +71,10 @@ BUDGET = {
     # pair-dimension check; load_lsh_index collects its one-row config
     # table — never corpus-sized
     "sinks/ann_index.py": 3,
-    # graph.py +1: pagerank's driver-regime probe collects the
-    # distinct edge list through limit(LOCAL_PR_MAX_EDGES + 1).toArrow()
-    # — bounded by the constant gate, never by data scale; the other site
-    # is the tol early-exit's 1-row L1 aggregate
-    "operators/graph.py": 2,
+    # graph.py −1: pagerank's driver-regime edge probe moved to
+    # session.collect_bounded; left is the tol early-exit's 1-row L1
+    # aggregate
+    "operators/graph.py": 1,
     # text.py (r15): bpe_train_merges collects ONE top-pair row per
     # training round, k (=8) rounds — constant driver state; the merge
     # list it accumulates is the k-entry trained artifact itself
@@ -80,11 +86,9 @@ BUDGET = {
     # (n_centroids=16 rows, constant driver state — the same bounded
     # artifact train_ivf_centroids_sampled returns; queries must probe
     # the exact centroids the inverted file was assigned under)
-    # staging.py +1: _collect_below, the driver regime's one bounded
-    # collect, limit(gate + 1).toArrow() — gated by LOCAL_DEDUP_MAX_DOCS
-    # (shingle artifact) or LOCAL_PR_MAX_EDGES (pagerank edge artifact),
-    # constants, never data scale
-    "queries/staging.py": 2,
+    # staging.py −1: the driver regime's bounded collect moved to
+    # session.collect_bounded
+    "queries/staging.py": 1,
 }
 
 _PAT = re.compile(r"\.(collect|toPandas|toArrow|toLocalIterator|first|head|take)\(")
@@ -128,16 +132,22 @@ def test_budget_is_not_stale():
     assert not slack, f"budget exceeds actual sites, tighten it: {slack}"
 
 
-def test_no_empty_frames_built_from_lists():
-    # ``createDataFrame([], schema)`` plans as ``Scan ExistingRDD``, whose
-    # every action starts Python workers; ``session.local_frame(spark, [],
-    # schema)`` builds the same empty frame as a LocalTableScan
+# the driver↔Spark boundary calls, each allowed in session.py only
+_BOUNDARY = ("createDataFrame(", "toArrow(")
+
+
+def test_boundary_calls_only_in_session():
+    # a frame built from driver rows goes through session.local_frame (a
+    # list handed to createDataFrame plans as ``Scan ExistingRDD``, whose
+    # every action starts Python workers) and a gated collect through
+    # session.collect_bounded
     bad = []
     for root, _dirs, files in os.walk(PKG):
         for f in sorted(files):
-            if f.endswith(".py"):
+            rel = os.path.relpath(os.path.join(root, f), PKG)
+            if f.endswith(".py") and rel != "session.py":
                 with open(os.path.join(root, f)) as fh:
                     for n, line in enumerate(fh, 1):
-                        if "createDataFrame([]" in line.split("#")[0]:
-                            bad.append((os.path.relpath(os.path.join(root, f), PKG), n))
-    assert not bad, f"build empty frames with session.local_frame: {bad}"
+                        code = line.split("#")[0]
+                        bad += [(rel, n, c) for c in _BOUNDARY if c in code]
+    assert not bad, f"cross the boundary through lakehouse_loader_spark.session: {bad}"

@@ -650,28 +650,31 @@ def test_staged_artifacts_match_inline_derivations(spark, staging_regime):
 
 
 def test_dedup_staging_job_budget(spark, monkeypatch):
-    """Below the gate the shingle and signature builds run at most 2 Spark
-    jobs together (the shingle probe and the documents scan's schema
-    read), write no Spark parquet, and plan no pandas UDF
-    (``ArrowEvalPython``): the signatures are signed on the driver."""
+    """Below the gate the shingle and signature builds run at most 1 Spark
+    job together (the shingle collect; the documents table's schema was
+    inferred by an earlier read in the session), write no Spark parquet,
+    and plan no pandas UDF (``ArrowEvalPython``): the signatures are
+    signed on the driver."""
     import uuid
 
+    from lakehouse_loader_spark.catalog import load_table
     from lakehouse_loader_spark.queries import staging
     from tests.conftest import SF_SMOKE
 
     plans = []
-    probe = staging._collect_below
+    collect = staging.collect_bounded
 
-    def recording_probe(df, gate):
+    def recording_collect(df, max_rows):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return probe(df, gate)
+        return collect(df, max_rows)
 
     def no_spark_write(*args):
         raise AssertionError("a Spark staging write ran below the gate")
 
-    monkeypatch.setattr(staging, "_collect_below", recording_probe)
+    monkeypatch.setattr(staging, "collect_bounded", recording_collect)
     monkeypatch.setattr(staging, "_staged_write", no_spark_write)
     staging._registry(spark).clear()
+    load_table(spark, SF_SMOKE, "documents")
     sc = spark.sparkContext
     group = f"dedup-staging-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "dedup staging budget")
@@ -682,7 +685,7 @@ def test_dedup_staging_job_budget(spark, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     try:
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
         plans.append(sigs._jdf.queryExecution().executedPlan().toString())
         assert len(plans) == 2
         assert not [p for p in plans if "ArrowEvalPython" in p], plans
@@ -756,27 +759,34 @@ def test_staged_artifacts_honor_scratch_dir_conf(spark, tmp_path):
 
 def test_driver_probe_skipped_when_inputs_exceed_the_gate(spark):
     """The bounded collect is tried only when the frame's inputs (their
-    parquet footers) hold at most ``gate`` rows: above that it runs no
-    Spark job, so a distributed build never pays a discarded probe."""
+    parquet footers) hold at most ``max_rows`` rows: above that it runs no
+    Spark job, so a distributed build never pays a discarded probe.  A
+    bare scan of local parquet files within the bound is read by pyarrow,
+    also with no Spark job, into the table Spark's own collect returns."""
     import uuid
 
     from lakehouse_loader_spark.catalog import load_table
-    from lakehouse_loader_spark.queries.staging import _collect_below, _input_rows
+    from lakehouse_loader_spark.session import collect_bounded
     from tests.conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    n = _input_rows(docs)
-    assert n == docs.count()
+    n = docs.count()
     sc = spark.sparkContext
     group = f"probe-skip-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "probe skip")
     try:
-        assert _collect_below(docs, n - 1) is None
+        assert collect_bounded(docs, n - 1) is None
+        got = collect_bounded(docs, n)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
-    assert _collect_below(docs, n).num_rows == n
+    assert got.sort_by("doc_id").equals(docs.toArrow().sort_by("doc_id"))
+    # a derived frame is not read by pyarrow: within the bound it runs
+    # the limit collect
+    derived = docs.select((docs.doc_id + 1).alias("d"))
+    assert collect_bounded(derived, n - 1) is None
+    assert collect_bounded(derived, n).num_rows == n
 
 
 def test_schemed_scratch_root_stages_distributed(spark, tmp_path):

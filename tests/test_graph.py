@@ -284,3 +284,28 @@ def test_driver_regime_result_is_a_local_scan(spark):
     e = spark.createDataFrame([(1, 2), (2, 1), (3, 1)], "src long, dst long")
     plan = pagerank(e, iterations=3)._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_warm_graph_pagerank_plans_with_no_job(spark):
+    """Below the gate a warm ``graph_pagerank`` call runs no Spark job: the
+    staged edge files are read by pyarrow (``session.collect_bounded`` on
+    a bare parquet scan), the supersteps run on the driver and the result
+    is an Arrow-built frame."""
+    import uuid
+
+    from lakehouse_loader_spark.queries import REGISTRY, _ensure_loaded
+    from tests.conftest import SF_SMOKE
+
+    _ensure_loaded()
+    fn = REGISTRY["graph_pagerank"].fn
+    cold = fn(spark, SF_SMOKE).collect()
+    sc = spark.sparkContext
+    group = f"pagerank-warm-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm graph_pagerank")
+    try:
+        warm = fn(spark, SF_SMOKE)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sorted(warm.collect()) == sorted(cold)

@@ -15,10 +15,24 @@ ORACLE_KEYS = sorted(k for k, spec in REGISTRY.items() if spec.oracle is not Non
 ROWS_ONLY_KEYS = sorted(k for k, spec in REGISTRY.items() if spec.oracle is None)
 
 
+def _python_rdd_scans(df) -> list[str]:
+    """The optimized plan's ``LogicalRDD`` leaves whose RDD lineage holds a
+    ``PythonRDD``: a list-built frame, whose every action starts Python
+    workers (``session.local_frame`` builds a LocalTableScan instead)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [
+        leaf.toString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName() == "LogicalRDD" and "PythonRDD" in leaf.rdd().toDebugString()
+    ]
+
+
 @pytest.mark.parametrize("key", ORACLE_KEYS)
 def test_query_matches_oracle(spark, ddb, key):
     spec = REGISTRY[key]
-    spark_pdf = spec.fn(spark, SF_ORACLE).toPandas()
+    df = spec.fn(spark, SF_ORACLE)
+    assert _python_rdd_scans(df) == [], key
+    spark_pdf = df.toPandas()
     oracle_pdf = ddb.execute(spec.oracle).fetchdf()
     assert_frames_match(spark_pdf, oracle_pdf, key)
 

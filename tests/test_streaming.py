@@ -540,93 +540,10 @@ def test_stream_upsert_to_iceberg_via_equality_deletes(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs the protobuf package "
-    "(state-server protocol) — not shipped in this container",
-)
-def test_transformwithstate_type_histogram_converges(spark, tmpdir):
-    """Spark-4 arbitrary-state API parity: the MapState-per-event-type
-    histogram (stateful_type_histogram) converges to the batch GROUP BY
-    over a bounded file stream.  Dependency-gated the same way the live
-    Postgres/MinIO e2e suite is environment-gated."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from lakehouse_loader_spark.streaming.events import (
-        read_event_stream,
-        stateful_type_histogram,
-    )
-
-    src = os.path.join(tmpdir, "src")
-    rows = [
-        (i, f"2024-01-01 00:{i % 60:02d}:00", i % 3, ["click", "view"][i % 2], float(i), "{}")
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    for part in range(3):
-        df.filter(F.col("event_id") % 3 == part).coalesce(1).write.parquet(
-            os.path.join(src, f"f{part}")
-        )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            stateful_type_histogram(
-                read_event_stream(spark, os.path.join(src, "f*"), max_files_per_trigger=1)
-            )
-            .writeStream.trigger(availableNow=True)
-            .outputMode("update")
-            .format("memory")
-            .queryName("tws_hist")
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-
-    got = {
-        (r.user_id, r.event_type): (r.n_events, r.total_value)
-        for r in spark.table("tws_hist")
-        .groupBy("user_id", "event_type")
-        .agg(F.max("n_events").alias("n_events"), F.max_by("total_value", "n_events").alias("total_value"))
-        .collect()
-    }
-    want = {
-        (r.user_id, r.event_type): (r.n, r.tv)
-        for r in df.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_stateful_v2_fallback_twin_matches_batch_groupby(spark, tmpdir):
-    """stateful_type_histogram_fallback (the applyInPandasWithState twin
-    that streaming_stateful_v2_parity runs where transformWithState's
-    protobuf dependency is absent) converges to the batch GROUP BY on the
-    same per-(user, type) histogram — the same contract the v2 operator's
-    protobuf-gated parity test pins."""
+    """stateful_type_histogram_fallback (the applyInPandasWithState
+    operator streaming_stateful_v2_parity runs) converges to the batch
+    GROUP BY on the same per-(user, type) histogram."""
     import os
     import uuid
 
@@ -635,7 +552,6 @@ def test_stateful_v2_fallback_twin_matches_batch_groupby(spark, tmpdir):
     from lakehouse_loader_spark.streaming.events import (
         read_event_stream,
         stateful_type_histogram_fallback,
-        transformwithstate_runtime_available,
     )
 
     df = (
@@ -678,8 +594,6 @@ def test_stateful_v2_fallback_twin_matches_batch_groupby(spark, tmpdir):
     want = want.select("user_id", "event_type", "n_events", "total_value")
     diff = got.exceptAll(want).count() + want.exceptAll(got).count()
     assert diff == 0
-    # document which path the driver query would take in THIS container
-    assert isinstance(transformwithstate_runtime_available(), bool)
 
 
 def test_stream_stream_interval_join_matches_batch_and_evicts(spark, tmpdir):
