@@ -2130,12 +2130,13 @@ def _dv_positions_frame(
     spark: SparkSession, path: str, dv_adds: dict[str, dict]
 ) -> tuple[DataFrame, int]:
     """The deleted positions of ``dv_adds`` as a (__dv_path, __dv_pos)
-    DataFrame, plus their total cardinality.  The driver materializes ONLY
-    the compressed bitmap blobs (CRC-checked; bytes ~ compressed delete
-    size, the same bound the write path guarantees); positions expand
-    executor-side, one blob per task (``dv.positions_frame``, shared with
-    the Iceberg DV read path).  Cardinality for the broadcast gate comes
-    from the descriptors, so no decode is needed to decide."""
+    DataFrame, plus their total cardinality.  The driver reads the
+    CRC-checked bitmap blobs and turns them into one row per touched
+    32,768-position bucket (~4 KB at most each, the same bound the write
+    path keeps); positions expand executor-side in the JVM
+    (``dv.positions_frame``, shared with the Iceberg DV read path).
+    Cardinality for the broadcast gate comes from the descriptors, so no
+    decode is needed to decide."""
     from lakehouse_loader_spark.sinks import dv as dvmod
 
     blobs, total = [], 0
@@ -4063,53 +4064,38 @@ def _dv_mask_commit(
     """Shared merge-on-read commit skeleton: mask the rows in ``masked``
     (a DataFrame[__path, __pos]) behind deletion vectors and commit, plus
     any ``new_adds`` (the appended replacement/insert files for UPDATE and
-    MERGE).  The bitmaps are BUILT EXECUTOR-SIDE (one applyInPandas group
-    per affected file serializes its sorted positions); only the
-    compressed blobs reach the driver, which merges them with any existing
-    DV, packs them into one DV file (or inline descriptors under
-    DV_INLINE_MAX), and commits remove+re-add actions.  Driver memory is
-    therefore ∝ compressed delete size, not row count.  Files whose every
-    physical row dies are dropped outright instead of carrying a
-    full-file DV.  Returns {"masked_rows", "dv_files", "removed_files"};
+    MERGE).  One JVM aggregate (``dv.collect_positions``) brings each
+    affected file's positions to the driver per 32,768-position bucket, a
+    list or a 4 KB bitset, so driver memory is ~4 KB per touched bucket,
+    not per row, and no Python worker runs.  The driver unions them with
+    any existing DV, serializes, packs the bitmaps into one DV file (or
+    inline descriptors under DV_INLINE_MAX), and commits remove+re-add
+    actions.  Files whose every physical row dies are dropped outright
+    instead of carrying a full-file DV.  Returns {"masked_rows", "dv_files", "removed_files"};
     masked_rows == 0 means NO commit was made (unless new_adds exist,
     which still commit)."""
     import numpy as np
-    import pandas as pd
 
     from lakehouse_loader_spark.sinks import dv as dvmod
 
-    def _to_blob(pdf: pd.DataFrame) -> pd.DataFrame:
-        pos = np.sort(pdf["__pos"].to_numpy(np.int64))
-        return pd.DataFrame(
-            {
-                "__path": [pdf["__path"].iloc[0]],
-                "blob": [dvmod.serialize_positions(pos)],
-            }
-        )
-
-    blob_rows = (
-        masked.groupBy("__path")
-        .applyInPandas(_to_blob, "__path string, blob binary")
-        .collect()
-    )
+    masked_pos = dvmod.collect_positions(masked, "__path", "__pos")
     new_adds = new_adds or []
-    if not blob_rows and not new_adds:
+    if not masked_pos and not new_adds:
         return {"masked_rows": 0, "dv_files": 0, "removed_files": 0}
 
     abs_root = os.path.abspath(path) + os.sep
     per_file: dict[str, tuple[bytes, int]] = {}  # rel -> (merged blob, card)
     removed_fully: list[str] = []
     n_masked = 0
-    for r in blob_rows:
-        rel = r["__path"].split(abs_root, 1)[1]
-        new_pos = dvmod.deserialize_positions(bytes(r["blob"]))
+    for abs_path, new_pos in masked_pos.items():
+        rel = abs_path.split(abs_root, 1)[1]
         n_masked += len(new_pos)
         old_desc = adds[rel].get("deletionVector")
         if old_desc:
             merged = np.union1d(dvmod.load_descriptor(path, old_desc), new_pos)
-            blob = dvmod.serialize_positions(merged)
         else:
-            merged, blob = new_pos, bytes(r["blob"])
+            merged = new_pos
+        blob = dvmod.serialize_positions(merged)
         stats = json.loads(adds[rel].get("stats", "{}") or "{}")
         nrec = stats.get("numRecords")
         if nrec is not None and len(merged) >= nrec:

@@ -30,9 +30,15 @@ Layout written here (and read back):
   1024 × u64 bitset).  The reader additionally accepts run containers
   (cookie 12347) so any spec-conformant writer's DVs load.
 
-Everything is vectorized numpy — at 100 TB the bitmaps are built
-executor-side (one applyInPandas group per data file) and only the
-compressed bytes ever reach the driver.
+Everything is vectorized numpy on the driver.  Positions cross between
+Spark and the driver in one JVM-native per-bucket form, one row per
+touched 32,768-position bucket of a data file (Spark's
+``bitmap_bucket_number``): a sparse bucket carries its positions as a
+list, a dense one its 4 KB bitset.  A delete's bitmaps are aggregated
+into that form by one JVM aggregate (``collect_positions``) and a DV
+read is expanded from it executor-side (``positions_frame``), so no DV
+path starts a Python worker and the driver holds at most ~4 KB per
+touched bucket, within a small constant of the roaring size.
 """
 
 from __future__ import annotations
@@ -320,9 +326,9 @@ def load_descriptor_bytes(table_path: str, desc: dict) -> bytes:
 
 
 def load_descriptor(table_path: str, desc: dict) -> np.ndarray:
-    """Descriptor → sorted uint64 deleted positions (driver-side expansion;
-    prefer load_descriptor_bytes + executor-side deserialize_positions for
-    scan-path use)."""
+    """Descriptor → sorted uint64 deleted positions, decoded on the driver
+    (a write's union with the old DV); the scan path hands the
+    ``load_descriptor_bytes`` blobs to ``positions_frame`` instead."""
     return deserialize_positions(load_descriptor_bytes(table_path, desc))
 
 
@@ -344,28 +350,117 @@ def descriptor_dv_files(table_path: str, adds: dict[str, dict]) -> set[str]:
     return out
 
 
+# -- the per-bucket form positions cross Spark <-> driver in ---------------
+
+# positions per bucket: Spark's bitmap_* functions split a long into
+# 32,768-bit buckets, ``bitmap_construct_agg`` yields one 4,096-byte bitset
+BUCKET = 32_768
+# a bucket ships as a position list while the list is no bigger than the
+# bitset: 4,096 bytes / 8-byte longs
+SPARSE_MAX = BUCKET // 8 // 8
+
+
+def collect_positions(df, path_col: str, pos_col: str) -> dict[str, np.ndarray]:
+    """Data file path -> sorted unique int64 positions of ``df[path_col,
+    pos_col]``: the write half both formats share.
+
+    One JVM aggregate grouped by (file, 32,768-position bucket) ships each
+    touched bucket to the driver as its position list when it holds at
+    most SPARSE_MAX rows, else as Spark's 4 KB ``bitmap_construct_agg``
+    bitset, so the driver receives at most ~4 KB per touched bucket and no
+    Python worker runs."""
+    from pyspark.sql import functions as F
+
+    key = F.col(pos_col) + 1  # bitmap_* number positions from 1
+    dense = F.col("n") > SPARSE_MAX
+    rows = (
+        df.groupBy(
+            F.col(path_col).alias("path"), F.bitmap_bucket_number(key).alias("bucket")
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.collect_list(pos_col).alias("pos"),
+            F.bitmap_construct_agg(F.bitmap_bit_position(key)).alias("bits"),
+        )
+        .select(
+            "path",
+            "bucket",
+            F.when(~dense, F.col("pos")).alias("pos"),
+            F.when(dense, F.col("bits")).alias("bits"),
+        )
+        .collect()
+    )
+    parts: dict[str, list[np.ndarray]] = {}
+    for r in rows:
+        if r.bits is None:
+            got = np.asarray(r.pos, dtype=np.int64)
+        else:
+            bits = np.unpackbits(np.frombuffer(r.bits, np.uint8), bitorder="little")
+            got = (r.bucket - 1) * BUCKET + np.flatnonzero(bits)
+        parts.setdefault(r.path, []).append(got)
+    return {p: np.unique(np.concatenate(ps)) for p, ps in parts.items()}
+
+
+def bucket_table(blobs: list[tuple[str, bytes]], path_col: str):
+    """(data file path, serialized DV) pairs -> an Arrow table of one row
+    per touched bucket: (path_col, bucket, offsets, words), with the
+    bucket's offsets (0..BUCKET-1) when it holds at most SPARSE_MAX
+    positions, else its bitset as 512 little-endian 64-bit words."""
+    import pyarrow as pa
+
+    paths, buckets, offsets, words = [], [], [], []
+    for path, blob in blobs:
+        pos = deserialize_positions(blob).astype(np.int64)
+        keys, starts = np.unique(pos // BUCKET, return_index=True)
+        for b, chunk in zip(keys, np.split(pos, starts[1:])):
+            off = (chunk % BUCKET).astype(np.int32)
+            paths.append(path)
+            buckets.append(int(b))
+            if len(off) <= SPARSE_MAX:
+                offsets.append(off)
+                words.append(None)
+            else:
+                bits = np.zeros(BUCKET, dtype=np.uint8)
+                bits[off] = 1
+                offsets.append(None)
+                words.append(np.packbits(bits, bitorder="little").view("<i8"))
+    return pa.table(
+        {
+            path_col: pa.array(paths, pa.string()),
+            "bucket": pa.array(buckets, pa.int64()),
+            "offsets": pa.array(offsets, pa.list_(pa.int32())),
+            "words": pa.array(words, pa.list_(pa.int64())),
+        }
+    )
+
+
 def positions_frame(spark, blobs: list[tuple[str, bytes]], path_col: str, pos_col: str):
     """(data file path, serialized DV) pairs → a DataFrame[path_col,
     pos_col] of every deleted row position: the read half both formats
     share (Delta DVs and Iceberg Puffin DV blobs carry the same bytes).
 
-    The driver holds only the compressed blobs; position expansion —
-    O(deleted rows) int64s — runs executor-side, one blob per task:
-    ``spark.range(0, n, 1, n)`` gives partition i the single index i, so
-    there is no local relation to slice and no exchange to run.  The
-    blobs ride in the closure (pyspark broadcasts a closure over 1 MB
-    once instead of shipping it with every task)."""
+    The driver builds ``bucket_table``'s one row per touched bucket (at
+    most ~4 KB each) as a ``LocalTableScan``; the JVM expands it
+    executor-side, a list by ``explode``, a bitset by exploding its 32,768
+    offsets and keeping the set bits, so no Python worker runs and no
+    exchange is planned."""
+    from pyspark.sql import functions as F
 
-    def expand(batches):
-        import pandas as pd
+    from lakehouse_loader_spark.session import local_frame
 
-        for pdf in batches:
-            for i in pdf["id"]:
-                p, blob = blobs[i]
-                pos = deserialize_positions(blob).astype("int64")
-                yield pd.DataFrame({path_col: p, pos_col: pos})
+    buckets = local_frame(
+        spark,
+        bucket_table(blobs, path_col),
+        f"{path_col} string, bucket long, offsets array<int>, words array<long>",
+    )
 
-    n = len(blobs)
-    return spark.range(0, n, 1, n).mapInPandas(
-        expand, f"{path_col} string, {pos_col} long"
+    # a bitset's candidate offsets come from its row (size(words) * 64 ==
+    # BUCKET), so the optimizer folds no 32,768-element literal into the
+    # plan and only dense rows evaluate the sequence
+    offs = F.coalesce("offsets", F.expr("sequence(0, size(words) * 64 - 1)"))
+    is_set = F.expr("shiftrightunsigned(element_at(words, (off >> 6) + 1), off & 63) & 1 = 1")
+    return (
+        buckets.select(path_col, "bucket", "words", F.explode(offs).alias("off"))
+        .filter(F.col("words").isNull() | is_set)
+        .select(path_col, (F.col("bucket") * BUCKET + F.col("off")).alias(pos_col))
     )

@@ -1131,9 +1131,10 @@ def _dv_positions_frame(
     spark: SparkSession, path: str, dv_entries: list[dict]
 ) -> DataFrame:
     """Deletion-vector entries → a (file_path, pos) DataFrame.  The driver
-    reads ONLY the compressed CRC-checked blobs (bytes ~ compressed delete
-    size); positions expand executor-side, one blob per task
-    (``dv.positions_frame``, shared with the Delta DV read path)."""
+    reads the CRC-checked blobs and turns them into one row per touched
+    32,768-position bucket (~4 KB at most each); positions expand
+    executor-side in the JVM (``dv.positions_frame``, shared with the
+    Delta DV read path)."""
     from lakehouse_loader_spark.sinks import dv as DV
     from lakehouse_loader_spark.sinks import puffin as PF
 
@@ -3510,14 +3511,17 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
     second DV delete on the same file writes a superseding bitmap
     containing the union, and the old entry is dropped from the rewritten
     delete manifest, so delete state per file never accumulates as a
-    chain.  Bitmaps are BUILT executor-side (applyInPandas per target
-    file); only compressed blobs transit the driver — the same bound as
-    the Delta DV write path.  First DV commit bumps the table to
-    format-version 3."""
-    import pandas as pd  # noqa: F401
+    chain.  One JVM aggregate (``dv.collect_positions``) brings the matched
+    positions to the driver per 32,768-position bucket (a list or a 4 KB
+    bitset, so ~4 KB per touched bucket and no Python worker — the same
+    bound as the Delta DV write path); the driver unions them with the old
+    DVs, whose blobs it already holds, and serializes.  First DV commit
+    bumps the table to format-version 3."""
+    import numpy as np
 
     from pyspark.sql import functions as F
 
+    from lakehouse_loader_spark.sinks import dv as DV
     from lakehouse_loader_spark.sinks import puffin as PF
     from lakehouse_loader_spark.sinks.delta import ConcurrentModificationError
     from lakehouse_loader_spark.sinks.staging import local_path
@@ -3541,12 +3545,13 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
         spark, scan, path, delete_entries, data_entries,
         meta["schemas"][meta["current-schema-id"]],
     )
-    matches = scan.filter(F.coalesce(F.expr(predicate), F.lit(False))).select(
-        F.col("__path").alias("file_path"), F.col("__pos").alias("pos")
-    )
+    matches = scan.filter(F.coalesce(F.expr(predicate), F.lit(False)))
+    new_pos = DV.collect_positions(matches, "__path", "__pos")
+    if not new_pos:
+        return {"deleted_rows": 0, "delete_files": 0, "data_files": len(data_entries)}
 
-    # existing DVs: compressed blobs only on the driver, keyed by target;
-    # the superseding bitmap must CONTAIN the old one (spec invariant)
+    # existing DVs, keyed by target: the superseding bitmap must CONTAIN
+    # the old one (spec invariant)
     old_dvs = {
         d["referenced_data_file"]: PF.read_blob(
             _abs_file(path, d["file_path"]),
@@ -3556,47 +3561,16 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
         for d in delete_entries
         if _is_dv_entry(d)
     }
-    bc_old = spark.sparkContext.broadcast(old_dvs)
-
-    def build(key, pdf):
-        import numpy as _np
-        import pandas as _pd
-
-        from lakehouse_loader_spark.sinks import dv as _dv
-
-        (fp,) = key
-        pos = _np.unique(pdf["pos"].to_numpy(dtype="int64"))
-        n_new = len(pos)
-        old = bc_old.value.get(fp)
-        if old is not None:
-            pos = _np.union1d(pos, _dv.deserialize_positions(old).astype("int64"))
-        ser = _dv.serialize_positions(pos)
-        return _pd.DataFrame(
-            {
-                "file_path": [fp],
-                "blob": [bytearray(ser)],
-                "card": [len(pos)],
-                "new_rows": [n_new],
-            }
-        )
-
-    blob_rows = (
-        matches.groupBy("file_path")
-        .applyInPandas(build, "file_path string, blob binary, card long, new_rows long")
-        .collect()
-    )
-    if not blob_rows:
-        return {"deleted_rows": 0, "delete_files": 0, "data_files": len(data_entries)}
-    n_deleted = sum(r.new_rows for r in blob_rows)
+    blob_rows = []  # (target file, serialized union, its cardinality)
+    for fp, pos in sorted(new_pos.items()):
+        if fp in old_dvs:
+            pos = np.union1d(pos, DV.deserialize_positions(old_dvs[fp]).astype("int64"))
+        blob_rows.append((fp, DV.serialize_positions(pos), len(pos)))
+    n_deleted = sum(len(p) for p in new_pos.values())
 
     snapshot_id = uuid.uuid4().int % (1 << 62)
     sequence_number = meta["last-sequence-number"] + 1
-    rel, blob_metas = PF.write_dv_puffin(
-        path,
-        [(r.file_path, bytes(r.blob), int(r.card)) for r in blob_rows],
-        snapshot_id,
-        sequence_number,
-    )
+    rel, blob_metas = PF.write_dv_puffin(path, blob_rows, snapshot_id, sequence_number)
     puffin_size = os.path.getsize(os.path.join(path, rel))
     new_delete_entries = [
         {
@@ -3604,17 +3578,17 @@ def _mor_delete_dv_iceberg(spark: SparkSession, path: str, predicate: str) -> di
             "file_path": rel,
             "file_format": "PUFFIN",
             "partition": {},
-            "record_count": int(r.card),
+            "record_count": card,
             "file_size_in_bytes": puffin_size,
-            "referenced_data_file": r.file_path,
+            "referenced_data_file": fp,
             "content_offset": int(m["offset"]),
             "content_size_in_bytes": int(m["length"]),
         }
-        for r, m in zip(blob_rows, blob_metas)
+        for (fp, _blob, card), m in zip(blob_rows, blob_metas)
     ]
     manifest = _write_manifest(path, snapshot_id, new_delete_entries, meta, content=1)
 
-    superseded = set(old_dvs) & {r.file_path for r in blob_rows}
+    superseded = set(old_dvs) & set(new_pos)
     consolidated = None
     if superseded:
         # re-emit surviving delete entries without the superseded DVs;

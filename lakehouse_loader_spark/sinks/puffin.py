@@ -115,7 +115,8 @@ def write_dv_puffin(
 
 def read_blob(file_abs: str, offset: int, length: int) -> bytes:
     """One deletion-vector-v1 blob → the magic+vector bytes (COMPRESSED —
-    callers expand positions executor-side), CRC-32C and length verified:
+    ``dv.positions_frame`` expands them in the JVM), CRC-32C and length
+    verified:
     a torn bitmap must fail loudly, never silently undelete rows."""
     with open(file_abs, "rb") as fh:
         fh.seek(offset)

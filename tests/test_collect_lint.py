@@ -10,7 +10,8 @@ the budget here (with a line in the table's rationale).
 
 The audit (r9): cli.py prints query output (user-facing, explicitly
 bounded by --limit); sinks/* collect commit METADATA (one row per data
-file / manifest, never data rows); session.py's collect_bounded is the
+file / manifest, never data rows), and sinks/dv.py one row per touched
+32,768-position DV bucket; session.py's collect_bounded is the
 one gated collect every driver regime (union-find, PageRank, small
 staged artifacts) goes through; operators/clusters.py keeps the
 star-contraction round's 2-long fingerprint first(), operators/graph.py
@@ -38,14 +39,22 @@ BUDGET = {
     # delta.py −2: MERGE's stats range-join collect and key-bounds first()
     # are gone (driver-side stats pruning over the one source aggregate;
     # the file probe is keys.probe_matches)
-    "sinks/delta.py": 3,  # r14 −1: the merge key-contract agg moved to keys.py
+    # delta.py −1: the DV bitmap collect moved to dv.collect_positions
+    "sinks/delta.py": 2,  # r14 −1: the merge key-contract agg moved to keys.py
     # iceberg.py r10 +1: the CoW lineage probe (:3088) collects one row per
     # affected FILE (count per __path), bounded by live-file count like
     # every other sink-side commit-metadata collect
     # iceberg.py −2: MERGE's key-bounds collect and per-file probe
     # collect moved into keys.py (one source aggregate, one shared probe)
-    "sinks/iceberg.py": 4,  # r14 −1: same move
+    # iceberg.py −1: the DV bitmap collect moved to dv.collect_positions
+    "sinks/iceberg.py": 3,  # r14 −1: same move
     "sinks/incremental.py": 3,
+    # dv.py: collect_positions, the DV write half both formats share, is
+    # one aggregate grouped by (file, 32,768-position bucket) that ships a
+    # position list of at most 512 longs or a 4 KB bitset per touched
+    # bucket — bounded by the delete's roaring size, never one row per
+    # deleted position
+    "sinks/dv.py": 1,
     # inspect.py −2: describe_detail sums the file rows it builds instead
     # of collecting them back from the frames built from them
     "sinks/inspect.py": 0,
@@ -151,3 +160,44 @@ def test_boundary_calls_only_in_session():
                         code = line.split("#")[0]
                         bad += [(rel, n, c) for c in _BOUNDARY if c in code]
     assert not bad, f"cross the boundary through lakehouse_loader_spark.session: {bad}"
+
+
+# Python-worker call sites allowed in sinks/ (file -> count): every other
+# sink path runs in the JVM, so no write, DML or read starts a pandas worker
+PY_WORKER_BUDGET = {
+    # write_webdataset_shards and write_avro_shards: each executor streams
+    # its partition into a tar / Avro file with Python's tarfile and the
+    # Avro encoder; neither format has a JVM writer here
+    "sinks/export.py": 2,
+    # the Iceberg bucket[N] partition transform: the spec's 32-bit
+    # murmur3 of the value's bytes, which no Spark function computes (the
+    # string and the widened-long UDF)
+    "sinks/transforms.py": 2,
+}
+_PY_WORKER = ("applyInPandas(", "mapInPandas(", "pandas_udf", "sparkContext.broadcast(")
+
+
+def _py_worker_sites(path: str) -> int:
+    with open(path) as fh:
+        return sum(
+            1 for line in fh if any(c in line.split("#")[0] for c in _PY_WORKER)
+        )
+
+
+def test_python_worker_sites_in_sinks_are_budgeted():
+    # a DV bitmap built in applyInPandas or expanded in mapInPandas made a
+    # session's first DV delete pay the ~2.5 s Python-worker start; the
+    # codec's positions now cross in a JVM-native per-bucket form
+    # (sinks/dv.py), and a sparkContext.broadcast in a sink leaked one
+    # broadcast per call
+    sinks = os.path.join(PKG, "sinks")
+    got = {
+        f"sinks/{f}": _py_worker_sites(os.path.join(sinks, f))
+        for f in sorted(os.listdir(sinks))
+        if f.endswith(".py")
+    }
+    got = {rel: n for rel, n in got.items() if n or rel in PY_WORKER_BUDGET}
+    assert got == PY_WORKER_BUDGET, (
+        "Python-worker call sites in sinks/ differ from the budget: run the "
+        f"work in the JVM, or prove it cannot and budget it here: {got}"
+    )

@@ -24,6 +24,8 @@ from lakehouse_loader_spark.sinks import delta as D
 from lakehouse_loader_spark.sinks import dv as DV
 from lakehouse_loader_spark.sinks.delta import ConcurrentModificationError
 
+from _plans import formatted_plan, local_relation_rows, python_nodes
+
 
 def _dv_bins(path):
     return sorted(glob.glob(os.path.join(path, "deletion_vector_*.bin")))
@@ -639,22 +641,26 @@ def test_vacuum_reaps_orphaned_dv_staging_tmp(spark, tmpdir):
 
 
 def test_dv_read_expands_positions_executor_side(spark, tmpdir):
-    """The scan path must never materialize a positions frame on the
-    driver: _scan_adds ships compressed blobs and expands in mapInPandas.
-    Pin it structurally (no pandas concat of positions in the plan build)
-    and behaviorally with a multi-million-position DV."""
+    """The scan path never builds a row per deleted position on the
+    driver: _scan_adds ships one row per touched 32,768-position bucket
+    and the JVM expands it, with no Python worker.  Pinned structurally
+    (the driver's frame size, no Python node in the plan) and behaviorally
+    with a multi-million-position DV."""
     path = os.path.join(tmpdir, "t")
     n = 3_000_000
     D.write_delta(spark.range(0, n).select("id"), path)
     D.delete_from_delta(spark, path, "id % 2 = 0", mode="merge-on-read")
     _, _, adds = D._read_log(path)
-    assert (
-        sum(a["deletionVector"]["cardinality"] for a in adds.values() if a.get("deletionVector"))
-        == n // 2
+    dv_adds = {p: a for p, a in adds.items() if a.get("deletionVector")}
+    assert sum(a["deletionVector"]["cardinality"] for a in dv_adds.values()) == n // 2
+    frame, _ = D._dv_positions_frame(spark, path, dv_adds)
+    # every other row of each file is deleted: each of its buckets is touched
+    buckets = sum(
+        -(-json.loads(a["stats"])["numRecords"] // DV.BUCKET) for a in dv_adds.values()
     )
+    assert local_relation_rows(frame) == buckets
     got = D.read_delta(spark, path)
-    # plan carries the mapInPandas expansion stage
-    assert "mapinpandas" in got._jdf.queryExecution().analyzed().toString().lower()
+    assert python_nodes(formatted_plan(got)) == []
     assert got.count() == n // 2
     assert got.agg(F.min("id")).first()[0] == 1
 

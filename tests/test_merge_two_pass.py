@@ -3,14 +3,15 @@
 Both MERGEs measure the source in one aggregate (sinks/keys.py
 ``validate_merge_keys``), find the files to rewrite and the matched key
 counts in one probe query (``probe_matches``), and rewrite only those
-files.  Deletion-vector reads expand one blob per task over a
-``spark.range`` seed, with no exchange.  This file pins:
+files.  Deletion-vector reads expand the driver's per-bucket rows in the
+JVM, with no exchange and no Python worker.  This file pins:
 
 - exactness of both MERGEs against a literal upsert on random targets
   (several files, keys repeated across files, live DVs, single and
   composite keys, sources mixing matched, unmatched and tombstone keys);
 - that a Delta MERGE rewrites only files holding a matching live row;
-- DV expansion placement (one blob per partition, no Exchange);
+- DV expansion placement (one driver row per touched bucket, no Exchange,
+  no Python node);
 - the Spark job count of each DML operation.
 """
 
@@ -27,6 +28,8 @@ from pyspark.sql import functions as F
 
 from lakehouse_loader_spark.sinks import delta as D
 from lakehouse_loader_spark.sinks import iceberg as IC
+
+from _plans import formatted_plan, local_relation_rows, python_nodes
 
 SCHEMA = "k1 long, k2 long, v long, rid long"
 SRC_SCHEMA = SCHEMA + ", is_del boolean"
@@ -168,21 +171,19 @@ def _dv_table(spark, fmt, path, n):
 
 
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])
-def test_dv_expansion_runs_one_blob_per_task(spark, tmpdir, fmt):
+def test_dv_expansion_runs_in_the_jvm(spark, tmpdir, fmt):
     for n in (4, 8):
         frame, path_col, dv_files = _dv_table(spark, fmt, os.path.join(tmpdir, f"{fmt}{n}"), n)
-        assert "Exchange" not in frame._jdf.queryExecution().executedPlan().toString()
-        assert frame.rdd.getNumPartitions() == n
-        per_task = {
-            r.p: (set(r.files), r.n)
-            for r in frame.groupBy(F.spark_partition_id().alias("p"))
-            .agg(F.collect_set(path_col).alias("files"), F.count(F.lit(1)).alias("n"))
-            .collect()
+        plan = formatted_plan(frame)
+        assert "Exchange" not in plan
+        assert python_nodes(plan) == []
+        # each 40-row file's DV touches one bucket: one driver row per file
+        assert local_relation_rows(frame) == n
+        per_file = {
+            r[path_col]: r.n for r in frame.groupBy(path_col).agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        assert len(per_task) == n, n
-        assert all(len(files) == 1 for files, _ in per_task.values()), per_task
-        assert set().union(*(files for files, _ in per_task.values())) == dv_files
-        assert sum(c for _, c in per_task.values()) == n * 4  # 4 of 40 rows per file
+        assert set(per_file) == dv_files
+        assert set(per_file.values()) == {4}  # 4 of 40 rows per file
 
 
 def _jobs(spark, fn, *args, **kwargs) -> int:
